@@ -48,8 +48,10 @@ def test_duplicate_dedup(tmp_path, spark):
 
 def test_validation(tmp_path, spark):
     a = _mk(tmp_path, spark)
-    with pytest.raises(BadRequest):
-        a.append([{"ts": -5, "name": "cpu", "labels": {}, "value": 1.0}])
+    # 2**62 overflows a timestamp; it must still be a BadRequest
+    for ts in (-5, 2**62, -(2**62)):
+        with pytest.raises(BadRequest):
+            a.append([{"ts": ts, "name": "cpu", "labels": {}, "value": 1.0}])
     with pytest.raises(BadRequest):
         a.append([{"ts": T0, "name": "9bad", "labels": {}, "value": 1.0}])
     with pytest.raises(BadRequest):

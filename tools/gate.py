@@ -5,7 +5,7 @@ the gate was a convention, not a command. This makes it mechanical:
 
     python tools/gate.py            # full gate (pytest + oracle + order @ sf0.01)
     python tools/gate.py --oracle   # oracle sweep only
-    python tools/gate.py --pytest   # test suite only
+    python tools/gate.py --pytest   # test suite (+ the benchmark's self-tests) only
     python tools/gate.py --order    # order-robustness sweep only
 
 Capture output with tee (never a tail pipe) — the r11 flake's query
@@ -22,9 +22,11 @@ REPO = "/root/repo"
 
 
 def run_pytest() -> bool:
+    """The test suite plus the benchmark's own arithmetic tests."""
     print("== gate: pytest ==", flush=True)
     r = subprocess.run(
-        [sys.executable, "-m", "pytest", "tests/", "-q", "--tb=line"],
+        [sys.executable, "-m", "pytest", "tests/", "perfbench/test_perfbench.py",
+         "-q", "--tb=line"],
         cwd=REPO,
     )
     return r.returncode == 0

@@ -30,6 +30,8 @@ from v3io_tsdb_spark.sql.filters import translate_filter
 from v3io_tsdb_spark.timeutils import str2unix_ms
 
 DAY_MS = 86_400_000
+# the per-series high-water-mark sidecar, read with this declared schema
+_MAXTS_SCHEMA = "series_id long, max_ts long"
 
 
 def _date_shift(day: str, days: int) -> str:
@@ -228,19 +230,25 @@ class TSDBAdapter:
         """Batch append samples; maintains the rollup log.
 
         ref: pkg/appender/appender.go:194-287 + SURVEY §3.3 — the whole
-        async pipeline becomes normalize → validate → write + rollup
-        append.
+        async pipeline becomes normalize → observe → dedup, materialized
+        by ONE checkpoint job that also fills the observation →
+        validate + kinds check + catalog delta from the observation →
+        write + rollup append.
         """
-        df = app.normalize_samples(self.spark, data)
-        if validate:
-            app.validate_samples(df)
+        df, seen = app.observe_batch(app.normalize_samples(self.spark, data))
+        kept = seen
         if not self.config.override_old:
-            df = self._monotonic_filter(df)
-        out = app.prepare_for_write(df, self.config)
-        # Materialize the normalize/dedup pipeline ONCE — the catalog
-        # aggregate and rollup builds below reuse the checkpointed batch
-        # instead of recomputing the whole write plan per consumer.
-        out = out.localCheckpoint(eager=True)
+            # validation counts every row; the kinds and catalog deltas
+            # only the rows the watermark filter keeps
+            df, kept = app.observe_batch(self._monotonic_filter(df))
+        # Materialize the normalize/dedup pipeline ONCE: the same job
+        # fills the observations, and the write, watermark fold and
+        # rollup builds below reuse the checkpointed batch instead of
+        # recomputing the whole write plan per consumer.
+        out = app.prepare_for_write(df, self.config).localCheckpoint(eager=True)
+        if validate:
+            app.validate_samples(seen.get)
+        facts = kept.get
         # Pre-catalog table? (data written before the catalog existed)
         # Seed from ALL existing samples, not just this batch, or the
         # catalog would silently hide previously ingested metrics.
@@ -248,7 +256,7 @@ class TSDBAdapter:
             self.samples_path
         )
         if validate:
-            self._check_series_kinds(out)
+            self._check_series_kinds(app.batch_kinds(facts))
         if not self.config.override_old:
             # stamp the write-ahead token BEFORE samples become durable:
             # if we crash after the write but before the watermark fold,
@@ -263,7 +271,7 @@ class TSDBAdapter:
         if needs_seed:
             NamesCatalog.rebuild(self.path, self._samples()).save()
         else:
-            NamesCatalog.load(self.path).merge_batch(out).save()
+            NamesCatalog.load(self.path).merge(app.batch_names(facts)).save()
         if update_rollup:
             # reuse the checkpointed batch (no plan recompute). The
             # pre-write repartition on rdt collapses the agg shuffle's
@@ -555,7 +563,7 @@ class TSDBAdapter:
                 self._rebuild_maxts(self._samples())
             else:
                 return df
-        wm = self.spark.read.parquet(self.maxts_path).withColumnRenamed(
+        wm = self.spark.read.schema(_MAXTS_SCHEMA).parquet(self.maxts_path).withColumnRenamed(
             "max_ts", "_wm"
         )
         return (
@@ -569,7 +577,7 @@ class TSDBAdapter:
         (crash-safe staged swap, like the kinds rebuild)."""
         new = batch.groupBy("series_id").agg(F.max("ts").alias("max_ts"))
         if os.path.exists(self.maxts_path):
-            old = self.spark.read.parquet(self.maxts_path)
+            old = self.spark.read.schema(_MAXTS_SCHEMA).parquet(self.maxts_path)
             new = (
                 old.unionByName(new)
                 .groupBy("series_id")
@@ -597,7 +605,7 @@ class TSDBAdapter:
         if pending is not None:
             _write_token(self._maxts_synced, pending)
 
-    def _check_series_kinds(self, batch) -> None:
+    def _check_series_kinds(self, kinds: list) -> None:
         """Cross-APPEND type-conflict guard: a series that was ever
         ingested as one value kind rejects samples of another kind in
         every later batch — the durable analog of the reference's
@@ -606,30 +614,32 @@ class TSDBAdapter:
         goldens: pkg/tsdb/v3iotsdb_integration_test.go:1057-1122
         TestIngestDataFloatThenString / StringThenFloat). The state is
         a (series_id, kind) parquet sidecar — one row per series ever
-        seen, joined (broadcast-sized vs any batch) before the write;
-        new series append to it. Rebuilt from surviving samples after
-        deletes, so deleting a series' history frees its name+labels
-        for re-typing."""
-        batch_kinds = app.series_kinds(batch)
-        if os.path.exists(self.kinds_path):
-            known = self.spark.read.parquet(self.kinds_path)
-            conflict = (
-                batch_kinds.alias("b")
-                .join(known.alias("k"), "series_id")
-                .where(F.col("b.kind") != F.col("k.kind"))
-                .select(F.col("b.kind").alias("new"), F.col("k.kind").alias("old"))
-                .limit(1)
+        seen. The batch's observed ``kinds`` join it once: the matches
+        give the conflicts, the rest are the new series, appended only
+        when there are any. Rebuilt from surviving samples after deletes,
+        so deleting a series' history frees its name+labels for
+        re-typing."""
+        new = kinds
+        if kinds and os.path.exists(self.kinds_path):
+            known = self.spark.read.schema(app.KINDS_SCHEMA).parquet(self.kinds_path)
+            # broadcast the batch side: the sidecar holds every series
+            # ever seen and only streams through the join
+            matched = (
+                F.broadcast(app.kinds_frame(self.spark, kinds))
+                .join(known.withColumnRenamed("kind", "old"), "series_id")
                 .collect()
             )
-            if conflict:
-                raise BadRequest(
-                    f"Cannot append {conflict[0]['new']} type metric to "
-                    f"{conflict[0]['old']} type metric."
-                )
-            new = batch_kinds.join(known, "series_id", "left_anti")
-        else:
-            new = batch_kinds
-        new.coalesce(1).write.mode("append").parquet(self.kinds_path)
+            for r in matched:
+                if r["kind"] != r["old"]:
+                    raise BadRequest(
+                        f"Cannot append {r['kind']} type metric to {r['old']} type metric."
+                    )
+            known_ids = {r["series_id"] for r in matched}
+            new = [k for k in kinds if k[0] not in known_ids]
+        if new:
+            app.kinds_frame(self.spark, new).coalesce(1).write.mode("append").parquet(
+                self.kinds_path
+            )
 
     def _refresh_catalog(self) -> None:
         """Names may vanish when their last samples go — recompute the

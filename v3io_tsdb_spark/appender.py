@@ -3,22 +3,29 @@
 The reference's Add/AddFast + async ingest pipeline (per-metric pending
 lists, elastic queues, UpdateItem expressions; ref:
 pkg/appender/appender.go:194-287, pkg/appender/ingest.go:38-146,
-pkg/appender/store.go:292-484) collapses on Spark into: normalize →
-validate → dedup → one partitioned, sorted Parquet append + one rollup
-partial append. The state machine, LRU cache, and expression builder
-have no Spark counterpart because the write path is a bulk columnar
-append rather than a per-item read-modify-write.
+pkg/appender/store.go:292-484) collapses on Spark into: normalize (row
+dicts become an Arrow table, i.e. a JVM ``LocalRelation``) → observe →
+dedup + layout, materialized ONCE by the append's eager checkpoint.
+That one job also fills the batch's :func:`observe_batch` facts —
+validation counters, per-series kind bits, per-name label keys — so
+validation, the series-kind guard and the catalog delta run no Spark
+job of their own. Then one partitioned, sorted Parquet append + one
+rollup partial append. The state machine, LRU cache, and expression
+builder have no Spark counterpart because the write path is a bulk
+columnar append rather than a per-item read-modify-write.
+
+Row-dict input needs ``pyarrow``; DataFrame input does not.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest
-from v3io_tsdb_spark.labels import series_id_col
+from v3io_tsdb_spark.labels import series_id_sql
 from v3io_tsdb_spark.timeutils import MAX_TIME_MS, MIN_TIME_MS
 
 # typed variant columns, one per reserved on-disk kind
@@ -31,6 +38,27 @@ VARIANT_COLS = (
     ("value_int", "long"),
     ("value_blob", "binary"),
 )
+
+# per-row value kind: the first non-null value column (a valid row has
+# exactly one), and the bit mask of all its non-null value columns
+_VALUE_KINDS = (("value", "float"),) + tuple((c, c.removeprefix("value_")) for c, _ in VARIANT_COLS)
+# SQL text, not Column calls: the observation is built on every append,
+# and one parsed expression costs a fraction of the Py4J round trips
+_KIND_SQL = (
+    "CASE "
+    + " ".join(f"WHEN {c} IS NOT NULL THEN '{k}'" for c, k in _VALUE_KINDS)
+    + " END"
+)
+_MASK_SQL = " | ".join(f"IF({c} IS NULL, 0, {1 << i})" for i, (c, _) in enumerate(_VALUE_KINDS))
+_NAME_RE = "^[a-zA-Z_:][a-zA-Z0-9_:]*$"
+
+# the series-kind sidecar, read with this declared schema
+KINDS_SCHEMA = T.StructType(
+    [T.StructField("series_id", T.LongType()), T.StructField("kind", T.StringType())]
+)
+
+# largest |ts| in ms whose microseconds fit a long (timestamp_millis)
+_TS_MS_LIMIT = (2**63 - 1) // 1000
 
 _INPUT_SCHEMA = T.StructType(
     [
@@ -49,47 +77,99 @@ _INPUT_SCHEMA = T.StructType(
 def normalize_samples(spark: SparkSession, data) -> DataFrame:
     """Accept a DataFrame or rows of dicts ``{ts, name, labels, value}``
     and normalize to the samples schema (ts → int64 ms, series_id
-    computed JVM-side via xxhash64)."""
+    computed JVM-side via xxhash64). Row dicts travel as one Arrow
+    table, so the frame plans as a JVM ``LocalRelation``: no Python
+    worker runs when the batch is read."""
     if isinstance(data, DataFrame):
         df = data
     else:
-        rows = []
-        for r in data:
-            rows.append(
-                (
-                    int(r["ts"]),
-                    r["name"],
-                    dict(r.get("labels") or {}),
-                    None if r.get("value") is None else float(r["value"]),
-                    r.get("value_str"),
-                    r.get("value_bool"),
-                    None if r.get("value_int") is None else int(r["value_int"]),
-                    r.get("value_blob"),
-                )
-            )
-        df = spark.createDataFrame(rows, _INPUT_SCHEMA)
+        df = _local_frame(spark, _row_columns(data), _INPUT_SCHEMA)
 
-    if dict(df.dtypes).get("ts", "").startswith("timestamp"):
-        df = df.withColumn("ts", F.unix_millis(F.col("ts")))
-    else:
-        df = df.withColumn("ts", F.col("ts").cast("long"))
-    if "labels" not in df.columns:
-        df = df.withColumn("labels", F.create_map().cast("map<string,string>"))
-    if "value" not in df.columns:
-        df = df.withColumn("value", F.lit(None).cast("double"))
-    else:
-        df = df.withColumn("value", F.col("value").cast("double"))
-    for vc, vt in VARIANT_COLS:
-        if vc not in df.columns:
-            df = df.withColumn(vc, F.lit(None).cast(vt))
-    df = df.withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
-    return df.select(
-        "ts", "name", "labels", "series_id", "value", *[c for c, _ in VARIANT_COLS]
+    # SQL text: building these as Column calls costs a Py4J round trip
+    # per expression node, ~50 ms on every append
+    dtypes = dict(df.dtypes)
+    ts = "unix_millis(ts)" if dtypes.get("ts", "").startswith("timestamp") else "CAST(ts AS BIGINT)"
+    labels = "labels" if "labels" in dtypes else "CAST(map() AS MAP<STRING, STRING>)"
+    value = "CAST(value AS DOUBLE)" if "value" in dtypes else "CAST(NULL AS DOUBLE)"
+    variants = [vc if vc in dtypes else f"CAST(NULL AS {vt}) AS {vc}" for vc, vt in VARIANT_COLS]
+    df = df.selectExpr(f"{ts} AS ts", "name", f"{labels} AS labels", f"{value} AS value", *variants)
+    return df.selectExpr(
+        "ts",
+        "name",
+        "labels",
+        f"{series_id_sql('name', 'labels')} AS series_id",
+        "value",
+        *[vc for vc, _ in VARIANT_COLS],
     )
 
 
-def validate_samples(df: DataFrame) -> None:
-    """Engine-level ingest validation, one aggregate job per batch.
+def _local_frame(spark: SparkSession, cols: dict, schema: T.StructType) -> DataFrame:
+    """Columns of Python values → a JVM ``LocalRelation``, via Arrow."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(pa.table(cols, schema=to_arrow_schema(schema)), schema)
+
+
+def _row_columns(data) -> dict:
+    """Row dicts → one list per input-schema column."""
+    cols = {f.name: [] for f in _INPUT_SCHEMA.fields}
+    for r in data:
+        cols["ts"].append(int(r["ts"]))
+        cols["name"].append(r["name"])
+        cols["labels"].append(dict(r.get("labels") or {}))
+        cols["value"].append(None if r.get("value") is None else float(r["value"]))
+        cols["value_str"].append(r.get("value_str"))
+        cols["value_bool"].append(r.get("value_bool"))
+        cols["value_int"].append(None if r.get("value_int") is None else int(r["value_int"]))
+        cols["value_blob"].append(r.get("value_blob"))
+    return cols
+
+
+def series_kinds(df: DataFrame) -> DataFrame:
+    """Distinct (series_id, kind) pairs of a frame — tiny (one row per
+    series), the content of the series-kind sidecar."""
+    return (
+        df.selectExpr("series_id", f"{_KIND_SQL} AS kind")
+        .where(F.col("kind").isNotNull())
+        .distinct()
+    )
+
+
+def kinds_frame(spark: SparkSession, kinds: list) -> DataFrame:
+    """``(series_id, kind)`` pairs as a JVM ``LocalRelation``."""
+    cols = {"series_id": [k[0] for k in kinds], "kind": [k[1] for k in kinds]}
+    return _local_frame(spark, cols, KINDS_SCHEMA)
+
+
+def observe_batch(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the ingest facts to ``df`` as an observation. The job
+    that first runs the plan (the append's eager checkpoint) fills it;
+    reading it runs no job. It gathers:
+
+    - ``bad_ts`` / ``bad_name``: samples outside [1970, 2400]
+      (ref: pkg/appender/appender.go:289-294) and with an invalid
+      metric name (ref: pkg/appender/appender.go:213-215);
+    - ``series``: the distinct ``(series_id, mask, kind)`` of the rows,
+      ``mask`` having one bit per non-null value column — O(series),
+      the input of the mixed-kind check and of the kinds guard;
+    - ``names``: the distinct ``(name, label keys)`` — the catalog
+      delta (ref: pkg/appender/store.go:190-203).
+    """
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        F.expr(f"sum(CAST(NOT ts BETWEEN {MIN_TIME_MS} AND {MAX_TIME_MS} AS BIGINT)) AS bad_ts"),
+        F.expr(f"sum(CAST(NOT rlike(name, '{_NAME_RE}') AS BIGINT)) AS bad_name"),
+        F.expr(f"collect_set(struct(series_id, {_MASK_SQL} AS mask, {_KIND_SQL} AS kind)) AS series"),
+        F.expr("collect_set(struct(name, array_sort(map_keys(labels)) AS keys)) AS names"),
+    )
+    return observed, obs
+
+
+def validate_samples(facts: dict) -> None:
+    """Engine-level ingest validation over a batch's observed facts
+    (:func:`observe_batch`); runs no Spark job.
 
     - timestamps must be within [1970, 2400]
       (ref: pkg/appender/appender.go:289-294)
@@ -98,44 +178,28 @@ def validate_samples(df: DataFrame) -> None:
       variant type (ref: pkg/appender/appender.go:244-254 float-vs-
       variant; kinds per pkg/chunkenc/vartype.go:32-50)
     """
-    kind_cols = ["value"] + [c for c, _ in VARIANT_COLS if c in df.columns]
-    # ONE job for all three checks: per-series partial aggregates
-    # (map-side combinable) then a tiny roll-up over series — the
-    # two-job version scanned the un-materialized batch twice
-    per_series = df.groupBy("series_id").agg(
-        F.sum((~F.col("ts").between(MIN_TIME_MS, MAX_TIME_MS)).cast("int")).alias("bad_ts"),
-        F.sum((~F.col("name").rlike("^[a-zA-Z_:][a-zA-Z0-9_:]*$")).cast("int")).alias("bad_name"),
-        *[F.max(F.col(c).isNotNull().cast("int")).alias(f"has_{c}") for c in kind_cols],
-    )
-    bad = per_series.select(
-        F.sum("bad_ts").alias("bad_ts"),
-        F.sum("bad_name").alias("bad_name"),
-        F.sum((sum(F.col(f"has_{c}") for c in kind_cols) > 1).cast("int")).alias("mixed"),
-    ).first()
-    if bad and bad["bad_ts"]:
-        raise BadRequest(f"{bad['bad_ts']} samples outside valid time range (1970..2400)")
-    if bad and bad["bad_name"]:
-        raise BadRequest(f"{bad['bad_name']} samples with invalid metric name")
-    if bad and bad["mixed"]:
+    if facts["bad_ts"]:
+        raise BadRequest(f"{facts['bad_ts']} samples outside valid time range (1970..2400)")
+    if facts["bad_name"]:
+        raise BadRequest(f"{facts['bad_name']} samples with invalid metric name")
+    masks: dict = {}
+    for r in facts["series"]:
+        masks[r["series_id"]] = masks.get(r["series_id"], 0) | r["mask"]
+    if any(m & (m - 1) for m in masks.values()):
         raise BadRequest("series cannot mix value kinds (float/str/bool/int/blob)")
 
 
-def series_kind_col():
-    """Per-row value kind (exactly one value column is non-null)."""
-    expr = F.when(F.col("value").isNotNull(), F.lit("float"))
-    for vc, _ in VARIANT_COLS:
-        expr = expr.when(F.col(vc).isNotNull(), F.lit(vc.removeprefix("value_")))
-    return expr
+def batch_kinds(facts: dict) -> list:
+    """The ``(series_id, kind)`` pairs of a batch's observed facts."""
+    return sorted({(r["series_id"], r["kind"]) for r in facts["series"] if r["kind"]})
 
 
-def series_kinds(df: DataFrame) -> DataFrame:
-    """Distinct (series_id, kind) pairs of a batch — tiny (one row per
-    series), the input to the cross-append type-conflict check."""
-    return (
-        df.select("series_id", series_kind_col().alias("kind"))
-        .where(F.col("kind").isNotNull())
-        .distinct()
-    )
+def batch_names(facts: dict) -> dict:
+    """``{name: label keys}`` of a batch's observed facts."""
+    out: dict = {}
+    for r in facts["names"]:
+        out.setdefault(r["name"], set()).update(r["keys"])
+    return out
 
 
 def prepare_for_write(df: DataFrame, config: TSDBConfig, num_buckets: int | None = None) -> DataFrame:
@@ -152,7 +216,14 @@ def prepare_for_write(df: DataFrame, config: TSDBConfig, num_buckets: int | None
     pkg/partmgr/partmgr.go:459-487).
     """
     df = df.dropDuplicates(["series_id", "ts"])
-    df = df.withColumn("dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd"))
+    # no dt for a ts whose microseconds overflow a long: the ANSI
+    # overflow would fail the checkpoint job before validation reads
+    # its observed counters (such rows are out of range, so a validated
+    # append rejects them)
+    fits = F.col("ts").between(-_TS_MS_LIMIT, _TS_MS_LIMIT)
+    df = df.withColumn(
+        "dt", F.when(fits, F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd"))
+    )
     n = num_buckets or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     df = df.repartition(n, F.col("dt"), F.pmod(F.col("series_id"), F.lit(n)))
     return df.sortWithinPartitions("name", "series_id", "ts")

@@ -12,8 +12,9 @@ name to the union of its label keys:
 Lookups that are metadata in the reference — "what metrics exist",
 "does label X exist" (group-by validation) — stay metadata here: no
 Spark job at query time, at any corpus size. The catalog is updated
-from each appended batch (one small aggregate over data already in
-flight) and rebuilt from the surviving samples after deletes/sweeps.
+from each appended batch's observed ``(name, label keys)`` (filled by
+the append's checkpoint job, so no job of its own) and rebuilt from the
+surviving samples after deletes/sweeps.
 """
 
 from __future__ import annotations
@@ -58,11 +59,16 @@ class NamesCatalog:
 
     # -- maintenance -------------------------------------------------------
 
-    def merge_batch(self, batch: DataFrame) -> "NamesCatalog":
-        """Fold a batch's (name → label keys) into the catalog. One
-        small aggregate over the in-flight batch — the ingest-side
-        bookkeeping the reference does per name handle
+    def merge(self, names: dict) -> "NamesCatalog":
+        """Fold ``{name: label keys}`` into the catalog — the
+        ingest-side bookkeeping the reference does per name handle
         (ref: pkg/appender/store.go:190-203)."""
+        for name, keys in names.items():
+            self.names.setdefault(name, set()).update(keys)
+        return self
+
+    def merge_batch(self, batch: DataFrame) -> "NamesCatalog":
+        """Fold a frame's (name → label keys): one small aggregate."""
         rows = (
             batch.select(
                 "name", F.explode_outer(F.map_keys(F.col("labels"))).alias("k")
@@ -71,9 +77,7 @@ class NamesCatalog:
             .agg(F.collect_set("k").alias("ks"))
             .collect()
         )
-        for r in rows:
-            self.names.setdefault(r["name"], set()).update(r["ks"])
-        return self
+        return self.merge({r["name"]: r["ks"] for r in rows})
 
     @classmethod
     def rebuild(cls, base_path: str, samples: DataFrame) -> "NamesCatalog":

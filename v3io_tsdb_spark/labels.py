@@ -89,3 +89,9 @@ def series_id_col(name_col: Column, labels_col: Column) -> Column:
     Spark's built-in xxhash64 as the hash.
     """
     return F.xxhash64(name_col, labels_string_col(labels_col))
+
+
+def series_id_sql(name_col: str, labels_col: str) -> str:
+    """SQL-string twin of :func:`series_id_col`, the same expression
+    tree parsed once (see :func:`labels_string_sql`)."""
+    return "xxhash64(`%s`, %s)" % (name_col, labels_string_sql(labels_col))
