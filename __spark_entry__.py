@@ -1727,7 +1727,7 @@ def q_tsdb_groupby_two_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("tier"), (uid % 3).cast("string"),
             F.lit("parity"), (uid % 2).cast("string"),
         ),
-    ).withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
+    ).withColumn("series_id", series_id_col())
     q = Querier(spark, samples)
     res = q.select(SelectParams(functions="sum,count", step="1d",
                                 group_by="tier,parity", from_time=F0, to_time=T1))
@@ -2498,7 +2498,7 @@ def q_tsdb_sql_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     # golden's shape); the wide frame pivots one cell per metric-func
     s = s.withColumn(
         "labels", F.create_map().cast("map<string,string>")
-    ).withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
+    ).withColumn("series_id", series_id_col())
     q = Querier(spark, s)
     wide = run_sql(q, "select max(*), min(view)",
                    from_time=F0, to_time=T1, step="1d")

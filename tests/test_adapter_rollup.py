@@ -5,6 +5,8 @@ bucket-aligned queries (ref: server-aggregates suite,
 pqueriertest/server_aggregates_integration_test.go).
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from conftest import MIN, T0, rows_to_dict
@@ -52,6 +54,11 @@ def test_validation(tmp_path, spark):
     for ts in (-5, 2**62, -(2**62)):
         with pytest.raises(BadRequest):
             a.append([{"ts": ts, "name": "cpu", "labels": {}, "value": 1.0}])
+    # unwritable even unvalidated: rejected before anything is written
+    for ts in (2**62, -(2**62)):
+        with pytest.raises(BadRequest):
+            a.append([{"ts": ts, "name": "cpu", "labels": {}, "value": 1.0}], validate=False)
+    assert not os.path.exists(a.samples_path)
     with pytest.raises(BadRequest):
         a.append([{"ts": T0, "name": "9bad", "labels": {}, "value": 1.0}])
     with pytest.raises(BadRequest):

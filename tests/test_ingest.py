@@ -10,7 +10,9 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
+from v3io_tsdb_spark import appender
 from v3io_tsdb_spark.adapter import TSDBAdapter
 from v3io_tsdb_spark.appender import normalize_samples
 from v3io_tsdb_spark.catalog import NamesCatalog
@@ -85,6 +87,21 @@ def test_validate_false_updates_catalog(spark, tmp_path):
     assert NamesCatalog.load(ad.path).names == {"cpu": {"host", "os"}, "mem": set()}
 
 
+def test_null_labels_map_frame(spark, tmp_path):
+    """A DataFrame row whose labels map is null (e.g. a JSON source
+    missing the field) is the series with no labels, in the catalog
+    and the rollups alike."""
+    ad = _mk(spark, tmp_path, aggregation_granularity="1h")
+    df = spark.createDataFrame(
+        [(T0, "cpu", None, 1.0), (T0 + MIN, "cpu", {"host": "h1"}, 2.0)],
+        "ts long, name string, labels map<string,string>, value double",
+    )
+    ad.append(df)
+    assert NamesCatalog.load(ad.path).names == {"cpu": {"host"}}
+    rollup = spark.read.parquet(ad.rollup_path)
+    assert sorted(r["count"] for r in rollup.select("count").collect()) == [1, 1]
+
+
 def test_two_kinds_at_one_sample_rejected(spark, tmp_path):
     """The mixed-kind check sees the batch before the dedup, so two
     kinds at the same (series, ts) are rejected, not deduplicated."""
@@ -127,3 +144,55 @@ def test_known_series_leave_kinds_sidecar_alone(spark, tmp_path):
     assert len(_parquet_files(ad.kinds_path)) == len(files) + 1
     kinds = spark.read.parquet(ad.kinds_path).groupBy("kind").count().collect()
     assert {r["kind"]: r["count"] for r in kinds} == {"float": 2, "int": 1}
+
+
+def _kinds(spark, ad):
+    rows = spark.read.parquet(ad.kinds_path).collect()
+    return sorted((r["series_id"], r["kind"]) for r in rows)
+
+
+def test_many_series_kinds_guard_is_distributed(spark, tmp_path, monkeypatch):
+    """Past DRIVER_SERIES_LIMIT the observation lists no series and the
+    kinds guard joins the checkpointed batch instead, with the same
+    outcomes: conflicts rejected, new series recorded once, known series
+    leaving the sidecar alone, in-batch mixing still rejected."""
+    monkeypatch.setattr(appender, "DRIVER_SERIES_LIMIT", 3)
+    ad = _mk(spark, tmp_path)
+    ad.append(_scrape(0, hosts=5))
+    kinds = _kinds(spark, ad)
+    assert [k for _, k in kinds] == ["float"] * 5
+    files = _parquet_files(ad.kinds_path)
+    ad.append(_scrape(1, hosts=5))
+    assert _parquet_files(ad.kinds_path) == files
+    ad.append(_scrape(2, hosts=6))
+    assert len(_kinds(spark, ad)) == 6
+    clash = [
+        dict(r, value=None, value_str="x") if r["labels"]["host"] == "h0" else r
+        for r in _scrape(3, hosts=6)
+    ]
+    with pytest.raises(BadRequest, match="Cannot append str type metric to float"):
+        ad.append(clash)
+    fresh = [dict(r, name="m9") for r in _scrape(0, hosts=5)]
+    fresh[0] = dict(fresh[0], value=None, value_str="x")
+    with pytest.raises(BadRequest, match="mix value kinds"):
+        ad.append(fresh)
+    assert len(_kinds(spark, ad)) == 6
+
+
+def test_series_id_sql_matches_column_form(spark):
+    """The on-disk series id is xxhash64(name, sorted k=v string):
+    the SQL definition agrees with the Column-built canonical labels
+    string on key order, empty maps and null maps."""
+    from v3io_tsdb_spark.labels import labels_string_col, series_id_col
+
+    df = spark.createDataFrame(
+        [("m", {"b": "2", "a": "1"}), ("m", {"a": "1", "b": "2"}), ("m", {}), ("m", None)],
+        "name string, labels map<string,string>",
+    )
+    rows = df.select(
+        series_id_col().alias("sql"),
+        F.xxhash64("name", labels_string_col(F.col("labels"))).alias("col"),
+    ).collect()
+    assert all(r["sql"] == r["col"] for r in rows)
+    ids = [r["sql"] for r in rows]
+    assert ids[0] == ids[1] and ids[2] == ids[3] and ids[0] != ids[2]

@@ -34,6 +34,13 @@ DAY_MS = 86_400_000
 _MAXTS_SCHEMA = "series_id long, max_ts long"
 
 
+def _raise_kind_conflict(conflicts: list) -> None:
+    """Reject a batch given its (kind, old) conflicts with the sidecar."""
+    if conflicts:
+        r = conflicts[0]
+        raise BadRequest(f"Cannot append {r['kind']} type metric to {r['old']} type metric.")
+
+
 def _date_shift(day: str, days: int) -> str:
     from datetime import datetime, timedelta
 
@@ -246,8 +253,10 @@ class TSDBAdapter:
         # rollup builds below reuse the checkpointed batch instead of
         # recomputing the whole write plan per consumer.
         out = app.prepare_for_write(df, self.config).localCheckpoint(eager=True)
+        seen_facts = seen.get
         if validate:
-            app.validate_samples(seen.get)
+            app.validate_samples(seen_facts)
+        app.check_writable(seen_facts)
         facts = kept.get
         # Pre-catalog table? (data written before the catalog existed)
         # Seed from ALL existing samples, not just this batch, or the
@@ -256,7 +265,7 @@ class TSDBAdapter:
             self.samples_path
         )
         if validate:
-            self._check_series_kinds(app.batch_kinds(facts))
+            self._check_series_kinds(app.batch_kinds(facts), out)
         if not self.config.override_old:
             # stamp the write-ahead token BEFORE samples become durable:
             # if we crash after the write but before the watermark fold,
@@ -605,7 +614,7 @@ class TSDBAdapter:
         if pending is not None:
             _write_token(self._maxts_synced, pending)
 
-    def _check_series_kinds(self, kinds: list) -> None:
+    def _check_series_kinds(self, kinds: list | None, batch) -> None:
         """Cross-APPEND type-conflict guard: a series that was ever
         ingested as one value kind rejects samples of another kind in
         every later batch — the durable analog of the reference's
@@ -616,30 +625,43 @@ class TSDBAdapter:
         a (series_id, kind) parquet sidecar — one row per series ever
         seen. The batch's observed ``kinds`` join it once: the matches
         give the conflicts, the rest are the new series, appended only
-        when there are any. Rebuilt from surviving samples after deletes,
-        so deleting a series' history frees its name+labels for
-        re-typing."""
-        new = kinds
-        if kinds and os.path.exists(self.kinds_path):
+        when there are any. A batch with more series than the
+        observation lists (``kinds`` None) runs the same check as
+        distributed joins over the checkpointed ``batch``, so its
+        series never pass through the driver. Rebuilt from surviving
+        samples after deletes, so deleting a series' history frees its
+        name+labels for re-typing."""
+        known = None
+        if os.path.exists(self.kinds_path):
             known = self.spark.read.schema(app.KINDS_SCHEMA).parquet(self.kinds_path)
-            # broadcast the batch side: the sidecar holds every series
-            # ever seen and only streams through the join
-            matched = (
-                F.broadcast(app.kinds_frame(self.spark, kinds))
-                .join(known.withColumnRenamed("kind", "old"), "series_id")
-                .collect()
-            )
-            for r in matched:
-                if r["kind"] != r["old"]:
-                    raise BadRequest(
-                        f"Cannot append {r['kind']} type metric to {r['old']} type metric."
-                    )
-            known_ids = {r["series_id"] for r in matched}
-            new = [k for k in kinds if k[0] not in known_ids]
-        if new:
-            app.kinds_frame(self.spark, new).coalesce(1).write.mode("append").parquet(
-                self.kinds_path
-            )
+        if kinds is None:
+            new = app.series_kinds(batch)
+            if known is not None:
+                _raise_kind_conflict(
+                    new.join(known.withColumnRenamed("kind", "old"), "series_id")
+                    .where(F.col("kind") != F.col("old"))
+                    .limit(1)
+                    .collect()
+                )
+                new = new.join(known, "series_id", "left_anti")
+                if new.isEmpty():
+                    return
+        else:
+            if kinds and known is not None:
+                # broadcast the batch side: the sidecar holds every
+                # series ever seen and only streams through the join
+                matched = (
+                    F.broadcast(app.kinds_frame(self.spark, kinds))
+                    .join(known.withColumnRenamed("kind", "old"), "series_id")
+                    .collect()
+                )
+                _raise_kind_conflict([r for r in matched if r["kind"] != r["old"]])
+                known_ids = {r["series_id"] for r in matched}
+                kinds = [k for k in kinds if k[0] not in known_ids]
+            if not kinds:
+                return
+            new = app.kinds_frame(self.spark, kinds)
+        new.coalesce(1).write.mode("append").parquet(self.kinds_path)
 
     def _refresh_catalog(self) -> None:
         """Names may vanish when their last samples go — recompute the

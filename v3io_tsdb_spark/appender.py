@@ -7,12 +7,14 @@ pkg/appender/store.go:292-484) collapses on Spark into: normalize (row
 dicts become an Arrow table, i.e. a JVM ``LocalRelation``) → observe →
 dedup + layout, materialized ONCE by the append's eager checkpoint.
 That one job also fills the batch's :func:`observe_batch` facts —
-validation counters, per-series kind bits, per-name label keys — so
+validation counters, per-series kinds, per-name label keys — so
 validation, the series-kind guard and the catalog delta run no Spark
-job of their own. Then one partitioned, sorted Parquet append + one
-rollup partial append. The state machine, LRU cache, and expression
-builder have no Spark counterpart because the write path is a bulk
-columnar append rather than a per-item read-modify-write.
+job of their own (a batch of more than :data:`DRIVER_SERIES_LIMIT`
+series runs the kinds guard as distributed joins instead). Then one
+partitioned, sorted Parquet append + one rollup partial append. The
+state machine, LRU cache, and expression builder have no Spark
+counterpart because the write path is a bulk columnar append rather
+than a per-item read-modify-write.
 
 Row-dict input needs ``pyarrow``; DataFrame input does not.
 """
@@ -57,8 +59,13 @@ KINDS_SCHEMA = T.StructType(
     [T.StructField("series_id", T.LongType()), T.StructField("kind", T.StringType())]
 )
 
-# largest |ts| in ms whose microseconds fit a long (timestamp_millis)
-_TS_MS_LIMIT = (2**63 - 1) // 1000
+# largest |ts| in ms whose microseconds fit a long (timestamp_millis),
+# less a year of headroom for the floor of a rollup bucket
+_TS_MS_LIMIT = (2**63 - 1) // 1000 - 366 * 86_400_000
+
+# the most distinct series whose kinds an append brings to the driver;
+# a larger batch runs the kinds guard as distributed joins
+DRIVER_SERIES_LIMIT = 10_000
 
 _INPUT_SCHEMA = T.StructType(
     [
@@ -97,7 +104,7 @@ def normalize_samples(spark: SparkSession, data) -> DataFrame:
         "ts",
         "name",
         "labels",
-        f"{series_id_sql('name', 'labels')} AS series_id",
+        f"{series_id_sql()} AS series_id",
         "value",
         *[vc for vc, _ in VARIANT_COLS],
     )
@@ -150,19 +157,43 @@ def observe_batch(df: DataFrame) -> tuple[DataFrame, Observation]:
     - ``bad_ts`` / ``bad_name``: samples outside [1970, 2400]
       (ref: pkg/appender/appender.go:289-294) and with an invalid
       metric name (ref: pkg/appender/appender.go:213-215);
-    - ``series``: the distinct ``(series_id, mask, kind)`` of the rows,
-      ``mask`` having one bit per non-null value column — O(series),
-      the input of the mixed-kind check and of the kinds guard;
+    - ``unwritable_ts``: samples whose ``ts`` no layout column can hold
+      (see :data:`_TS_MS_LIMIT`);
+    - ``multi_valued``, ``n_series``, ``n_pairs``: whether a row sets
+      more than one value column, and the distinct series and
+      ``(series, kind)`` pairs among rows with a value — a series of
+      two kinds makes ``n_pairs > n_series``;
+    - ``series``: per kind, the ids of its series — the input of the
+      kinds guard — cut after :data:`DRIVER_SERIES_LIMIT` ids. The sets
+      are merged in the driver JVM; Python gets at most that many ids
+      per kind;
     - ``names``: the distinct ``(name, label keys)`` — the catalog
       delta (ref: pkg/appender/store.go:190-203).
     """
+    # long sets, not sets of structs: an observation's aggregates run
+    # interpreted, and a struct set costs several times a long set
+    has_value = f"({_MASK_SQL}) != 0"
+    listed = ", ".join(
+        f"'{k}', slice(collect_set(IF({c} IS NULL, NULL, series_id)), 1, {DRIVER_SERIES_LIMIT + 1})"
+        for c, k in _VALUE_KINDS
+    )
     obs = Observation()
     observed = df.observe(
         obs,
         F.expr(f"sum(CAST(NOT ts BETWEEN {MIN_TIME_MS} AND {MAX_TIME_MS} AS BIGINT)) AS bad_ts"),
         F.expr(f"sum(CAST(NOT rlike(name, '{_NAME_RE}') AS BIGINT)) AS bad_name"),
-        F.expr(f"collect_set(struct(series_id, {_MASK_SQL} AS mask, {_KIND_SQL} AS kind)) AS series"),
-        F.expr("collect_set(struct(name, array_sort(map_keys(labels)) AS keys)) AS names"),
+        F.expr(f"sum(CAST(NOT ts BETWEEN -{_TS_MS_LIMIT} AND {_TS_MS_LIMIT} AS BIGINT)) AS unwritable_ts"),
+        F.expr(f"max(bit_count({_MASK_SQL})) > 1 AS multi_valued"),
+        F.expr(f"size(collect_set(IF({has_value}, series_id, NULL))) AS n_series"),
+        # a (series, kind) pair is hashed like the series id itself
+        F.expr(
+            f"size(collect_set(IF({has_value}, xxhash64(series_id, {_MASK_SQL}), NULL))) AS n_pairs"
+        ),
+        F.expr(f"named_struct({listed}) AS series"),
+        F.expr(
+            "collect_set(struct(name, coalesce(array_sort(map_keys(labels)), array()) AS keys))"
+            " AS names"
+        ),
     )
     return observed, obs
 
@@ -182,16 +213,23 @@ def validate_samples(facts: dict) -> None:
         raise BadRequest(f"{facts['bad_ts']} samples outside valid time range (1970..2400)")
     if facts["bad_name"]:
         raise BadRequest(f"{facts['bad_name']} samples with invalid metric name")
-    masks: dict = {}
-    for r in facts["series"]:
-        masks[r["series_id"]] = masks.get(r["series_id"], 0) | r["mask"]
-    if any(m & (m - 1) for m in masks.values()):
+    if facts["multi_valued"] or facts["n_pairs"] > facts["n_series"]:
         raise BadRequest("series cannot mix value kinds (float/str/bool/int/blob)")
 
 
-def batch_kinds(facts: dict) -> list:
-    """The ``(series_id, kind)`` pairs of a batch's observed facts."""
-    return sorted({(r["series_id"], r["kind"]) for r in facts["series"] if r["kind"]})
+def check_writable(facts: dict) -> None:
+    """Reject a batch with a ``ts`` the layout cannot hold — also
+    under ``validate=False``, before anything durable is written."""
+    if facts["unwritable_ts"]:
+        raise BadRequest(f"{facts['unwritable_ts']} samples with a timestamp out of range")
+
+
+def batch_kinds(facts: dict) -> list | None:
+    """The ``(series_id, kind)`` pairs of a batch's observed facts, or
+    None when the batch has too many series to list them."""
+    if facts["n_series"] > DRIVER_SERIES_LIMIT:
+        return None
+    return sorted((i, k) for k, ids in facts["series"].asDict().items() for i in ids)
 
 
 def batch_names(facts: dict) -> dict:
@@ -217,9 +255,8 @@ def prepare_for_write(df: DataFrame, config: TSDBConfig, num_buckets: int | None
     """
     df = df.dropDuplicates(["series_id", "ts"])
     # no dt for a ts whose microseconds overflow a long: the ANSI
-    # overflow would fail the checkpoint job before validation reads
-    # its observed counters (such rows are out of range, so a validated
-    # append rejects them)
+    # overflow would fail the checkpoint job before the append reads
+    # its observed counters (which reject such a batch before any write)
     fits = F.col("ts").between(-_TS_MS_LIMIT, _TS_MS_LIMIT)
     df = df.withColumn(
         "dt", F.when(fits, F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd"))

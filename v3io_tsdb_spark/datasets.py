@@ -132,7 +132,7 @@ def events_as_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value"),
         F.lit(None).cast("string").alias("value_str"),
     )
-    df = df.withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
+    df = df.withColumn("series_id", series_id_col())
     if len(_SAMPLES_CACHE) > 256:  # bound: many short-lived test sessions
         _SAMPLES_CACHE.clear()
     _SAMPLES_CACHE[key] = df
@@ -169,4 +169,4 @@ def events_as_string_samples(
         F.lit(None).cast("double").alias("value"),
         F.col("props").alias("value_str"),
     )
-    return df.withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
+    return df.withColumn("series_id", series_id_col())

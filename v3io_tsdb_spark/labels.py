@@ -81,17 +81,18 @@ def labels_map_col(labels_str_col: Column) -> Column:
     ).otherwise(F.str_to_map(labels_str_col, F.lit(","), F.lit("=")))
 
 
-def series_id_col(name_col: Column, labels_col: Column) -> Column:
-    """Series identity = xxhash64(name, canonical labels string).
+def series_id_sql(name_col: str = "name", labels_col: str = "labels") -> str:
+    """Series identity = xxhash64(name, canonical labels string), as
+    SQL text: the one definition, parsed once (see
+    :func:`labels_string_sql`).
 
     Same identity model as the reference's label-set hash
     (ref: pkg/utils/labels.go Hash; pkg/appender/appender.go:211), with
     Spark's built-in xxhash64 as the hash.
     """
-    return F.xxhash64(name_col, labels_string_col(labels_col))
-
-
-def series_id_sql(name_col: str, labels_col: str) -> str:
-    """SQL-string twin of :func:`series_id_col`, the same expression
-    tree parsed once (see :func:`labels_string_sql`)."""
     return "xxhash64(`%s`, %s)" % (name_col, labels_string_sql(labels_col))
+
+
+def series_id_col(name_col: str = "name", labels_col: str = "labels") -> Column:
+    """:func:`series_id_sql` as a Column over the named columns."""
+    return F.expr(series_id_sql(name_col, labels_col))

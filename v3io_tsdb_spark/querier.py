@@ -152,7 +152,7 @@ class Querier:
             else:
                 df = self.spark.read.parquet(df)
         if "series_id" not in df.columns:
-            df = df.withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
+            df = df.withColumn("series_id", series_id_col())
         return df
 
     def rollup_df(self) -> DataFrame | None:

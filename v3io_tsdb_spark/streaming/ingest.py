@@ -50,7 +50,7 @@ def prepare_stream(stream_df: DataFrame, watermark: str | None = None) -> DataFr
         df = df.withColumn("value", F.lit(None).cast("double"))
     if "value_str" not in df.columns:
         df = df.withColumn("value_str", F.lit(None).cast("string"))
-    df = df.withColumn("series_id", series_id_col(F.col("name"), F.col("labels")))
+    df = df.withColumn("series_id", series_id_col())
     wm = watermark or "59 minutes"
     df = df.withWatermark("_event_time", wm)
     df = df.dropDuplicatesWithinWatermark(["series_id", "ts"])
