@@ -26,6 +26,7 @@ from v3io_tsdb_spark.catalog import NamesCatalog
 from v3io_tsdb_spark.config import SCHEMA_FILE, TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest, SchemaError
 from v3io_tsdb_spark.querier import Querier, SelectParams
+from v3io_tsdb_spark.schema import ROLLUP_READ_SCHEMA, SAMPLES_READ_SCHEMA, read_table
 from v3io_tsdb_spark.sql.filters import translate_filter
 from v3io_tsdb_spark.timeutils import str2unix_ms
 
@@ -318,9 +319,7 @@ class TSDBAdapter:
         )
         if not parts:
             return None
-        df = self.spark.read.parquet(self.samples_path).where(
-            F.col("dt") == parts[0].split("=", 1)[1]
-        )
+        df = self._samples().where(F.col("dt") == parts[0].split("=", 1)[1])
         row = df.agg(F.min("ts").alias("m")).collect()[0]
         return None if row["m"] is None else int(row["m"])
 
@@ -362,7 +361,7 @@ class TSDBAdapter:
         if not glob.glob(os.path.join(self.samples_path, "dt=*")):
             return
         src = self.samples_path
-        df = self.spark.read.parquet(src)
+        df = self._samples()
         if target_file_mb:
             total = sum(
                 os.path.getsize(os.path.join(r, f))
@@ -394,7 +393,7 @@ class TSDBAdapter:
         if not glob.glob(os.path.join(self.rollup_path, "rdt=*")):
             return
         src = self.rollup_path
-        merged = ru.merge_partials(self.spark.read.parquet(src).drop("rdt"))
+        merged = ru.merge_partials(read_table(self.spark, src, ROLLUP_READ_SCHEMA).drop("rdt"))
         merged = merged.withColumn(
             "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
         )
@@ -447,20 +446,12 @@ class TSDBAdapter:
         return [r["name"] for r in self._samples().select("name").distinct().orderBy("name").collect()]
 
     def _samples(self) -> DataFrame:
-        """All stored samples; a table whose every partition has been
-        deleted reads as an EMPTY typed frame, not an
-        UNABLE_TO_INFER_SCHEMA error — a full-range delete must leave a
-        queryable (empty) table, like the reference's delete-all
+        """All stored samples, read with the declared schema: a table
+        never written, or whose every partition has been deleted, reads
+        as an empty frame of the same schema — a full-range delete must
+        leave a queryable (empty) table, like the reference's delete-all
         (ref: pkg/tsdb/delete_integration_test.go:97-127)."""
-        import glob
-
-        if not glob.glob(os.path.join(self.samples_path, "dt=*")):
-            from v3io_tsdb_spark.schema import SAMPLES_SCHEMA
-
-            return self.spark.createDataFrame([], SAMPLES_SCHEMA).withColumn(
-                "dt", F.lit(None).cast("string")
-            )
-        return self.spark.read.parquet(self.samples_path)
+        return read_table(self.spark, self.samples_path, SAMPLES_READ_SCHEMA)
 
     # -- delete ------------------------------------------------------------
 
@@ -528,9 +519,8 @@ class TSDBAdapter:
             for dt in set(affected_dts) - kept_dts:
                 shutil.rmtree(os.path.join(self.samples_path, f"dt={dt}"), ignore_errors=True)
             if os.path.exists(self.rollup_path):
-                # dt reads back as DATE (partition-type inference) while
-                # rdt is a string — normalize to ISO strings for the
-                # scope set-math, re-typing at the filter boundary
+                # dt reads back as a DATE — normalize to ISO strings for
+                # the scope set-math, re-typing at the filter boundary
                 target_rdts, source_dts = self._rollup_rebuild_scope(
                     [str(d) for d in affected_dts], doomed_rdts
                 )
@@ -666,10 +656,7 @@ class TSDBAdapter:
     def _refresh_catalog(self) -> None:
         """Names may vanish when their last samples go — recompute the
         catalog (and the series-kind sidecar) from the surviving data."""
-        try:
-            NamesCatalog.rebuild(self.path, self._samples()).save()
-        except Exception:  # all partitions gone → empty catalog
-            NamesCatalog(self.path).save()
+        NamesCatalog.rebuild(self.path, self._samples()).save()
         try:
             tmp = self.kinds_path + "_rebuilding"
             app.series_kinds(self._samples()).coalesce(1).write.mode(
@@ -717,14 +704,10 @@ class TSDBAdapter:
     def _rebuild_rollup_for_dates(self, source_dts: list, target_rdts: list) -> None:
         from datetime import date
 
-        df = self._samples()
-        # match the literal type to the inferred partition column type,
-        # so the IN stays a partition-pruning predicate (no column cast)
-        if dict(df.dtypes).get("dt") == "date":
-            src = [date.fromisoformat(s) for s in source_dts]
-        else:
-            src = list(source_dts)
-        fresh = df.where(F.col("dt").isin(src)).drop("dt")
+        # DATE literals for the DATE partition column, so the IN stays a
+        # partition-pruning predicate (no column cast)
+        src = [date.fromisoformat(s) for s in source_dts]
+        fresh = self._samples().where(F.col("dt").isin(src)).drop("dt")
         rdt_col = F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
         partial = (
             ru.build_rollup(fresh, self.config.granularity_ms)

@@ -54,7 +54,7 @@ def default_functions(querier: Querier, params: SelectParams) -> SelectParams:
         not funcs
         and step_ms > 0
         and step_ms >= querier.config.granularity_ms
-        and querier.rollup_df() is not None
+        and querier.has_rollup()
         and {"count", "sum"} <= set(querier.config.aggregates)
     ):
         return replace(params, functions="avg")

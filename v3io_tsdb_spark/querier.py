@@ -9,6 +9,10 @@ execution (scan pushdown, partial aggregation, shuffle, codegen) is
 left to Catalyst/Tungsten — replacing the reference's worker channels
 and collector goroutines.
 
+Building a select runs no Spark job: the route is chosen first, then
+only the table it reads is opened, with its declared schema (a
+group-by without a names catalog still probes label existence).
+
 Result shapes (long-format; see operators.frames.to_wide_frame for the
 columnar view):
 
@@ -26,6 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from v3io_tsdb_spark import schema
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest
 from v3io_tsdb_spark.labels import labels_map_col, labels_string_col, series_id_col
@@ -128,44 +133,25 @@ class Querier:
     def samples_df(self) -> DataFrame:
         df = self._samples
         if isinstance(df, str):
-            import glob
-            import os
-
-            if not glob.glob(os.path.join(df, "dt=*")):
-                # a fully-deleted (or never-written) table: the
-                # reference returns an empty result set for a query
-                # over an empty TSDB, not an error — build an empty
-                # frame on the canonical on-disk schema instead of
-                # letting Parquet schema inference raise
-                # (ref: pkg/pquerier/querier.go Select over empty
-                # partitions yields an empty iterator)
-                from pyspark.sql import types as T
-
-                from v3io_tsdb_spark.appender import _INPUT_SCHEMA
-
-                schema = T.StructType(
-                    list(_INPUT_SCHEMA.fields)
-                    + [T.StructField("series_id", T.LongType()),
-                       T.StructField("dt", T.StringType())]
-                )
-                df = self.spark.createDataFrame([], schema)
-            else:
-                df = self.spark.read.parquet(df)
+            return schema.read_table(self.spark, df, schema.SAMPLES_READ_SCHEMA)
         if "series_id" not in df.columns:
             df = df.withColumn("series_id", series_id_col())
         return df
 
+    def has_rollup(self) -> bool:
+        """Whether a per-series rollup is attached, without opening it."""
+        return self._rollup is not None
+
     def rollup_df(self) -> DataFrame | None:
-        if self._rollup is None:
-            return None
         if isinstance(self._rollup, str):
-            return self.spark.read.parquet(self._rollup)
+            return schema.read_table(self.spark, self._rollup, schema.ROLLUP_READ_SCHEMA)
         return self._rollup
 
     def label_rollup_df(self, subset) -> DataFrame | None:
-        v = self._label_rollups.get(tuple(sorted(subset)))
+        key = tuple(sorted(subset))
+        v = self._label_rollups.get(key)
         if isinstance(v, str):
-            return self.spark.read.parquet(v)
+            return schema.read_table(self.spark, v, schema.label_rollup_read_schema(key))
         return v
 
     # -- public API --------------------------------------------------------
@@ -284,18 +270,20 @@ class Querier:
         if funcs and dca and step_ms > self.config.granularity_ms:
             step_ms = self.config.granularity_ms
 
-        base = self._scan(params, from_ms, to_ms, window_ms)
+        def scan() -> DataFrame:
+            # the samples scan, built only on routes that read raw samples
+            return self._scan(params, from_ms, to_ms, window_ms)
 
         if params.overlapping_windows:
-            return self._overlapping(base, params, funcs, from_ms, to_ms, step_ms)
+            return self._overlapping(scan(), params, funcs, from_ms, to_ms, step_ms)
         # ... and fall back to ALL-raw when any requested metric cannot be
         # served from rollups (cross-series, uncovered functions, fine
         # steps) — a query must never silently mix exact and rolled-up
         # answers per metric (ref: select.go:228-256 forceRawQuery)
         if funcs and dca and self._force_raw(params, funcs, cross_series, step_ms, window_ms):
-            return self._raw(base)
+            return self._raw(scan())
         if funcs and cross_series:
-            return self._cross_series(base, params, funcs, from_ms, to_ms, step_ms, group_by)
+            return self._cross_series(scan(), params, funcs, from_ms, to_ms, step_ms, group_by)
         # column specs may MIX aggregate and raw columns: a
         # function-less RequestedColumn next to function'd ones (with no
         # bare ``functions`` param) asks for its metric's interpolated
@@ -308,13 +296,13 @@ class Querier:
             funcs and raw_cols and step_ms and not params.functions
             and not group_by and not window_ms
         ):
-            return self._mixed_agg_raw(base, params, funcs, from_ms, to_ms, step_ms)
+            return self._mixed_agg_raw(scan(), params, funcs, from_ms, to_ms, step_ms)
         if funcs:
-            res = self._aggregate(base, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by)
+            res = self._aggregate(None, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by)
             return self._mask_unrequested(res, params, funcs)
         if step_ms:
-            return self._downsample(base, params, from_ms, to_ms, step_ms)
-        return self._raw(base)
+            return self._downsample(scan(), params, from_ms, to_ms, step_ms)
+        return self._raw(scan())
 
     def _dca(self, params: SelectParams) -> bool:
         if params.disable_client_aggr is not None:
@@ -389,9 +377,7 @@ class Querier:
         requested metric can be answered from the rollup (cross-series
         aggregates never can). Mixed capability forces all-raw rather
         than mixing per-metric plans (ref: select.go:228-256)."""
-        if cross_series:
-            return True
-        if self.rollup_df() is None:
+        if cross_series or not self.has_rollup():
             return True
         caps = [
             bool(fs) and self._rollup_step_ok(fs, step_ms, window_ms, params)
@@ -621,9 +607,14 @@ class Querier:
                 raise BadRequest(f"group-by label {g!r} does not exist in the data")
 
     def _aggregate(self, base, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by) -> DataFrame:
+        """Route, then aggregate; ``base`` (the samples scan) is built
+        here, if None, only when the route reads raw samples."""
         if not step_ms:
             step_ms = to_ms - from_ms or 1  # single bucket over the range
         if group_by:
+            if base is None and self._catalog is None:
+                # no catalog: the label-existence probe reads the samples
+                base = self._scan(params, from_ms, to_ms, window_ms)
             self._validate_group_by(base, group_by, self._requested_names(params))
 
         # router order mirrors the reference: a pre-aggregated label-set
@@ -639,6 +630,8 @@ class Querier:
             return self._aggregate_from_rollup(
                 params, funcs, from_ms, to_ms, step_ms, window_ms, group_by
             )
+        if base is None:
+            base = self._scan(params, from_ms, to_ms, window_ms)
 
         # numeric aggregates are float-only, but count covers EVERY
         # sample kind — a variant (string) series answers count like
@@ -759,29 +752,28 @@ class Querier:
     def _can_use_rollup(self, funcs, step_ms, window_ms, params: SelectParams) -> bool:
         """The ~100-line query router (SURVEY §4): use the materialized
         per-series rollup iff it exists and _rollup_step_ok holds."""
-        if self.rollup_df() is None:
-            return False
-        return self._rollup_step_ok(funcs, step_ms, window_ms, params)
+        return self.has_rollup() and self._rollup_step_ok(funcs, step_ms, window_ms, params)
 
     def _label_rollup_plan(
         self, funcs, step_ms, window_ms, params: SelectParams, group_by
     ) -> DataFrame | None:
         """Choose a cross-label pre-aggregate table when GroupBy exactly
         matches a declared label subset and the filter only references
-        those labels (ref: pkg/pquerier/select.go:261-283)."""
-        if not group_by:
+        those labels (ref: pkg/pquerier/select.go:261-283). The table
+        is opened only once the route is chosen."""
+        if not group_by or self._label_rollups.get(tuple(sorted(group_by))) is None:
             return None
-        r = self.label_rollup_df(group_by)
-        if r is None or not self._rollup_step_ok(funcs, step_ms, window_ms, params):
+        if not self._rollup_step_ok(funcs, step_ms, window_ms, params):
             return None
+        pred = None
         if params.filter:
             pred = translate_filter(params.filter)
             for g in group_by:
                 pred = pred.replace(f"labels['{g}']", f"`{g}`")
             if "labels[" in pred:  # filter needs labels the table lacks
                 return None
-            r = r.where(F.expr(pred))
-        return r
+        r = self.label_rollup_df(group_by)
+        return r if pred is None else r.where(F.expr(pred))
 
     def _rollup_cells(self, r, from_ms, to_ms, step_ms, window_ms) -> DataFrame:
         """Map rollup buckets to query cells by bucket **median** time.

@@ -6,12 +6,18 @@ rollup fields; pkg/appender/appender.go:194-208 for the sample shape).
 
 All timestamps are int64 Unix milliseconds (``ts`` / ``bucket``),
 matching the reference and avoiding timezone ambiguity; a derived
-``dt`` (yyyy-MM-dd string) partitions the storage table so time-range
-predicates prune Parquet partitions.
+``dt`` (yyyy-MM-dd) partitions the storage table so time-range
+predicates prune Parquet partitions (``rdt`` the rollup tables).
+The engine opens its tables with the declared read schemas below, as
+the reference keeps its table schema in memory (ref:
+pkg/partmgr/partmgr.go:228-264), so opening a table runs no Spark job.
 """
 
 from __future__ import annotations
 
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 SAMPLES_SCHEMA = T.StructType(
@@ -52,3 +58,36 @@ ROLLUP_SCHEMA = T.StructType(
         T.StructField("last_ts", T.LongType(), True),
     ]
 )
+
+
+def _read_schema(fields, partition: str) -> T.StructType:
+    """All-nullable fields plus the DATE partition column: how Spark
+    reads any Parquet table, so an empty frame and a scan agree."""
+    return T.StructType(
+        [T.StructField(f.name, f.dataType) for f in fields]
+        + [T.StructField(partition, T.DateType())]
+    )
+
+
+SAMPLES_READ_SCHEMA = _read_schema(SAMPLES_SCHEMA.fields, "dt")
+ROLLUP_READ_SCHEMA = _read_schema(ROLLUP_SCHEMA.fields, "rdt")
+
+
+def label_rollup_read_schema(subset) -> T.StructType:
+    """A cross-label pre-aggregate: name, one string per label of the
+    subset, bucket, then the rollup's aggregate columns."""
+    labels = [T.StructField(k, T.StringType()) for k in subset]
+    aggs = ROLLUP_SCHEMA.fields[4:]  # count .. last_ts
+    return _read_schema(
+        [ROLLUP_SCHEMA["name"], *labels, ROLLUP_SCHEMA["bucket"], *aggs], "rdt"
+    )
+
+
+def read_table(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Open an engine table with its declared schema — no footer read,
+    so no Spark job. A missing directory reads as an empty frame of the
+    same schema (an empty TSDB answers queries with empty results,
+    ref: pkg/pquerier/querier.go Select over empty partitions)."""
+    if not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)

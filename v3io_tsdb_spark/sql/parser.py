@@ -255,6 +255,7 @@ def run_sql(querier, sql: str, extensions: bool = False, **overrides) -> DataFra
 
     melted = to_series(res, funcs)
     group_cols = [g.strip() for g in (parsed.group_by or "").split(",") if g.strip()]
+    keys = None  # pivot keys, when the request alone defines them
     if not parsed.wildcard:
         # keep only requested (metric, function) pairs; name columns by alias
         pairs = []
@@ -294,13 +295,18 @@ def run_sql(querier, sql: str, extensions: bool = False, **overrides) -> DataFra
                 ),
             )
         melted = melted.withColumn("_ckey", ckey)
+        if names and not star_fns:
+            # as for raw queries: a requested column with no in-range
+            # data still gets its (all-null) column, and the pivot skips
+            # its distinct-values pre-pass (sorted, Spark's own order)
+            keys = sorted(set(names.values()))
     else:
         melted = melted.withColumn(
             "_ckey", F.concat(F.col("aggregate"), F.lit("("), F.col("name"), F.lit(")"))
         )
     wide = (
         melted.groupBy(F.col("t").alias("time"), *[F.col(g) for g in group_cols])
-        .pivot("_ckey")
+        .pivot("_ckey", keys)
         .agg(F.first("value", ignorenulls=True))
         .orderBy("time", *group_cols)
     )
