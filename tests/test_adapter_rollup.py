@@ -6,6 +6,7 @@ pqueriertest/server_aggregates_integration_test.go).
 """
 
 import os
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -125,6 +126,33 @@ def test_delete_label_filter_missing_label(tmp_path, spark):
     assert sorted(r["value"] for r in left.collect()) == [2.0, 3.0]
 
 
+def test_delete_leaves_session_conf_unchanged(tmp_path, spark):
+    """Delete rewrites only the partitions it touches through the
+    writer's own overwrite mode: the session's partitionOverwriteMode
+    is never set, and the untouched day's samples, rollup and
+    pre-aggregate partitions survive a static-mode session."""
+    DAY = 24 * HOUR
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    assert before.upper() == "STATIC"
+    a = _mk(tmp_path, spark, aggregation_granularity="1h", pre_aggregates=[["os"]])
+    a.append(
+        [{"ts": T0H + i * MIN, "name": "cpu", "labels": {"os": "linux"}, "value": 1.0}
+         for i in range(5)]
+        + [{"ts": T0H + DAY + i * MIN, "name": "cpu", "labels": {"os": "linux"}, "value": 2.0}
+           for i in range(5)]
+    )
+    a.delete(from_time=T0H + MIN, to_time=T0H + 2 * MIN)
+    assert spark.conf.get(key) == before
+    left = a.select(SelectParams(name="cpu", from_time=T0H, to_time=T0H + 2 * DAY))
+    assert sorted(r["value"] for r in left.collect()) == [1.0] * 3 + [2.0] * 5
+    day0 = datetime.fromtimestamp(T0H / 1000, timezone.utc).date()
+    want = {str(day0): 3, str(day0 + timedelta(days=1)): 5}
+    for path in (a.rollup_path, a._label_rollup_path(["os"])):
+        cnt = spark.read.parquet(path).groupBy("rdt").agg(F.sum("count").alias("n"))
+        assert {str(r["rdt"]): r["n"] for r in cnt.collect()} == want
+
+
 def test_delete_whole_partition(tmp_path, spark):
     """A dt partition whose rows all match must actually disappear, and
     the rollup for that date must not serve deleted samples."""
@@ -148,17 +176,68 @@ def test_delete_whole_partition(tmp_path, spark):
 
 
 def test_compact_rollup(tmp_path, spark):
+    """Compaction merges every partial column: sums add, min/max fold,
+    and ``last`` is chosen by ``last_ts`` across batches, not by append
+    order (the first batch holds the newest samples)."""
     a = _mk(tmp_path, spark)
-    for batch in range(3):
-        a.append(
-            [{"ts": T0H + batch * MIN + i * 10, "name": "m", "labels": {}, "value": 1.0} for i in range(5)]
-        )
+    labels = {"os": "linux", "host": "a"}
+    starts = (20 * MIN, 0, 10 * MIN)  # per batch, within one 1h bucket
+    values = []
+    for batch, start in enumerate(starts):
+        pts = [(T0H + start + i * 10, batch * 10.0 + i + 0.5) for i in range(5)]
+        values += pts
+        a.append([{"ts": t, "name": "m", "labels": labels, "value": v} for t, v in pts])
     pre = spark.read.parquet(a.rollup_path).count()
     a.compact_rollup()
-    post = spark.read.parquet(a.rollup_path)
-    assert post.count() == 1  # one (series, bucket)
+    post = spark.read.parquet(a.rollup_path).collect()
+    assert len(post) == 1  # one (series, bucket)
     assert pre >= 3
-    assert post.first()["count"] == 15
+    row = post[0]
+    vs = [v for _, v in values]
+    last_ts, last = max(values)
+    assert row["count"] == 15
+    assert row["sum"] == sum(vs)
+    assert row["sqr"] == sum(v * v for v in vs)
+    assert (row["min"], row["max"]) == (min(vs), max(vs))
+    assert (row["last"], row["last_ts"]) == (last, last_ts) == (4.5, T0H + 20 * MIN + 40)
+    assert dict(row["labels"]) == labels
+
+
+def test_rollup_partials_merge(spark, make_samples):
+    """The one algebra: a rollup or pre-aggregate built over A ∪ B
+    equals the shared combine applied to its builds over A and B."""
+    from v3io_tsdb_spark import rollup as ru
+
+    gran = HOUR
+    series = [
+        ("cpu", {"os": "linux" if k % 2 else "win", "host": f"h{k}"},
+         # distinct timestamps within each os group, so ``last`` is unique
+         [(i * 7 * MIN + k * MIN, float((i * 5 + k) % 11) - 3.5) for i in range(40)])
+        for k in range(4)
+    ]
+    a = make_samples([(n, lb, pts[::2]) for n, lb, pts in series], t0=T0H)
+    b = make_samples([(n, lb, pts[1::2]) for n, lb, pts in series], t0=T0H)
+    whole = a.unionByName(b)
+
+    def rows(df):
+        return sorted(
+            tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+            for r in df.collect()
+        )
+
+    label = ru.build_label_rollup(whole, gran, ("os",))
+    merged = (
+        ru.build_label_rollup(a, gran, ("os",))
+        .unionByName(ru.build_label_rollup(b, gran, ("os",)))
+        .groupBy("name", "os", "bucket")
+        .agg(*ru.combine_exprs())
+    )
+    assert rows(merged.select(*label.columns)) == rows(label)
+    assert len(rows(label)) > 4
+
+    per_series = ru.build_rollup(whole, gran)
+    merged = ru.merge_partials(ru.build_rollup(a, gran).unionByName(ru.build_rollup(b, gran)))
+    assert rows(merged) == rows(per_series)
 
 def test_label_rollup_path_agreement(tmp_path, spark):
     """Cross-label pre-aggregate path equals client path on

@@ -6,6 +6,8 @@ to, and fall back safely on anything it cannot emit exactly."""
 import math
 import struct
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark.functions.localrel import values_frame
@@ -92,7 +94,7 @@ def test_values_frame_fallbacks(spark):
     nan = values_frame(spark, [(float("nan"),), (float("inf"),)], "x double")
     got = [r.x for r in nan.collect()]
     assert math.isnan(got[0]) or math.isnan(got[1])
-    assert _plan_root(nan) != "LocalRelation" or True  # content is the contract
+    assert _plan_root(nan) != "LocalRelation"  # NaN/Inf cannot be emitted
 
     none = values_frame(spark, [(None,), (1.5,)], "x double")
     assert {r.x for r in none.collect()} == {None, 1.5}
@@ -108,6 +110,24 @@ def test_values_frame_fallbacks(spark):
         spark, [(i, "x" * 200) for i in range(3000)], "i long, s string"
     )
     assert big.count() == 3000
+
+
+def test_values_frame_out_of_range_ints_fall_back(spark):
+    """Integers outside the declared type's range cannot be emitted as
+    that type: they take the createDataFrame path, which rejects them
+    exactly as it would have without the fast path."""
+    from pyspark.errors import PySparkValueError
+
+    for v, ddl in ((2**40, "x int"), (2**70, "x long"), (-(2**15) - 1, "x smallint")):
+        with pytest.raises(PySparkValueError) as e:
+            values_frame(spark, [(v,)], ddl)
+        assert "VALUE_OUT_OF_BOUNDS" in str(e.value), ddl
+    # the extremes of each range still take the fast path
+    edge = [(2**63 - 1, 2**31 - 1, 2**15 - 1), (-(2**63), -(2**31), -(2**15))]
+    ddl = "l long, i int, s smallint"
+    df = values_frame(spark, edge, ddl)
+    assert _plan_root(df) == "LocalRelation"
+    _rows_bitexact(spark.createDataFrame(edge, ddl), df)
 
 
 def test_values_frame_oversize_falls_back(spark):

@@ -13,6 +13,7 @@ from conftest import MIN, T0, rows_to_dict
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.querier import Querier, RequestedColumn, SelectParams
 from v3io_tsdb_spark.rollup import build_rollup
+from v3io_tsdb_spark.timeutils import str2duration_ms
 
 HOUR = 60 * MIN
 # hour-aligned anchor so rollup buckets nest exactly in query cells
@@ -261,7 +262,7 @@ def test_select_series_row_guard(rolled):
                                       to_time=T0H + 48 * HOUR), max_rows=5)
 
 
-def _server_windowed(spark, make_samples, window, step="5h"):
+def _server_windowed(spark, make_samples, window, step="5h", via_rollup=True):
     """Reference golden setup (windowed_aggregation_integration_test.go:
     302-429): 10 hourly samples valued 10*i, queried server-side with
     step 5h. Anchor = the suite's basicQueryTime (21:40Z, conftest T0)
@@ -269,7 +270,8 @@ def _server_windowed(spark, make_samples, window, step="5h"):
     (collector.go:207-210) and fans it across the window's cells
     (collector.go:366-383); the published expected values depend on
     that 40-minute in-hour offset, so this anchor is part of the
-    golden."""
+    golden. ``via_rollup``: the route the router takes for this
+    window/step."""
     t0 = T0
     df = make_samples(
         [("cpu", {"os": "linux"}, [(i * HOUR, 10.0 * i) for i in range(10)])],
@@ -280,7 +282,8 @@ def _server_windowed(spark, make_samples, window, step="5h"):
     p = SelectParams(name="cpu", functions="sum", step=step,
                      aggregation_window=window, from_time=t0,
                      to_time=t0 + 10 * HOUR)
-    assert q._can_use_rollup(["sum"], 5 * HOUR, 0, p) or True
+    step_ms, window_ms = str2duration_ms(step), str2duration_ms(window)
+    assert q._can_use_rollup(["sum"], step_ms, window_ms, p) is via_rollup
     return t0, rows_to_dict(q.select(p), ["t"], ["sum"])
 
 
@@ -300,6 +303,8 @@ def test_server_windowed_window_equal_to_step_golden(spark, make_samples):
 
 def test_server_windowed_window_equal_to_rollup_interval_golden(spark, make_samples):
     # ref: windowed_aggregation_integration_test.go:430-495 — step ==
-    # window == granularity: each hour cell answers its own bucket
-    t0, got = _server_windowed(spark, make_samples, window="1h", step="1h")
+    # window == granularity: each hour cell answers its own bucket. A
+    # 1h step is not coarse enough for the rollup here (step/granularity
+    # must exceed the coefficient), so the client path serves it
+    t0, got = _server_windowed(spark, make_samples, window="1h", step="1h", via_rollup=False)
     assert got == {t0 + i * HOUR: 10.0 * i for i in range(10)}

@@ -142,6 +142,40 @@ def _swap_dirs(live: str, staged: str) -> None:
     shutil.rmtree(old)
 
 
+def _replace_sidecar(df: DataFrame, path: str) -> None:
+    """Write ``df`` as one file to a staging dir, then move it into
+    place (crash-safe swap when ``path`` already exists)."""
+    tmp = path + "_staging"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    if os.path.exists(path):
+        _swap_dirs(path, tmp)
+    else:
+        os.rename(tmp, path)
+
+
+def _overwrite_partitions(df: DataFrame, key: str, path: str, emptied) -> None:
+    """Rewrite only the ``key`` partitions present in ``df`` (dynamic
+    overwrite, set on this write alone), then remove the ``emptied``
+    ones, which a dynamic overwrite leaves in place."""
+    df.write.option("partitionOverwriteMode", "dynamic").mode("overwrite").partitionBy(
+        key
+    ).parquet(path)
+    for v in emptied:
+        shutil.rmtree(os.path.join(path, f"{key}={v}"), ignore_errors=True)
+
+
+def _publish_compacted(df: DataFrame, root: str, src: str, key: str, online: bool) -> None:
+    """Write a compacted copy of the table at ``src`` and publish it:
+    online, as a new generation under ``root`` behind the ``_CURRENT``
+    pointer; offline, by swapping it into ``src``'s place."""
+    dest = os.path.join(root, _gen_next(root)) if online else src + "_compacting"
+    df.write.mode("overwrite").partitionBy(key).parquet(dest)
+    if online:
+        _gen_publish(root, os.path.basename(dest), src)
+    else:
+        _swap_dirs(src, dest)
+
+
 class TSDBAdapter:
     def __init__(self, spark: SparkSession, path: str, config: TSDBConfig | None = None):
         self.spark = spark
@@ -291,20 +325,25 @@ class TSDBAdapter:
             # deployment with very large per-day rollups adds a
             # series-id salt here exactly like compact_samples
             batch = out.drop("dt")
-            partial = ru.build_rollup(batch, self.config.granularity_ms)
-            partial = partial.withColumn(
-                "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-            ).repartition(F.col("rdt"))
-            partial.write.mode("append").partitionBy("rdt").parquet(self.rollup_path)
-            for subset in self.config.pre_aggregates:
-                p = ru.build_label_rollup(batch, self.config.granularity_ms, tuple(subset))
-                p = p.withColumn(
-                    "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-                ).repartition(F.col("rdt"))
-                p.write.mode("append").partitionBy("rdt").parquet(self._label_rollup_path(subset))
+            for path, build in self._rollup_tables():
+                ru.with_rdt(build(batch)).repartition(F.col("rdt")).write.mode(
+                    "append"
+                ).partitionBy("rdt").parquet(path)
 
     def _label_rollup_path(self, subset) -> str:
         return os.path.join(self.path, "rollup_by_" + "_".join(subset))
+
+    def _rollup_tables(self) -> list:
+        """``(path, builder)`` for the per-series rollup, then each
+        declared pre-aggregate; a builder maps samples to partial rows."""
+        gran = self.config.granularity_ms
+        tables = [(self.rollup_path, lambda s: ru.build_rollup(s, gran))]
+        for subset in self.config.pre_aggregates:
+            tables.append((
+                self._label_rollup_path(subset),
+                lambda s, k=tuple(subset): ru.build_label_rollup(s, gran, k),
+            ))
+        return tables
 
     def start_time(self) -> int | None:
         """Earliest queryable sample time in ms, or None for an empty
@@ -375,16 +414,7 @@ class TSDBAdapter:
         else:
             part = df.repartition(F.col("dt"))
         part = part.sortWithinPartitions("dt", "name", "ts")
-        if online:
-            gen = _gen_next(self._samples_root)
-            part.write.mode("overwrite").partitionBy("dt").parquet(
-                os.path.join(self._samples_root, gen)
-            )
-            _gen_publish(self._samples_root, gen, src)
-        else:
-            tmp = src + "_compacting"
-            part.write.mode("overwrite").partitionBy("dt").parquet(tmp)
-            _swap_dirs(src, tmp)
+        _publish_compacted(part, self._samples_root, src, "dt", online)
 
     def compact_rollup(self, online: bool = False) -> None:
         """Merge partial rollup rows (optional maintenance).
@@ -394,19 +424,7 @@ class TSDBAdapter:
             return
         src = self.rollup_path
         merged = ru.merge_partials(read_table(self.spark, src, ROLLUP_READ_SCHEMA).drop("rdt"))
-        merged = merged.withColumn(
-            "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-        )
-        if online:
-            gen = _gen_next(self._rollup_root)
-            merged.write.mode("overwrite").partitionBy("rdt").parquet(
-                os.path.join(self._rollup_root, gen)
-            )
-            _gen_publish(self._rollup_root, gen, src)
-        else:
-            tmp = src + "_compacting"
-            merged.write.mode("overwrite").partitionBy("rdt").parquet(tmp)
-            _swap_dirs(src, tmp)
+        _publish_compacted(ru.with_rdt(merged), self._rollup_root, src, "rdt", online)
 
     # -- query -------------------------------------------------------------
 
@@ -508,26 +526,17 @@ class TSDBAdapter:
                 ).alias("rdt")
             ).distinct().collect()
         ]
-        prev_mode = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            kept = df.where(F.col("dt").isin(affected_dts)).where(~cond)
-            kept_dts = {r["dt"] for r in kept.select("dt").distinct().collect()}
-            kept.write.mode("overwrite").partitionBy("dt").parquet(self.samples_path)
-            # dynamic overwrite only rewrites partitions present in the
-            # written frame — fully-emptied dt partitions must go explicitly
-            for dt in set(affected_dts) - kept_dts:
-                shutil.rmtree(os.path.join(self.samples_path, f"dt={dt}"), ignore_errors=True)
-            if os.path.exists(self.rollup_path):
-                # dt reads back as a DATE — normalize to ISO strings for
-                # the scope set-math, re-typing at the filter boundary
-                target_rdts, source_dts = self._rollup_rebuild_scope(
-                    [str(d) for d in affected_dts], doomed_rdts
-                )
-                self._rebuild_rollup_for_dates(source_dts, target_rdts)
-            self._refresh_catalog()
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        kept = df.where(F.col("dt").isin(affected_dts)).where(~cond)
+        kept_dts = {r["dt"] for r in kept.select("dt").distinct().collect()}
+        _overwrite_partitions(kept, "dt", self.samples_path, set(affected_dts) - kept_dts)
+        if os.path.exists(self.rollup_path):
+            # dt reads back as a DATE — normalize to ISO strings for
+            # the scope set-math, re-typing at the filter boundary
+            target_rdts, source_dts = self._rollup_rebuild_scope(
+                [str(d) for d in affected_dts], doomed_rdts
+            )
+            self._rebuild_rollup_for_dates(source_dts, target_rdts)
+        self._refresh_catalog()
 
     def _monotonic_filter(self, df):
         """``override_old=False`` ingest mode: drop samples at-or-before
@@ -582,22 +591,12 @@ class TSDBAdapter:
                 .groupBy("series_id")
                 .agg(F.max("max_ts").alias("max_ts"))
             )
-        tmp = self.maxts_path + "_staging"
-        new.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.maxts_path):
-            _swap_dirs(self.maxts_path, tmp)
-        else:
-            os.rename(tmp, self.maxts_path)
+        _replace_sidecar(new, self.maxts_path)
 
     def _rebuild_maxts(self, samples) -> None:
-        tmp = self.maxts_path + "_staging"
-        samples.groupBy("series_id").agg(
-            F.max("ts").alias("max_ts")
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.maxts_path):
-            _swap_dirs(self.maxts_path, tmp)
-        else:
-            os.rename(tmp, self.maxts_path)
+        _replace_sidecar(
+            samples.groupBy("series_id").agg(F.max("ts").alias("max_ts")), self.maxts_path
+        )
         # a full rebuild reflects every committed sample, so whatever
         # append the pending token came from is now folded in
         pending = _read_token(self._maxts_pending)
@@ -658,14 +657,7 @@ class TSDBAdapter:
         catalog (and the series-kind sidecar) from the surviving data."""
         NamesCatalog.rebuild(self.path, self._samples()).save()
         try:
-            tmp = self.kinds_path + "_rebuilding"
-            app.series_kinds(self._samples()).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            if os.path.exists(self.kinds_path):
-                _swap_dirs(self.kinds_path, tmp)
-            else:
-                os.rename(tmp, self.kinds_path)
+            _replace_sidecar(app.series_kinds(self._samples()), self.kinds_path)
         except Exception:
             shutil.rmtree(self.kinds_path, ignore_errors=True)
         # deletes can LOWER a series' high-water mark; a stale sidecar
@@ -708,31 +700,17 @@ class TSDBAdapter:
         # partition-pruning predicate (no column cast)
         src = [date.fromisoformat(s) for s in source_dts]
         fresh = self._samples().where(F.col("dt").isin(src)).drop("dt")
-        rdt_col = F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
-        partial = (
-            ru.build_rollup(fresh, self.config.granularity_ms)
-            .withColumn("rdt", rdt_col)
-            .where(F.col("rdt").isin(target_rdts))
-        )
-        new_rdts = {r["rdt"] for r in partial.select("rdt").distinct().collect()}
-        partial.write.mode("overwrite").partitionBy("rdt").parquet(self.rollup_path)
-        # dynamic overwrite only rewrites partitions present in the
-        # frame — target rdts left with no buckets must go explicitly
-        stale = set(target_rdts) - new_rdts
-        for rdt in stale:
-            shutil.rmtree(os.path.join(self.rollup_path, f"rdt={rdt}"), ignore_errors=True)
-        for subset in self.config.pre_aggregates:
-            path = self._label_rollup_path(subset)
+        stale = None
+        for path, build in self._rollup_tables():
             if not os.path.exists(path):
                 continue
-            p = (
-                ru.build_label_rollup(fresh, self.config.granularity_ms, tuple(subset))
-                .withColumn("rdt", rdt_col)
-                .where(F.col("rdt").isin(target_rdts))
-            )
-            p.write.mode("overwrite").partitionBy("rdt").parquet(path)
-            for rdt in stale:
-                shutil.rmtree(os.path.join(path, f"rdt={rdt}"), ignore_errors=True)
+            partial = ru.with_rdt(build(fresh)).where(F.col("rdt").isin(target_rdts))
+            if stale is None:
+                # every table buckets the same samples, so the first
+                # (the per-series rollup) names the target rdts left empty
+                new_rdts = {r["rdt"] for r in partial.select("rdt").distinct().collect()}
+                stale = set(target_rdts) - new_rdts
+            _overwrite_partitions(partial, "rdt", path, stale)
 
     # -- retention ---------------------------------------------------------
 
@@ -759,12 +737,11 @@ class TSDBAdapter:
             now_ms = int(time.time() * 1000)
         cutoff_ms = now_ms - hours * 3_600_000
         gran = self.config.granularity_ms
-        dropped = {}
-        dropped["samples"] = self._drop_expired(self.samples_path, "dt", cutoff_ms, 0)
-        dropped["rollup"] = self._drop_expired(self.rollup_path, "rdt", cutoff_ms, gran)
-        for subset in self.config.pre_aggregates:
-            path = self._label_rollup_path(subset)
-            dropped[os.path.basename(path)] = self._drop_expired(path, "rdt", cutoff_ms, gran)
+        dropped = {"samples": self._drop_expired(self.samples_path, "dt", cutoff_ms, 0)}
+        for path, _ in self._rollup_tables():
+            # keyed by the table's directory under the TSDB root
+            table = os.path.relpath(path, self.path).split(os.sep)[0]
+            dropped[table] = self._drop_expired(path, "rdt", cutoff_ms, gran)
         if dropped["samples"]:
             self._refresh_catalog()
         return dropped

@@ -14,6 +14,7 @@ the operators build (probe sweeps, centroid matrices, quantile lists,
 driver-computed result panels). Emission is exact by construction:
 
 - integral types emit the decimal digits (``L``-suffixed for BIGINT);
+  a value outside the type's range falls back;
 - doubles emit ``repr(x)`` + ``D`` — the shortest round-tripping
   decimal parsed by correctly-rounded ``Double.parseDouble``, so the
   stored double is bit-identical to ``F.lit(float(x))`` (the
@@ -50,18 +51,25 @@ _SAFE_STR = frozenset(
 )
 
 
+_INT_BITS = {T.LongType: 64, T.IntegerType: 32, T.ShortType: 16}
+
+
+def _fits(v: int, dt) -> bool:
+    half = 1 << (_INT_BITS[type(dt)] - 1)
+    return -half <= v < half
+
+
 def _emit(v, dt) -> str | None:
     """SQL literal for ``v`` as ``dt``, or None when not exactly
     emittable (drives the createDataFrame fallback)."""
     if v is None:
         return None
-    if isinstance(dt, T.LongType):
-        if isinstance(v, bool) or not isinstance(v, int):
+    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType)):
+        # out of range for the type: createDataFrame raises its own error
+        if isinstance(v, bool) or not isinstance(v, int) or not _fits(v, dt):
             return None
-        return "%dL" % v
-    if isinstance(dt, (T.IntegerType, T.ShortType)):
-        if isinstance(v, bool) or not isinstance(v, int):
-            return None
+        if isinstance(dt, T.LongType):
+            return "%dL" % v
         return "CAST(%d AS %s)" % (v, dt.simpleString().upper())
     if isinstance(dt, T.DoubleType):
         if isinstance(v, bool) or not isinstance(v, (int, float)):

@@ -79,52 +79,6 @@ def token_count_col(text: Column) -> Column:
     return F.size(tokens_col(text))
 
 
-def avg_token_len_col(text: Column) -> Column:
-    n = token_count_col(text)
-    total = F.aggregate(
-        F.transform(tokens_col(text), lambda t: F.length(t)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(n > 0, total.cast("double") / n)
-
-
-def stopword_ratio_col(text: Column, lang: str = "en") -> Column:
-    toks = F.transform(tokens_col(text), lambda t: F.lower(t))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-    n = token_count_col(text)
-    return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def lang_score_col(text: Column, lang: str) -> Column:
-    """Stopword-hit count for one language (the n-gram heuristic core)."""
-    toks = F.transform(tokens_col(text), lambda t: F.lower(t))
-    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-
-
-def lang_id_col(text: Column, langs: tuple = ("en", "es", "fr", "de", "zh")) -> Column:
-    """argmax-score language ID; ties resolve in ``langs`` order,
-    zero hits → 'und'."""
-    scores = [lang_score_col(text, lg) for lg in langs]
-    best = F.greatest(*scores) if len(scores) > 1 else scores[0]
-    out = F.lit("und")
-    for lg, sc in reversed(list(zip(langs, scores))):
-        out = F.when((best > 0) & (sc == best), F.lit(lg)).otherwise(out)
-    return out
-
-
-def quality_score_col(text: Column) -> Column:
-    """Heuristic quality in [0,1]: length band + mean-token-length band
-    + stopword presence (classic pre-training quality filters)."""
-    n = token_count_col(text)
-    atl = F.coalesce(avg_token_len_col(text), F.lit(0.0))
-    sw = stopword_ratio_col(text, "en")
-    len_ok = F.when((n >= 10) & (n <= 100000), 1.0).otherwise(0.0)
-    tok_ok = F.when((atl >= 2.0) & (atl <= 12.0), 1.0).otherwise(0.0)
-    sw_ok = F.when(sw >= 0.01, 1.0).otherwise(0.0)
-    return F.round((len_ok + tok_ok + sw_ok) / F.lit(3.0), 6)
-
-
 def fingerprint_col(text: Column) -> Column:
     """Document fingerprint: md5 over whitespace-normalized lowercase
     text (stable across engines; the rolling-hash analog)."""
@@ -147,7 +101,8 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     # below mirrors one of the original selects op for op — same
     # CASE/split/transform/filter/aggregate nodes, D-suffixed double
     # literals where F.lit(float) stood — so every value is identical
-    # by construction (collected-parity-tested vs the Column form).
+    # by construction. The values are checked by the registry's DuckDB
+    # oracle row ``doc_text_stats``, not by a test against a Column form.
     t, i = f"`{text_col}`", f"`{id_col}`"
     toks = (
         f"CASE WHEN (length(trim({t})) = 0) "
@@ -205,30 +160,6 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
 
 
 # -- repetition / quality signals ------------------------------------------
-
-def ngram_dup_ratio_col(text: Column, n: int) -> Column:
-    """Fraction of within-document duplicate word n-grams:
-    ``1 - distinct(ngrams)/count(ngrams)`` (0 when fewer than n tokens).
-
-    The standard repetition quality signal for corpus filtering (the
-    Gopher-style "duplicate n-gram fraction" family): high values mark
-    looping/boilerplate generations. Pure column expression — builds
-    the n-gram array with ``transform`` over an index sequence, no
-    explode, no shuffle, no Python; per-row map work that scales
-    linearly with no coordination.
-    """
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    k = F.size(toks) - F.lit(n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(
-        k <= 0, F.lit(0.0)
-    ).otherwise(
-        F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams)
-    )
-
 
 def repetition_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark import schema
+from v3io_tsdb_spark import rollup as ru
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest
 from v3io_tsdb_spark.labels import labels_map_col, labels_string_col, series_id_col
@@ -50,19 +51,6 @@ def _group_keeping_labels(df: DataFrame, keys: list, aggs: list) -> DataFrame:
     d = df.withColumn("_lstr", labels_string_col(F.col("labels")))
     g = d.groupBy(*keys, "_lstr").agg(*aggs)
     return g.withColumn("labels", labels_map_col(F.col("_lstr"))).drop("_lstr")
-
-
-def _rollup_combine_exprs() -> dict:
-    """Mergeable-aggregate algebra for combining rollup partials into
-    query cells (ref: pkg/aggregate/functions.go:48-79)."""
-    return {
-        "count": F.sum("count"),
-        "sum": F.sum("sum"),
-        "sqr": F.sum("sqr"),
-        "min": F.min("min"),
-        "max": F.max("max"),
-        "last": F.max_by("last", "last_ts"),
-    }
 
 
 @dataclass
@@ -495,31 +483,11 @@ class Querier:
         tolerance) on the same step grid, full-outer joined into one
         frame — the DataFrame analog of the reference emitting one
         series per requested column."""
-        from v3io_tsdb_spark.operators.interpolate import align_to_grid
-
         agg_res = self._aggregate(base, params, funcs, from_ms, to_ms, step_ms, 0, [])
         agg_res = self._mask_unrequested(agg_res, params, funcs)
-        metric_interp = self._metric_interp(params)
-        parts = []
-        for c in params.columns:
-            if c.function:
-                continue
-            tol_src = c.tolerance if c.tolerance is not None else params.tolerance
-            tol = str2duration_ms(tol_src) if tol_src else None
-            src = base.where(
-                (F.col("name") == c.metric) & F.col("value").isNotNull()
-            )
-            parts.append(
-                align_to_grid(
-                    src, from_ms, to_ms, step_ms,
-                    interp=c.interpolator or metric_interp.get(c.metric)
-                    or params.interpolator or "next_val",
-                    tolerance_ms=tol,
-                )
-            )
-        raw = parts[0]
-        for p in parts[1:]:
-            raw = raw.unionByName(p)
+        raw = self._align_columns(
+            base, params, [c for c in params.columns if not c.function], from_ms, to_ms, step_ms
+        )
         keys = ["name", "series_id", "t"]
         left = agg_res.withColumnRenamed("labels", "_al")
         right = raw.withColumnRenamed("labels", "_rl")
@@ -535,32 +503,32 @@ class Querier:
         With column specs, each column aligns with its own interpolator
         (sibling-inherited per metric, see _metric_interp); a bare
         query aligns everything with the query-level interpolator."""
-        src = base.where(F.col("value").isNotNull())
         if params.columns:
-            metric_interp = self._metric_interp(params)
-            parts = []
-            for c in params.columns:
-                tol_src = c.tolerance if c.tolerance is not None else params.tolerance
-                tol = str2duration_ms(tol_src) if tol_src else None
-                parts.append(
-                    align_to_grid(
-                        src.where(F.col("name") == c.metric),
-                        from_ms, to_ms, step_ms,
-                        interp=c.interpolator or metric_interp.get(c.metric)
-                        or params.interpolator or "next_val",
-                        tolerance_ms=tol,
-                    )
-                )
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+            return self._align_columns(base, params, params.columns, from_ms, to_ms, step_ms)
         tol = str2duration_ms(params.tolerance) if params.tolerance else None
         return align_to_grid(
-            src, from_ms, to_ms, step_ms,
+            base.where(F.col("value").isNotNull()), from_ms, to_ms, step_ms,
             interp=params.interpolator or "next_val",
             tolerance_ms=tol,
         )
+
+    def _align_columns(self, base, params, cols, from_ms, to_ms, step_ms) -> DataFrame:
+        """Each column spec's metric aligned to the step grid with its own
+        interpolator (sibling-inherited per metric, see _metric_interp)
+        and tolerance, unioned into one frame."""
+        src = base.where(F.col("value").isNotNull())
+        metric_interp = self._metric_interp(params)
+        out = None
+        for c in cols:
+            tol_src = c.tolerance if c.tolerance is not None else params.tolerance
+            part = align_to_grid(
+                src.where(F.col("name") == c.metric), from_ms, to_ms, step_ms,
+                interp=c.interpolator or metric_interp.get(c.metric)
+                or params.interpolator or "next_val",
+                tolerance_ms=str2duration_ms(tol_src) if tol_src else None,
+            )
+            out = part if out is None else out.unionByName(part)
+        return out
 
     def _group_keys(self, group_by: list[str]):
         """Label-subset grouping (ref: pkg/pquerier/select.go:354-367)."""
@@ -620,15 +588,16 @@ class Querier:
         # router order mirrors the reference: a pre-aggregated label-set
         # table matching GroupBy wins over the per-series rollup
         # (ref: pkg/pquerier/select.go:261-283 parsePreAggregateLabels)
-        lr = self._label_rollup_plan(funcs, step_ms, window_ms, params, group_by)
-        if lr is not None:
-            return self._aggregate_from_label_rollup(
-                lr, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by
-            )
-        use_rollup = self._can_use_rollup(funcs, step_ms, window_ms, params)
-        if use_rollup:
+        pred = self._label_rollup_plan(funcs, step_ms, window_ms, params, group_by)
+        if pred is not None:
             return self._aggregate_from_rollup(
-                params, funcs, from_ms, to_ms, step_ms, window_ms, group_by
+                self.label_rollup_df(group_by), pred,
+                params, funcs, from_ms, to_ms, step_ms, window_ms, group_by,
+            )
+        if self._can_use_rollup(funcs, step_ms, window_ms, params):
+            return self._aggregate_from_rollup(
+                self.rollup_df(), translate_filter(params.filter) if params.filter else "",
+                params, funcs, from_ms, to_ms, step_ms, window_ms, group_by,
             )
         if base is None:
             base = self._scan(params, from_ms, to_ms, window_ms)
@@ -653,24 +622,23 @@ class Querier:
                 F.col("t") <= F.lit(to_ms)
             )
 
-        raws = agg.required_raw(funcs)
-        agg_exprs = agg.raw_agg_exprs(raws, count_presence=F.lit(True))
-        if group_by:
-            keys = [F.col("name")] + self._group_keys(group_by) + [F.col("t")]
-            grouped = b.groupBy(*keys).agg(*agg_exprs)
-            part_keys = ["name"] + group_by
-        else:
-            grouped = _group_keeping_labels(
-                b, ["name", "series_id", "t"], agg_exprs
-            )
-            part_keys = ["name", "series_id"]
-        return self._finish_aggregate(grouped, funcs, raws, step_ms, part_keys, group_by)
+        aggs = agg.raw_agg_exprs(agg.required_raw(funcs), count_presence=F.lit(True))
+        return self._finish_aggregate(b, aggs, funcs, step_ms, group_by)
 
-    def _finish_aggregate(self, grouped, funcs, raws, step_ms, part_keys, group_by) -> DataFrame:
-        """Derived columns + projection; empty buckets are naturally
-        absent (count==0 suppression, ref: pkg/aggregate/iterator.go:361-364)."""
-        out = grouped
+    def _finish_aggregate(self, cells, aggs, funcs, step_ms, group_by, cross=False) -> DataFrame:
+        """Aggregate ``cells`` (rows tagged with their cell time ``t``)
+        per series, per group-by label set, or — ``cross`` — across
+        series; then derived columns + projection. Empty buckets are
+        naturally absent (count==0 suppression, ref:
+        pkg/aggregate/iterator.go:361-364)."""
+        if group_by or cross:
+            # a pre-aggregate carries its group-by labels as columns
+            keys = self._group_keys(group_by) if "labels" in cells.columns else group_by
+            out = cells.groupBy(F.col("name"), *keys, F.col("t")).agg(*aggs)
+        else:
+            out = _group_keeping_labels(cells, ["name", "series_id", "t"], aggs)
         if "rate" in funcs:
+            part_keys = [c for c in ("name", *group_by, "series_id") if c in out.columns]
             w = Window.partitionBy(*part_keys).orderBy("t")
             out = out.withColumn(
                 "rate", agg.rate_col(F.col("last"), F.lag("last").over(w), step_ms)
@@ -697,24 +665,8 @@ class Querier:
             interp=params.interpolator or "next_val",
             tolerance_ms=tol,
         )
-        raws = agg.required_raw(funcs)
-        keys = [F.col("name")] + (self._group_keys_from_map(aligned, group_by) if group_by else []) + [F.col("t")]
-        grouped = aligned.groupBy(*keys).agg(
-            *agg.raw_agg_exprs(raws, value_col="value", ts_col="series_id")
-        )
-        part_keys = ["name"] + group_by
-        out = grouped
-        if "rate" in funcs:
-            w = Window.partitionBy(*part_keys).orderBy("t")
-            out = out.withColumn("rate", agg.rate_col(F.col("last"), F.lag("last").over(w), step_ms))
-        for f in funcs:
-            if f in ("avg", "stddev", "stdvar"):
-                out = out.withColumn(f, agg.derived_col(f, step_ms))
-        head = ["name"] + (group_by or []) + ["t"]
-        return out.select(*head, *[F.col(f).alias(f) for f in funcs])
-
-    def _group_keys_from_map(self, df, group_by):
-        return [F.element_at(F.col("labels"), g).alias(g) for g in group_by]
+        aggs = agg.raw_agg_exprs(agg.required_raw(funcs), value_col="value", ts_col="series_id")
+        return self._finish_aggregate(aligned, aggs, funcs, step_ms, group_by, cross=True)
 
     # -- rollup ("server aggregates") routing ------------------------------
 
@@ -756,24 +708,21 @@ class Querier:
 
     def _label_rollup_plan(
         self, funcs, step_ms, window_ms, params: SelectParams, group_by
-    ) -> DataFrame | None:
+    ) -> str | None:
         """Choose a cross-label pre-aggregate table when GroupBy exactly
         matches a declared label subset and the filter only references
-        those labels (ref: pkg/pquerier/select.go:261-283). The table
-        is opened only once the route is chosen."""
+        those labels (ref: pkg/pquerier/select.go:261-283). Returns the
+        filter rewritten onto the table's label columns ('' for none),
+        or None when the route declines."""
         if not group_by or self._label_rollups.get(tuple(sorted(group_by))) is None:
             return None
         if not self._rollup_step_ok(funcs, step_ms, window_ms, params):
             return None
-        pred = None
-        if params.filter:
-            pred = translate_filter(params.filter)
-            for g in group_by:
-                pred = pred.replace(f"labels['{g}']", f"`{g}`")
-            if "labels[" in pred:  # filter needs labels the table lacks
-                return None
-        r = self.label_rollup_df(group_by)
-        return r if pred is None else r.where(F.expr(pred))
+        pred = translate_filter(params.filter) if params.filter else ""
+        for g in group_by:
+            pred = pred.replace(f"labels['{g}']", f"`{g}`")
+        # the filter needs labels the table lacks
+        return None if "labels[" in pred else pred
 
     def _rollup_cells(self, r, from_ms, to_ms, step_ms, window_ms) -> DataFrame:
         """Map rollup buckets to query cells by bucket **median** time.
@@ -813,48 +762,21 @@ class Querier:
             r = r.withColumn("t", cell)
         return r.where((F.col("t") >= F.lit(from_ms)) & (F.col("t") <= F.lit(to_ms)))
 
-    def _aggregate_from_label_rollup(
-        self, r, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by
-    ) -> DataFrame:
-        """Same bucket→cell median mapping as the per-series rollup path,
-        over a table already keyed by the label subset."""
-        names = self._requested_names(params)
-        if names:
-            r = r.where(F.col("name").isin(names))
-        r = self._rollup_cells(r, from_ms, to_ms, step_ms, window_ms)
-        raws = agg.required_raw(funcs)
-        combine = _rollup_combine_exprs()
-        grouped = r.groupBy("name", *group_by, "t").agg(
-            *[combine[x].alias(x) for x in raws]
-        )
-        return self._finish_aggregate(grouped, funcs, raws, step_ms, ["name"] + group_by, group_by)
-
     def _aggregate_from_rollup(
-        self, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by
+        self, r, pred, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by
     ) -> DataFrame:
         """Re-bucket rollup rows into query cells by bucket **median**
-        time with truncating division, replicating the reference's
+        time (see :meth:`_rollup_cells`), replicating the reference's
         mapping (ref: pkg/pquerier/collector.go:187-234
-        aggregateServerAggregates); windowed cells via
-        :meth:`_rollup_cells`.
-        """
-        r = self.rollup_df()
+        aggregateServerAggregates), and combine them with the rollup
+        merge algebra. ``r`` is the per-series rollup or a pre-aggregate
+        already keyed by the group-by labels (no ``labels`` column);
+        ``pred`` is its SQL filter, '' for none."""
         names = self._requested_names(params)
         if names:
             r = r.where(F.col("name").isin(names))
-        if params.filter:
-            r = r.where(F.expr(translate_filter(params.filter)))
+        if pred:
+            r = r.where(F.expr(pred))
         r = self._rollup_cells(r, from_ms, to_ms, step_ms, window_ms)
-
-        raws = agg.required_raw(funcs)
-        combine = _rollup_combine_exprs()
-        if group_by:
-            keys = [F.col("name")] + self._group_keys_from_map(r, group_by) + [F.col("t")]
-            grouped = r.groupBy(*keys).agg(*[combine[x].alias(x) for x in raws])
-            part_keys = ["name"] + group_by
-        else:
-            grouped = _group_keeping_labels(
-                r, ["name", "series_id", "t"], [combine[x].alias(x) for x in raws]
-            )
-            part_keys = ["name", "series_id"]
-        return self._finish_aggregate(grouped, funcs, raws, step_ms, part_keys, group_by)
+        combine = ru.combine_exprs(agg.required_raw(funcs))
+        return self._finish_aggregate(r, combine, funcs, step_ms, group_by)

@@ -13,6 +13,11 @@ partials with the standard mergeable-aggregate algebra:
     count=Σcount, sum=Σsum, sqr=Σsqr, min=min(min), max=max(max),
     last=argmax(last, last_ts)
 
+The algebra is defined once: partials are
+``operators.aggregates.raw_agg_exprs`` plus ``max(ts) AS last_ts``
+(:func:`_partial_exprs`), and :func:`combine_exprs` is the merge that
+:func:`merge_partials` and both querier rollup routes use.
+
 This keeps ingest free of read-modify-write (no MERGE needed on plain
 Parquet), is idempotent-friendly, and scales: each batch does exactly
 one map-side-combinable groupBy. Cross-label pre-aggregates
@@ -22,82 +27,74 @@ keyed by a label subset.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark.labels import labels_map_col, labels_string_col
+from v3io_tsdb_spark.operators.aggregates import RAW_AGGREGATES, raw_agg_exprs
 from v3io_tsdb_spark.operators.bucketing import wall_bucket
 
-ROLLUP_AGG_COLS = ("count", "sum", "sqr", "min", "max", "last", "last_ts")
+ROLLUP_AGG_COLS = RAW_AGGREGATES + ("last_ts",)
+_MERGE = {"count": F.sum, "sum": F.sum, "sqr": F.sum, "min": F.min, "max": F.max, "last_ts": F.max}
 
 
-def build_rollup(samples: DataFrame, gran_ms: int) -> DataFrame:
-    """Partial rollup rows for a batch of samples (float metrics only).
+def combine_exprs(cols=ROLLUP_AGG_COLS) -> list[Column]:
+    """Merge expressions combining partial rows into one, per column
+    (ref: pkg/aggregate/functions.go:48-79)."""
+    return [
+        (F.max_by("last", "last_ts") if c == "last" else _MERGE[c](c)).alias(c)
+        for c in cols
+    ]
+
+
+def with_rdt(partial: DataFrame) -> DataFrame:
+    """Add the ``rdt`` partition column: the UTC date of the bucket start."""
+    return partial.withColumn(
+        "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
+    )
+
+
+def _partial_exprs() -> list[Column]:
+    return raw_agg_exprs(list(RAW_AGGREGATES)) + [F.max("ts").alias("last_ts")]
+
+
+def _samples_by_bucket(samples: DataFrame, gran_ms: int) -> DataFrame:
+    return samples.where(F.col("value").isNotNull()).withColumn(
+        "bucket", wall_bucket(F.col("ts"), gran_ms)
+    )
+
+
+def _per_series(df: DataFrame, aggs: list) -> DataFrame:
+    """One row per (series, bucket) in the rollup table's columns.
 
     The labels map rides through the groupBy as a serialized group-key
     string (constant per series_id, so groups are unchanged) — a
     map-typed first() would force SortAggregate."""
-    v, t = F.col("value"), F.col("ts")
     return (
-        samples.where(v.isNotNull())
-        .withColumn("bucket", wall_bucket(t, gran_ms))
-        .withColumn("_lstr", labels_string_col(F.col("labels")))
+        df.withColumn("_lstr", labels_string_col(F.col("labels")))
         .groupBy("name", "series_id", "_lstr", "bucket")
-        .agg(
-            F.count(v).alias("count"),
-            F.sum(v).alias("sum"),
-            F.sum(v * v).alias("sqr"),
-            F.min(v).alias("min"),
-            F.max(v).alias("max"),
-            F.max_by(v, t).alias("last"),
-            F.max(t).alias("last_ts"),
-        )
+        .agg(*aggs)
         .withColumn("labels", labels_map_col(F.col("_lstr")))
-        .select(
-            "bucket", "name", "labels", "series_id",
-            "count", "sum", "sqr", "min", "max", "last", "last_ts",
-        )
+        .select("bucket", "name", "labels", "series_id", *ROLLUP_AGG_COLS)
     )
+
+
+def build_rollup(samples: DataFrame, gran_ms: int) -> DataFrame:
+    """Partial rollup rows for a batch of samples (float metrics only)."""
+    return _per_series(_samples_by_bucket(samples, gran_ms), _partial_exprs())
 
 
 def build_label_rollup(samples: DataFrame, gran_ms: int, label_subset: tuple) -> DataFrame:
     """Cross-label pre-aggregate: rollup keyed by a label subset
     (ref: pkg/partmgr/partmgr.go:472-485 agg/<labels>/ path)."""
-    v, t = F.col("value"), F.col("ts")
     keys = [F.element_at(F.col("labels"), k).alias(k) for k in label_subset]
     return (
-        samples.where(v.isNotNull())
-        .withColumn("bucket", wall_bucket(t, gran_ms))
+        _samples_by_bucket(samples, gran_ms)
         .groupBy(F.col("name"), *keys, F.col("bucket"))
-        .agg(
-            F.count(v).alias("count"),
-            F.sum(v).alias("sum"),
-            F.sum(v * v).alias("sqr"),
-            F.min(v).alias("min"),
-            F.max(v).alias("max"),
-            F.max_by(v, t).alias("last"),
-            F.max(t).alias("last_ts"),
-        )
+        .agg(*_partial_exprs())
     )
 
 
 def merge_partials(rollup: DataFrame) -> DataFrame:
     """Compact partial rollup rows to one row per (series, bucket)."""
-    return (
-        rollup.withColumn("_lstr", labels_string_col(F.col("labels")))
-        .groupBy("name", "series_id", "_lstr", "bucket")
-        .agg(
-            F.sum("count").alias("count"),
-            F.sum("sum").alias("sum"),
-            F.sum("sqr").alias("sqr"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-            F.max_by("last", "last_ts").alias("last"),
-            F.max("last_ts").alias("last_ts"),
-        )
-        .withColumn("labels", labels_map_col(F.col("_lstr")))
-        .select(
-            "bucket", "name", "labels", "series_id",
-            "count", "sum", "sqr", "min", "max", "last", "last_ts",
-        )
-    )
+    return _per_series(rollup, combine_exprs())
