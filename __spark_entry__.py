@@ -4873,22 +4873,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     exactly rows 0-49 of 55). Rotation policy (VERDICT r6 #2, r8 #2):
     no query's newest driver row should age past ~2 rounds.
 
-    Round-16 head-50 (VERDICT r15 #1/#2/#3): slots 0-1 are diagnostics
-    on the artifact's row-count channel — `diag_session_config` (the
-    driver Spark session's ANSI/AQE/UTC fingerprint vs the local
-    constant 1111; reuses the answered engine-version probe's slot)
-    and `diag_det_mn_code` (each engine's det_ln checksum printed as
-    its row count). Slots 2-7 are the perplexity control matrix,
-    gated together in ONE driver run for the first time: the data-free
-    det_ln probe, the sessionize-only digest, the model half, the
-    BIGINT panel, and both family rows — all carrying the r16 ROOT
-    CAUSE fix (the family oracles' `sess` was an uncast DuckDB window
-    sum → HUGEINT → float64 through the pandas bridge, value-equal to
-    Spark's int64 under the local tolerance compare but red under the
-    driver's typed value hash; now CAST AS BIGINT, and
-    tools/check_oracle.py fails the dtype-kind class locally). Slot 8
-    is mm_image_ahash's first gate (X197 net-new); slots 9-49 the 41
-    surviving r12-evidence rows.
+    Current head-50: the `head` list at the end of this function — the
+    r18 plan; the comment above it gives the plan-and-simulate
+    rationale. Slot 0 stays `diag_session_config` (the driver Spark
+    session's ANSI/AQE/UTC fingerprint vs the local constant 1111, on
+    the artifact's row-count channel), the standing per-round
+    environment probe; every row outside `head` follows in table
+    order.
+
+    The first rows of `table` are the Round-16 head-50 (VERDICT r15
+    #1/#2/#3: the row-count-channel diagnostics and the perplexity
+    control matrix gated in ONE driver run, with the r16 root-cause fix
+    of the family oracles' uncast `sess` window sum); the comment at
+    the top of `table` lists its slots.
 
     The 50-slot gate is SATURATED past 100 queries: the rotation is a
     ceil(N/50)-window cycle, so every query's newest hash-green driver
@@ -4912,11 +4909,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     test_round14_retired.py / test_round15_retired.py) stand
     unchanged."""
     table = {
-        # --- r16 head-50 (driver gates rows 0-49), per
-        # --- tools/check_rotation.py --plan + --simulate:
-        # --- [0-1] diagnostics on the row-count channel (session-
-        # --- config fingerprint + det_ln checksum — green when the
-        # --- driver matches the local environment), [2-7] the
+        # --- table order, r16 head-50 first. The driver gates rows
+        # --- 0-49 of what queries() returns: the r18 `head` list
+        # --- below the table, then every other row in this order.
+        # --- The r16 head, per tools/check_rotation.py --plan +
+        # --- --simulate at r16: [0-1] diagnostics on the row-count
+        # --- channel (session-config fingerprint + det_ln checksum
+        # --- — green when the driver matches the local
+        # --- environment), [2-7] the
         # --- perplexity control matrix in ONE run (VERDICT r15 #1:
         # --- data-free det_ln probe, sessionize-only digest, model
         # --- half, BIGINT panel, both family rows — all with the
@@ -5124,69 +5124,68 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dsir_scores": q_doc_dsir_scores,
         "diag_engine_versions": q_diag_engine_versions,
     }
-    # --- r17 head rotation (tools/check_rotation.py --plan at r17,
-    # --- the same plan+simulate discipline as the r16 head): every
-    # --- r16-head row now carries fresh r16 evidence, so the r17 head
+    # --- r18 head rotation (tools/check_rotation.py --plan at r18,
+    # --- the same plan+simulate discipline as the r16/r17 heads):
+    # --- every r17-head row now carries fresh r17 evidence
+    # --- (CORRECTNESS_r17 has all 50 hash-green), so the r18 head
     # --- rotates to the 49 rows the 4-window invariant needs next —
-    # --- the 2 net-new X201/X202 rows and the 47 rows whose newest
-    # --- green driver row is r13. diag_session_config keeps its
-    # --- standing slot (the per-round environment fingerprint);
-    # --- diag_det_mn_code steps out of the head — its det_ln
-    # --- row-count checksum is superseded by det_mn_probe's
-    # --- value-hashed r16-green row, and diag_ rows are
-    # --- invariant-exempt wherever they sit. --simulate exits 0 on
+    # --- the 47 rows whose newest green driver row is r14, oldest
+    # --- first, then the two r15 rows (tpch_q10_returned_items,
+    # --- events_pagerank). diag_session_config keeps its standing
+    # --- slot (the per-round environment fingerprint); the r17-head
+    # --- rows drop to the tail in table order. --simulate exits 0 on
     # --- this order (test_rotation_simulation_green).
     head = [
         "diag_session_config",
-        "doc_calibration",
-        "doc_dsir_scores",
-        "tpch_q15_top_supplier",
-        "tpch_q16_supplier_cnt",
-        "mm_wav_features",
-        "emb_semantic_decontaminate",
-        "tpch_q19_discount_promo",
-        "mm_image_features",
-        "tpch_q7_volume_shipping",
-        "tpch_q8_market_share",
-        "tpch_q9_product_profit",
-        "tpch_q14_promo_share",
-        "mm_video_features",
-        "tsdb_raw_filter",
-        "tsdb_windowed_2d",
-        "tsdb_cross_series_daily",
-        "tsdb_interp_linear",
-        "tsdb_rate_daily",
-        "tsdb_rollup_daily",
-        "tsdb_wide_frame_daily",
-        "tsdb_groupby_total",
-        "tsdb_stddev_weekly",
-        "tsdb_downsample_6h",
-        "tsdb_overlapping_windows",
-        "doc_dedup_clusters",
-        "emb_cosine_topk",
-        "emb_batch_topk",
-        "emb_near_dup",
-        "mm_extract_features",
-        "mm_frame_sample",
-        "doc_token_quantiles",
-        "doc_decontaminate",
-        "doc_top_trigrams",
-        "doc_ngram_jaccard",
-        "doc_dedup_exact_stats",
-        "doc_text_stats",
-        "doc_split_stats",
-        "events_sampled_hourly",
-        "tpch_q1_pricing",
-        "tpch_join_segment_month",
-        "tpch_q3_top_orders",
-        "tpch_q6_forecast_revenue",
-        "tpch_join_nation_revenue",
-        "tpch_q5_local_supplier",
-        "doc_budget_selection",
-        "stream_dedup_hourly",
-        "stream_sessions_30m",
-        "stream_counter_increase",
-        "doc_length_histogram",
+        "doc_normalized_dedup",
+        "doc_unigram_logprob",
+        "doc_script_profile",
+        "tsdb_irate_daily",
+        "doc_corpus_diff",
+        "tsdb_label_cardinality",
+        "emb_group_diversity",
+        "doc_bm25_topk",
+        "doc_mixture_weights",
+        "doc_winnow_decontaminate",
+        "tsdb_mad_daily",
+        "events_value_heatmap",
+        "tsdb_integral_daily",
+        "doc_zipf_fit",
+        "doc_cooccur_pmi",
+        "events_hampel_hourly",
+        "emb_pq_topk",
+        "events_heavy_hitters",
+        "tsdb_theilsen_daily",
+        "events_assoc_rules",
+        "doc_bigram_logprob",
+        "doc_classifier_score",
+        "tsdb_ols_trend_daily",
+        "tsdb_xcorr_daily",
+        "events_hist_quantile",
+        "doc_hybrid_rrf",
+        "events_bloom_semi",
+        "stream_cms_sketch",
+        "tsdb_seasonal_decompose",
+        "events_path_trigrams",
+        "doc_readability",
+        "emb_hard_negatives",
+        "events_key_skew",
+        "events_benford",
+        "events_interarrival",
+        "tsdb_corr_matrix",
+        "events_new_returning",
+        "doc_psi_drift",
+        "doc_source_overlap",
+        "doc_oov_rate",
+        "tsdb_minmax_decimate",
+        "events_attribution",
+        "emb_kmeans_profile",
+        "events_alert_episodes",
+        "tsdb_slo_burn",
+        "tsdb_adjusted_anomaly",
+        "emb_mmr_topk",
+        "tpch_q10_returned_items",
+        "events_pagerank",
     ]
     assert len(head) == 50 and all(q in table for q in head)
     hset = set(head)

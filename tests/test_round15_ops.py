@@ -8,6 +8,7 @@ engine-version diagnostic probe, and the rotation gate-time
 simulation.
 """
 
+import os
 import subprocess
 import sys
 
@@ -465,7 +466,8 @@ class TestDiagAndRotation:
         only passes 'now' is not a plan)."""
         r = subprocess.run(
             [sys.executable, "tools/check_rotation.py", "--simulate"],
-            cwd="/root/repo", capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            capture_output=True, text=True,
         )
         assert r.returncode == 0, r.stdout + r.stderr
 

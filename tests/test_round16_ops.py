@@ -192,26 +192,37 @@ class TestRowCountChannelProbes:
 
 def test_head_contains_control_matrix():
     """r16 pinned the control-matrix rows into the head so ONE driver
-    run gated them (VERDICT r15 next-round #1/#3) — which happened:
-    CORRECTNESS_r16 has all of them hash-green, evidence valid through
-    the 4-window cycle. The r17 head ROTATES (the rotation contract in
-    the queries() docstring): this pin now guards the r17 plan — the
-    two never-gated rows, the standing environment probe, and the
-    oldest-evidence r13 cohort must sit in slots 0-49 so the r17 gate
-    clears the stale set check_rotation --simulate models."""
+    run gated them (VERDICT r15 next-round #1/#3), and r17 pinned its
+    rotation plan (the two then never-gated rows and the r13 evidence
+    cohort). Both gated: CORRECTNESS_r16 has the matrix hash-green and
+    CORRECTNESS_r17 has every r17-head row hash-green. The r18 head
+    ROTATES again (the rotation contract in the queries() docstring):
+    this pin now guards the r18 plan — the standing environment probe,
+    the r14 evidence cohort and the two r15 rows must sit in slots 0-49
+    so the r18 gate clears the stale set check_rotation --simulate
+    models, and every r17-head row that leaves must be r17-green."""
+    import json
+    import os
+
     import __spark_entry__ as E
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     head = list(E.queries())[:50]
-    for name in ("diag_session_config", "doc_calibration",
-                 "doc_dsir_scores", "tpch_q15_top_supplier",
-                 "mm_wav_features", "emb_semantic_decontaminate",
-                 "tsdb_interp_linear", "doc_dedup_clusters",
-                 "stream_counter_increase", "doc_length_histogram"):
+    for name in ("diag_session_config", "doc_normalized_dedup",
+                 "tsdb_irate_daily", "events_value_heatmap",
+                 "stream_cms_sketch", "doc_classifier_score",
+                 "tsdb_slo_burn", "emb_mmr_topk",
+                 "tpch_q10_returned_items", "events_pagerank"):
         assert name in head, name
-    # and the r16 matrix really is r16-green (the reason it may leave)
-    import json
-
-    with open("/root/repo/CORRECTNESS_r16.json") as f:
+    # the r17 head really is r17-green (the reason its rows may leave)
+    with open(os.path.join(repo, "CORRECTNESS_r17.json")) as f:
+        art17 = json.load(f)
+    leaving = [q for q in art17 if q not in head]
+    assert {"doc_calibration", "doc_dsir_scores"} <= set(leaving)
+    for name in leaving:
+        assert art17[name]["hash_match"] is True, name
+    # and the r16 matrix really is r16-green
+    with open(os.path.join(repo, "CORRECTNESS_r16.json")) as f:
         art = json.load(f)
     for name in ("diag_det_mn_code", "det_mn_probe",
                  "events_session_digest", "events_markov_transitions",
