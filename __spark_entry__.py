@@ -67,7 +67,7 @@ def _events_ms_clamped(spark: SparkSession, sf_dir: str,
     NATIVE ``ts`` column — so the clamp reaches the Parquet scan as a
     pushed filter (row-group/page pruning) for every ts encoding the
     driver has shipped (VERDICT r7 #7; same mirror rule as
-    ``Querier._scan``, querier.py:432-441). A predicate on the derived
+    ``Querier._scan``). A predicate on the derived
     ms expression cannot push."""
     from v3io_tsdb_spark.datasets import ts_millis
 
@@ -4870,8 +4870,10 @@ def q_mm_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Ordering contract: the driver's oracle sweep records correctness
     rows for the FIRST 50 entries only (observed: CORRECTNESS_r05 had
-    exactly rows 0-49 of 55). Rotation policy (VERDICT r6 #2, r8 #2):
-    no query's newest driver row should age past ~2 rounds.
+    exactly rows 0-49 of 55). Rotation policy: with N=193 rows and a
+    50-slot gate, no query's newest hash-green gated row may be more
+    than ceil(193/50) - 1 = 3 rounds older than the newest artifact
+    (the bound derived below and enforced by `tools/check_rotation.py`).
 
     Current head-50: the `head` list at the end of this function — the
     r18 plan; the comment above it gives the plan-and-simulate

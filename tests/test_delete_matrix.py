@@ -116,3 +116,37 @@ def test_delete_matrix(tmp_path, spark, desc, kwargs, survives):
                               from_time=D0, to_time=D0 + 6 * DAY)
         total = sum(r["count"] for r in q.select(params).collect())
         assert total == len(expected), desc
+
+
+def test_delete_collects_once_before_samples_write(spark, tmp_path, monkeypatch):
+    """The doomed rows' dt and rdt partitions come from ONE distinct
+    collect; with the kept-dt collect that is two collect jobs (each a
+    shuffle-map job plus a result job under AQE) before the samples
+    partitions are rewritten."""
+    import uuid
+
+    from v3io_tsdb_spark import adapter as adapter_mod
+
+    a = TSDBAdapter(spark, str(tmp_path / "db"),
+                    TSDBConfig(aggregation_granularity="1h")).create()
+    a.append(_fixture_rows())
+    sc = spark.sparkContext
+    grp = f"delete-{uuid.uuid4()}"
+    before_write = []
+    write = adapter_mod._overwrite_partitions
+
+    def counted(df, key, path, emptied):
+        if key == "dt" and not before_write:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            before_write.append(len(sc.statusTracker().getJobIdsForGroup(grp)))
+        return write(df, key, path, emptied)
+
+    monkeypatch.setattr(adapter_mod, "_overwrite_partitions", counted)
+    sc.setJobGroup(grp, "delete")
+    try:
+        a.delete(from_time=D0, to_time=D0 + HOUR, filter="os=='linux'")
+    finally:
+        sc.setJobGroup(None, None)
+    assert before_write == [4], before_write
+    left = a.select(SelectParams(from_time=0, to_time=9_999_999_999_999)).count()
+    assert left == len(_fixture_rows()) - 2 * 3

@@ -2,10 +2,12 @@
 
 The engine reads its own tables with declared schemas, so building a
 select on an adapter table runs no Spark job on any route, and a query
-opens only the table its route reads.
+opens only the table its route reads. Every route is built from SQL
+text, so a build makes a few tens of Py4J round trips.
 """
 
 import os
+import re
 import uuid
 
 import pytest
@@ -14,8 +16,8 @@ from pyspark.sql import functions as F
 from v3io_tsdb_spark import prom
 from v3io_tsdb_spark.adapter import TSDBAdapter
 from v3io_tsdb_spark.config import TSDBConfig
-from v3io_tsdb_spark.querier import SelectParams
-from v3io_tsdb_spark.schema import SAMPLES_READ_SCHEMA
+from v3io_tsdb_spark.querier import Querier, SelectParams
+from v3io_tsdb_spark.schema import ROLLUP_READ_SCHEMA, SAMPLES_READ_SCHEMA, read_table
 from v3io_tsdb_spark.sql.parser import run_sql
 
 T0 = 1704067200000  # 2024-01-01T00:00Z
@@ -176,3 +178,133 @@ def test_sql_pivot_keeps_requested_empty_column(spark, table):
     assert len(rows) == 2
     assert all(r["sum(m1)"] is not None and r["sum(nodata)"] is None for r in rows)
     assert wide.where(F.col("sum(nodata)").isNotNull()).count() == 0
+
+
+BUILD_CALL_BUDGET = 50
+
+
+def _calls(spark, fn):
+    """(result, Py4J round trips ``fn`` made). Memory releases are not
+    counted: py4j sends one whenever the Python proxy of a JVM object
+    dies, and proxies left over from earlier work die at arbitrary
+    points."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counted(command, *a, **k):
+        n[0] += not command.startswith("m\nd\n")
+        return send(command, *a, **k)
+
+    client.send_command = counted
+    try:
+        res = fn()
+    finally:
+        del client.send_command  # back to the class's method
+    return res, n[0]
+
+
+class _Collected(Exception):
+    pass
+
+
+def _build_calls(spark, fn):
+    """Py4J round trips ``fn`` makes before its first collect (the
+    collect itself is not run)."""
+    cls = type(spark.range(0))
+    orig = cls.collect
+
+    def stop(self):
+        raise _Collected
+
+    def run():
+        try:
+            fn()
+        except _Collected:
+            return True
+        return False
+
+    cls.collect = stop
+    try:
+        run()  # warm: first-use JVM class lookups
+        collected, calls = _calls(spark, run)
+    finally:
+        cls.collect = orig
+    assert collected
+    return calls
+
+
+BUILDS = {
+    **{route: (lambda t, p=params: t.querier().select(SelectParams(**p)).collect())
+       for route, (params, _) in ROUTES.items()},
+    "run_sql": lambda t: run_sql(
+        t.querier(), "select sum(m1), max(m1) from tsdb where host=='h1'",
+        step="6h", from_time=T0, to_time=T1).collect(),
+    "prom_default_functions": lambda t: prom.select_series(
+        t.querier(), SelectParams(name="m1", step="6h", from_time=T0, to_time=T1)),
+    "prom_downsample": lambda t: prom.select_series(
+        t.querier(), SelectParams(name="m1", step="10m", from_time=T1 - HOUR, to_time=T1)),
+}
+
+
+@pytest.mark.parametrize("build", sorted(BUILDS))
+def test_build_py4j_call_budget(spark, table, build):
+    """A build is a few SQL-text stages: ≤ 50 Py4J round trips up to
+    the first collect (a Column-built route made 250-1,000)."""
+    calls = _build_calls(spark, lambda: BUILDS[build](table))
+    assert calls <= BUILD_CALL_BUDGET, (build, calls)
+
+
+def _scan_filters(df, key: str) -> str:
+    """The ``key`` ("PushedFilters", "PartitionFilters") entries of the
+    file scans in ``df``'s physical plan, untruncated, ids stripped."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    found = [leaves.apply(i).metadata() for i in range(leaves.size())]
+    return re.sub(r"#\d+L?", "", " ".join(m.apply(key) for m in found if m.contains(key)))
+
+
+def test_scan_predicates_reach_the_parquet_scan(spark, table):
+    df = table.select(SelectParams(name="m1", from_time=T1 - HOUR, to_time=T1))
+    pushed = _scan_filters(df, "PushedFilters")
+    assert f"GreaterThanOrEqual(ts,{T1 - HOUR})" in pushed, pushed
+    assert f"LessThanOrEqual(ts,{T1})" in pushed, pushed
+    parts = _scan_filters(df, "PartitionFilters")
+    assert "(dt >= 2024-01-02)" in parts and "(dt <= 2024-01-03)" in parts, parts
+
+
+@pytest.fixture(scope="module")
+def wide(spark, tmp_path_factory):
+    """Four days, hourly: wider than the rdt-pruning queries below."""
+    path = str(tmp_path_factory.mktemp("qb_wide") / "db")
+    cfg = TSDBConfig(aggregation_granularity="1h", pre_aggregates=(("dc",),))
+    ad = TSDBAdapter(spark, path, cfg).create()
+    ad.append(_rows(names=("m1",), hosts=3, days=4, every=60))
+    return ad
+
+
+PRUNED = {
+    "no_window": dict(functions="sum,count,max", step="6h"),
+    "window": dict(functions="sum,count,max", step="6h", aggregation_window="12h"),
+    "label_rollup": dict(functions="sum,count", step="6h", group_by="dc"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PRUNED))
+def test_rollup_scan_pruned_by_rdt(spark, wide, case):
+    params = SelectParams(name="m1", from_time=T0 + 2 * DAY, to_time=T0 + 2 * DAY + 12 * HOUR - 1,
+                          **PRUNED[case])
+    q = wide.querier()
+    df = q.select(params)
+    parts = _scan_filters(df, "PartitionFilters")
+    assert "(rdt >= 2024-01-02)" in parts and "(rdt <= 2024-01-03)" in parts, parts
+    # the same rollup rows without an rdt column: nothing to prune on
+    table = "rollup_by_dc" if "group_by" in PRUNED[case] else "rollup"
+    rows = read_table(spark, os.path.join(wide.path, table),
+                      ROLLUP_READ_SCHEMA if table == "rollup" else q.label_rollup_df(("dc",)).schema)
+    unpruned = Querier(spark, wide.samples_path, config=wide.config, catalog=q._catalog,
+                       **({"label_rollups": {("dc",): rows.drop("rdt")}} if table != "rollup"
+                          else {"rollup": rows.drop("rdt")}))
+    ref = unpruned.select(params)
+    assert "rdt" not in _scan_filters(ref, "PartitionFilters")
+    cols = [c for c in df.columns if c != "labels"]
+    got, want = sorted(df.select(*cols).collect()), sorted(ref.select(*cols).collect())
+    assert got == want and len(got) > 0

@@ -511,21 +511,20 @@ class TSDBAdapter:
         cond = F.coalesce(cond, F.lit(False))
 
         df = self._samples()
-        doomed = df.where(cond)
-        affected_dts = [r["dt"] for r in doomed.select("dt").distinct().collect()]
+        # one pass over the doomed rows: their dt partitions and the rdt
+        # partitions their buckets land in (bucket-date can differ from
+        # sample-date when granularity doesn't divide a day)
+        gran = self.config.granularity_ms
+        pairs = df.where(cond).select(
+            "dt",
+            F.date_format(
+                F.timestamp_millis(F.col("ts") - F.col("ts") % F.lit(gran)), "yyyy-MM-dd"
+            ).alias("rdt"),
+        ).distinct().collect()
+        affected_dts = sorted({r["dt"] for r in pairs})
         if not affected_dts:
             return
-        # rdt partitions the doomed rows' buckets land in (bucket-date can
-        # differ from sample-date when granularity doesn't divide a day)
-        gran = self.config.granularity_ms
-        doomed_rdts = [
-            r["rdt"]
-            for r in doomed.select(
-                F.date_format(
-                    F.timestamp_millis(F.col("ts") - F.col("ts") % F.lit(gran)), "yyyy-MM-dd"
-                ).alias("rdt")
-            ).distinct().collect()
-        ]
+        doomed_rdts = sorted({r["rdt"] for r in pairs})
         kept = df.where(F.col("dt").isin(affected_dts)).where(~cond)
         kept_dts = {r["dt"] for r in kept.select("dt").distinct().collect()}
         _overwrite_partitions(kept, "dt", self.samples_path, set(affected_dts) - kept_dts)

@@ -68,17 +68,23 @@ def labels_string_sql(col_name: str) -> str:
     )
 
 
-def labels_map_col(labels_str_col: Column) -> Column:
-    """Inverse of :func:`labels_string_col` (JVM-side).
+def labels_map_sql(col_name: str) -> str:
+    """Inverse of :func:`labels_string_sql`, as SQL text.
 
     Used to carry a map-typed labels column THROUGH a groupBy as part
     of the group key: ``first(map)`` in an aggregate forces Spark into
     SortAggregate (two extra sorts per aggregation), while a string
     group key keeps hash aggregation — measured on every agg path.
     """
-    return F.when(
-        F.length(labels_str_col) == 0, F.create_map().cast("map<string,string>")
-    ).otherwise(F.str_to_map(labels_str_col, F.lit(","), F.lit("=")))
+    return (
+        "CASE WHEN length(`%s`) = 0 THEN CAST(map() AS MAP<STRING,STRING>) "
+        "ELSE str_to_map(`%s`, ',', '=') END" % (col_name, col_name)
+    )
+
+
+def labels_map_col(col_name: str) -> Column:
+    """:func:`labels_map_sql` of the named column, as a Column."""
+    return F.expr(labels_map_sql(col_name))
 
 
 def series_id_sql(name_col: str = "name", labels_col: str = "labels") -> str:

@@ -8,8 +8,9 @@ dependencies (ref: pkg/aggregate/aggregate.go:151-173,
 pkg/pquerier/select.go:447-494). ``*_all`` suffixes request
 cross-series aggregation (ref: pkg/pquerier/types.go:64-71).
 
-All expressions are built-in Spark SQL functions — JVM-side, inside
-whole-stage codegen, with map-side partial aggregation for free.
+All expressions are SQL text over built-in Spark SQL functions —
+parsed JVM-side in one call, run inside whole-stage codegen, with
+map-side partial aggregation for free.
 stddev/stdvar are computed from (count, sum, sqr) with the reference's
 exact formula rather than Spark's ``stddev`` so results bit-match the
 reference/oracle independent of per-partition association order.
@@ -84,60 +85,70 @@ def required_raw(funcs: list[str]) -> list[str]:
     return [r for r in RAW_AGGREGATES if r in need]
 
 
-def raw_agg_exprs(
+def raw_agg_sql(
     raws: list[str],
     value_col: str = "value",
     ts_col: str = "ts",
-    count_presence: Column | None = None,
-) -> list[Column]:
-    """Spark aggregate expressions for the raw aggregate set.
+    count_presence: str | None = None,
+) -> list[str]:
+    """SQL aggregate expressions (``<agg> AS <name>``) for the raw
+    aggregate set.
 
     ``last`` = value at max ts within the group (ref:
     pkg/aggregate/functions.go:107-128 LastAggregate keeps the
-    latest-time value). ``count_presence``: optional boolean column
-    counted instead of non-null ``value`` — lets ``count`` cover
-    variant (non-float) samples, which the reference's count
+    latest-time value). ``count_presence``: optional boolean SQL
+    predicate counted instead of non-null ``value`` — lets ``count``
+    cover variant (non-float) samples, which the reference's count
     aggregation includes (ref: pqueriertest/variant_type_query_
     integration_test.go:177-245 TestCountAggregationForVariantType);
     the numeric aggregates still skip nulls, so variant rows are
     transparent to them.
     """
-    v, t = F.col(value_col), F.col(ts_col)
-    cnt = F.count(F.when(count_presence, True)) if count_presence is not None else F.count(v)
+    v, t = f"`{value_col}`", f"`{ts_col}`"
+    cnt = f"count(CASE WHEN {count_presence} THEN true END)" if count_presence else f"count({v})"
     exprs = {
         "count": cnt,
-        "sum": F.sum(v),
-        "sqr": F.sum(v * v),
-        "min": F.min(v),
-        "max": F.max(v),
-        "last": F.max_by(v, t),
+        "sum": f"sum({v})",
+        "sqr": f"sum({v} * {v})",
+        "min": f"min({v})",
+        "max": f"max({v})",
+        "last": f"max_by({v}, {t})",
     }
-    return [exprs[r].alias(r) for r in raws]
+    return [f"{exprs[r]} AS `{r}`" for r in raws]
 
 
-def derived_col(func: str, step_ms: int | None = None) -> Column:
-    """Expression for a derived aggregate over raw agg columns.
+def raw_agg_exprs(raws: list[str], value_col: str = "value", ts_col: str = "ts") -> list[Column]:
+    """:func:`raw_agg_sql` as Columns."""
+    return [F.expr(e) for e in raw_agg_sql(raws, value_col, ts_col)]
+
+
+def derived_sql(func: str) -> str:
+    """SQL expression for a derived aggregate over raw agg columns.
 
     - avg = sum/count (ref: pkg/aggregate/aggregate.go:363-370)
     - stdvar = (n·Σv²−(Σv)²)/(n(n−1)), stddev = sqrt(stdvar)
       (ref: pkg/aggregate/aggregate.go:371-388 — sample formula)
-    - rate is bucket-to-bucket and handled in the querier (needs a
-      window over buckets; ref: pkg/aggregate/iterator.go:327-334)
+    - rate is bucket-to-bucket (:func:`rate_sql`; needs a window over
+      buckets; ref: pkg/aggregate/iterator.go:327-334)
     """
-    n, s, q = F.col("count"), F.col("sum"), F.col("sqr")
+    var = "(`count` * `sqr` - `sum` * `sum`) / (`count` * (`count` - 1))"
     if func == "avg":
-        return s / n
+        return "`sum` / `count`"
     if func == "stdvar":
-        return F.when(n > 1, (n * q - s * s) / (n * (n - 1)))
+        return f"CASE WHEN `count` > 1 THEN {var} END"
     if func == "stddev":
-        return F.when(n > 1, F.sqrt((n * q - s * s) / (n * (n - 1))))
+        return f"CASE WHEN `count` > 1 THEN sqrt({var}) END"
     raise BadRequest(f"not a derived aggregate: {func}")
 
 
-def rate_col(last_col: Column, prev_last_col: Column, step_ms: int) -> Column:
-    """rate = (last[i] − last[i−1]) / (step/1000) per-second delta.
+def rate_sql(step_ms: int, partition_by: list[str]) -> str:
+    """rate = (last[i] − last[i−1]) / (step/1000) per-second delta, over
+    each series' (or group's) buckets in time order.
 
     Literal replication of the reference's rate (bucket-to-bucket last
     delta, not Prometheus rate; ref: pkg/aggregate/iterator.go:327-334).
     """
-    return (last_col - prev_last_col) / F.lit(step_ms / 1000.0)
+    keys = ", ".join(f"`{k}`" for k in partition_by)
+    return (
+        f"(`last` - lag(`last`) OVER (PARTITION BY {keys} ORDER BY `t`)) / {step_ms / 1000.0!r}D"
+    )

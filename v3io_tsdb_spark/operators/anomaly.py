@@ -37,7 +37,7 @@ def bucket_zscores(
     trailing variance, get null ``z`` (no verdict, not z=0). Sample
     stddev (n−1) matches SQL ``stddev_samp``.
     """
-    b = wall_bucket(F.col(ts_col), step_ms)
+    b = wall_bucket(ts_col, step_ms)
     counts = df.groupBy(*series_cols, b.alias("t")).agg(
         F.count(ts_col).alias("n")
     )
@@ -171,7 +171,7 @@ def trailing_hampel(
     breaks hash-level oracle comparison; nullable ints coerce to
     float64+NaN identically everywhere.
     """
-    b = wall_bucket(F.col(ts_col), step_ms)
+    b = wall_bucket(ts_col, step_ms)
     counts = df.groupBy(*series_cols, b.alias("t")).agg(
         F.count(ts_col).alias("n")
     )

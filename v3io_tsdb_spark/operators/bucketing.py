@@ -26,42 +26,47 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def tumbling_bucket(ts_col: Column, from_ms: int, step_ms: int) -> Column:
-    """from-anchored floor bucket time (ms) for a sample timestamp."""
-    return (F.floor((ts_col - F.lit(from_ms)) / F.lit(step_ms)) * F.lit(step_ms) + F.lit(from_ms)).cast("long")
+def tumbling_bucket_sql(ts: str, from_ms: int, step_ms: int) -> str:
+    """from-anchored floor bucket time (ms) of the SQL expression ``ts``."""
+    return f"CAST(floor(({ts} - {from_ms}) / {step_ms}) * {step_ms} + {from_ms} AS BIGINT)"
 
 
-def wall_bucket(ts_col: Column, gran_ms: int) -> Column:
-    """Wall-aligned rollup bucket time (ms)."""
-    return (F.floor(ts_col / F.lit(gran_ms)) * F.lit(gran_ms)).cast("long")
+def tumbling_bucket(ts_col: str, from_ms: int, step_ms: int) -> Column:
+    """:func:`tumbling_bucket_sql` of the named column, as a Column."""
+    return F.expr(tumbling_bucket_sql(f"`{ts_col}`", from_ms, step_ms))
 
 
-def sliding_bucket_ids(
-    ts_col: Column, from_ms: int, to_ms: int, step_ms: int, window_ms: int
-) -> Column:
-    """Array of bucket times (ms) a sample contributes to under an
-    aggregation window; feed to ``explode``.
+def wall_bucket(ts_col: str, gran_ms: int) -> Column:
+    """Wall-aligned rollup bucket time (ms) of the named column."""
+    return F.expr(f"CAST(floor(`{ts_col}` / {gran_ms}) * {gran_ms} AS BIGINT)")
+
+
+def sliding_buckets_sql(rows: str, ts: str, from_ms: int, to_ms: int, step_ms: int, window_ms: int) -> str:
+    """SQL of ``rows`` (a SELECT) exploded to one row per bucket time
+    ``t`` its timestamp expression ``ts`` contributes to under an
+    aggregation window. The first and last cell index are computed once
+    per row, as ``_kf``/``_kl``, and the bucket array reads them.
 
     k_first = ceil((t-from)/step) — the right-aligned cell.
     window >  step: k_last = floor((t-from+window)/step)   (closed [b-w, b])
     window <= step: contributes to k_first iff t >= from + k_first*step - window.
     Buckets outside [from, to] are clipped.
     """
-    rel = ts_col - F.lit(from_ms)
-    k_first = F.ceil(rel / F.lit(step_ms)).cast("long")
+    rel = f"({ts} - {from_ms})"
+    k_first = f"CAST(ceil({rel} / {step_ms}) AS BIGINT)"
     if window_ms > step_ms:
-        k_last = F.floor((rel + F.lit(window_ms)) / F.lit(step_ms)).cast("long")
+        k_last = f"CAST(floor(({rel} + {window_ms}) / {step_ms}) AS BIGINT)"
     else:
-        ok = rel >= (k_first * F.lit(step_ms) - F.lit(window_ms))
-        k_last = F.when(ok, k_first).otherwise(k_first - 1)
+        ok = f"{rel} >= ({k_first} * {step_ms} - {window_ms})"
+        k_last = f"CASE WHEN {ok} THEN {k_first} ELSE {k_first} - 1 END"
     k_max = (to_ms - from_ms) // step_ms
-    k_first = F.greatest(k_first, F.lit(0))
-    k_last = F.least(k_last, F.lit(int(k_max)))
-    buckets = F.when(
-        k_last >= k_first,
-        F.transform(
-            F.sequence(k_first, k_last),
-            lambda k: (k * F.lit(step_ms) + F.lit(from_ms)).cast("long"),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    return buckets
+    bounds = f"greatest({k_first}, 0) AS _kf, least({k_last}, {int(k_max)}) AS _kl"
+    buckets = (
+        f"CASE WHEN _kl >= _kf THEN "
+        f"transform(sequence(_kf, _kl), k -> CAST(k * {step_ms} + {from_ms} AS BIGINT)) "
+        f"ELSE CAST(array() AS ARRAY<BIGINT>) END"
+    )
+    return (
+        f"SELECT *, explode(_buckets) AS t FROM (SELECT *, {buckets} AS _buckets "
+        f"FROM (SELECT *, {bounds} FROM ({rows})))"
+    )

@@ -31,7 +31,7 @@ def retention_cohorts(
     """Rows: (cohort_week, week_offset, n_users) — ``week_offset`` 0 is
     the cohort's own week, so its n_users is the cohort size."""
     active = df.select(
-        user_col, wall_bucket(F.col(ts_col), week_ms).alias("_week")
+        user_col, wall_bucket(ts_col, week_ms).alias("_week")
     ).distinct()
     w = Window.partitionBy(user_col)
     return (
@@ -64,7 +64,7 @@ def new_vs_returning(
     """
     ub = df.select(
         F.col(user_col).alias("_u"),
-        wall_bucket(F.col(ts_col), step_ms).alias("t"),
+        wall_bucket(ts_col, step_ms).alias("t"),
     ).distinct()
     first = F.min("t").over(Window.partitionBy("_u"))
     scored = ub.withColumn("_is_new", (F.col("t") == first).cast("long"))
@@ -228,7 +228,7 @@ def active_users_rolling(
 
     ub = df.select(
         F.col(user_col).alias("u"),
-        tumbling_bucket(F.col(ts_col), 0, step_ms).alias("b"),
+        tumbling_bucket(ts_col, 0, step_ms).alias("b"),
     ).distinct()
     dau = ub.groupBy("b").agg(F.count_distinct("u").cast("long").alias("dau"))
     contrib = ub.select(
@@ -366,7 +366,7 @@ def cohort_revenue(
     eps = 1e-9
     uw = df.groupBy(
         F.col(user_col).alias("_u"),
-        wall_bucket(F.col(ts_col), week_ms).alias("_week"),
+        wall_bucket(ts_col, week_ms).alias("_week"),
     ).agg(F.sum(value_col).alias("_v"))
     w = Window.partitionBy("_u")
     return (

@@ -47,7 +47,7 @@ def counter_resets_changes(
     out = df.withColumn(
         "_reset", (prev.isNotNull() & (v < prev)).cast("long")
     ).withColumn("_change", (prev.isNotNull() & (v != prev)).cast("long"))
-    t = tumbling_bucket(F.col(ts_col), from_ms, step_ms)
+    t = tumbling_bucket(ts_col, from_ms, step_ms)
     return (
         out.groupBy(*series_cols, t.alias("t"))
         .agg(
@@ -95,7 +95,7 @@ def extrapolated_increase(
     bucket-bounded and the aggregate reuses the partitioning. All the
     extrapolation arithmetic runs on the count-sized aggregate output.
     """
-    t = tumbling_bucket(F.col(ts_col), from_ms, step_ms)
+    t = tumbling_bucket(ts_col, from_ms, step_ms)
     b = df.withColumn("_b", t)
     w = Window.partitionBy(*series_cols, "_b").orderBy(ts_col, value_col)
     prev_v = F.lag(value_col).over(w)
@@ -167,7 +167,7 @@ def irate_idelta(
     the aggregate reuses the partitioning. Ties in ``ts_col`` are
     broken by value for a deterministic lag order.
     """
-    t = tumbling_bucket(F.col(ts_col), from_ms, step_ms)
+    t = tumbling_bucket(ts_col, from_ms, step_ms)
     b = df.withColumn("_b", t)
     w = Window.partitionBy(*series_cols, "_b").orderBy(ts_col, value_col)
     prev_v = F.lag(value_col).over(w)
@@ -223,7 +223,7 @@ def slo_burn_rate(
     metric_binop single-scan rule); both trailing windows then run on
     that |buckets|-sized grid. Output is |buckets| rows.
     """
-    t = tumbling_bucket(F.col(ts_col), from_ms, step_ms)
+    t = tumbling_bucket(ts_col, from_ms, step_ms)
     is_err = (F.col(metric_col) == error_name).cast("long")
     grid = df.groupBy(t.alias("t")).agg(
         F.sum(is_err).alias("_err"), F.count("*").alias("_tot")

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from v3io_tsdb_spark.labels import labels_string_col
+from v3io_tsdb_spark.labels import labels_string_sql
+from v3io_tsdb_spark.sqltext import ident, lit, views
 
 
 def to_wide_frame(
@@ -37,18 +38,38 @@ def to_wide_frame(
     its implicit distinct-values pre-pass (one whole extra job/shuffle
     over the input at scale).
     """
-    key = F.col(column_key)
+    key = ident(column_key)
     if include_labels and "labels" in long_df.columns:
-        key = F.concat_ws("{", key, labels_string_col(F.col("labels")))
-    df = long_df.withColumn("_ckey", key)
-    grouped = df.groupBy(F.col(time_col).alias(time_col))
-    pivoted = grouped.pivot("_ckey", values) if values else grouped.pivot("_ckey")
-    wide = pivoted.agg(F.first(value_col, ignorenulls=True)).orderBy(time_col)
-    if nan_fill:
-        value_cols = [c for c in wide.columns if c != time_col]
-        numeric = [c for c in value_cols if dict(wide.dtypes).get(c) == "double"]
-        wide = wide.fillna(float("nan"), subset=numeric)
+        key = f"concat_ws('{{', {key}, {labels_string_sql('labels')})"
+    with views(long_df) as (src,):
+        cells = f"SELECT {ident(time_col)}, {key} AS _ckey, {ident(value_col)} AS value FROM {src}"
+        wide = pivot_first(long_df.sparkSession, cells, [ident(time_col)], values or None)
+    if nan_fill and dict(long_df.dtypes)[value_col] == "double":
+        wide = wide.selectExpr(*[
+            ident(c) if c == time_col else f"coalesce({ident(c)}, CAST('NaN' AS DOUBLE)) AS {ident(c)}"
+            for c in wide.columns
+        ])
     return wide
+
+
+def pivot_first(spark, cells: str, rows: list, keys: list | None) -> DataFrame:
+    """Pivot ``cells`` — SQL of rows with the columns ``rows``, ``_ckey``
+    and ``value`` — to one row per ``rows`` value, ordered by it, and
+    one column per pivot key holding the first non-null ``value``.
+    ``keys`` None: every ``_ckey`` value, in Spark's pivot order (the
+    distinct-values pass a pivot without keys runs)."""
+    row_key = ", ".join(rows)
+    if keys is None:
+        keys = sorted(
+            (r[0] for r in spark.sql(f"SELECT DISTINCT _ckey FROM ({cells})").collect()),
+            key=lambda k: (k is not None, k),
+        )
+    if keys:
+        pivot = ", ".join(f"{lit(k)} AS {ident('null' if k is None else str(k))}" for k in keys)
+        wide = f"SELECT * FROM ({cells}) PIVOT (first(value, true) FOR _ckey IN ({pivot}))"
+    else:  # no cells at all: no value columns
+        wide = f"SELECT DISTINCT {row_key} FROM ({cells})"
+    return spark.sql(f"{wide} ORDER BY {row_key}")
 
 
 def to_wide_frame_mixed(
@@ -116,7 +137,7 @@ def metric_binop(
     """
     from v3io_tsdb_spark.operators.bucketing import tumbling_bucket
 
-    t = tumbling_bucket(F.col(ts_col), from_ms, step_ms)
+    t = tumbling_bucket(ts_col, from_ms, step_ms)
     v = F.col(value_col)
     name = F.col(metric_col)
     fn = getattr(F, agg)
@@ -138,26 +159,25 @@ def metric_binop(
     )
 
 
-def to_series(agg_df: DataFrame, funcs: list, key_cols: list | None = None) -> DataFrame:
-    """Melt a wide-by-function aggregate result into the reference's
-    SeriesSet shape: one row per (series, Aggregate, t) with an
-    ``aggregate`` label column (ref: pkg/pquerier/series.go:33-63 —
-    one series per aggregate with the "Aggregate" label attached).
+def to_series_sql(src: str, columns: list, funcs: list) -> str:
+    """SQL melting the wide-by-function aggregate result ``src`` (with
+    ``columns``) into the reference's SeriesSet shape: one row per
+    (series, Aggregate, t) with an ``aggregate`` label column (ref:
+    pkg/pquerier/series.go:33-63 — one series per aggregate with the
+    "Aggregate" label attached).
     """
-    keys = key_cols if key_cols is not None else [
-        c for c in agg_df.columns if c not in funcs and c != "t"
-    ]
+    keys = [f"`{c}`" for c in columns if c not in funcs and c != "t"]
     # Every stacked value is cast to DOUBLE: ``stack`` requires uniform
     # types per output column, and a mixed request like sum (DOUBLE) +
     # count (BIGINT) would otherwise fail DATATYPE_MISMATCH. Prom sample
     # values are float64 anyway (ref: pkg/pquerier/series.go:89-104).
-    stack = F.expr(
-        "stack({n}, {args}) as (aggregate, value)".format(
-            n=len(funcs),
-            args=", ".join(f"'{f}', CAST(`{f}` AS DOUBLE)" for f in funcs),
-        )
+    stack = "stack({n}, {args}) AS (aggregate, value)".format(
+        n=len(funcs), args=", ".join(f"'{f}', CAST(`{f}` AS DOUBLE)" for f in funcs),
     )
-    return agg_df.select(*keys, "t", stack).where(F.col("value").isNotNull())
+    return (
+        f"SELECT * FROM (SELECT {', '.join(keys + ['t', stack])} FROM {src}) "
+        f"WHERE value IS NOT NULL"
+    )
 
 
 def topk_series_per_bucket(
@@ -193,7 +213,7 @@ def topk_series_per_bucket(
 
     grid = df.groupBy(
         *series_cols,
-        tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+        tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
     ).agg(F.round(F.avg(value_col) + 1e-9, 6).alias("x"))
     order = F.col("x").asc() if bottom else F.col("x").desc()
     w = Window.partitionBy("t").orderBy(

@@ -44,7 +44,7 @@ def gap_report(
             F.max("_gap").alias("max_gap_ms"),
             F.min(ts_col).alias("_first"),
             F.max(ts_col).alias("_last"),
-            F.count_distinct(wall_bucket(F.col(ts_col), step_ms)).alias("present"),
+            F.count_distinct(wall_bucket(ts_col, step_ms)).alias("present"),
         )
     )
     expected = (

@@ -25,17 +25,18 @@ partition's last point, collector.go:262-267) is automatic here: the
 samples table is one logical DataFrame, so window functions see the
 whole series.
 
-Implementation: union the (tiny) per-series grid with the sample rows
-and resolve prev/next via two window functions partitioned by
-``series_id`` — one shuffle, sorted once, no Python in the loop.
+Implementation: one SQL statement per call (see ``align_to_grid`` for
+its two physical strategies) — one shuffle, no Python in the loop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark.errors import BadRequest
+from v3io_tsdb_spark.labels import labels_map_sql, labels_string_sql
+from v3io_tsdb_spark.sqltext import views
 
 INTERPOLATORS = ("none", "nan", "prev_val", "prev", "next_val", "next", "linear", "lin")
 
@@ -113,178 +114,158 @@ def align_to_grid(
     )
 
 
+def _names(cols) -> str:
+    return ", ".join(f"`{c}`" for c in cols)
+
+
+def _map_keys(samples, keys):
+    """(hashable keys, map-typed keys) of ``keys``: a map-typed key
+    (labels) cannot be grouped on, so it travels through each group key
+    as its canonical string (``_mstr_<name>``) and is rebuilt after —
+    first(map) would force SortAggregate (two extra sorts) instead of
+    HashAggregate."""
+    map_cols = [
+        f.name for f in samples.schema.fields
+        if f.dataType.typeName() == "map" and f.name in keys
+    ]
+    return [k for k in keys if k not in map_cols], map_cols
+
+
 def _align_exploded(
     samples, from_ms, to_ms, step_ms, interp, tolerance_ms, key_cols, ts_col, value_col
 ) -> DataFrame:
     keys = list(key_cols)
     n_cells = (to_ms - from_ms) // step_ms  # max cell index K
-    # The role-array algebra below is emitted as SQL STRINGS (one
-    # selectExpr payload): Column-by-Column construction of the same
-    # tree costs ~1,800 py4j round-trips ≈ 0.5 s of driver latency per
-    # build (measured on tsdb_interp_linear). Integer `/` in Spark SQL
-    # is double division exactly like Column `/`, so every floor /
-    # greatest / least lands on identical values.
+    # The whole operator is ONE SQL statement: Column-by-Column
+    # construction of the role-array tree alone cost ~1,800 py4j
+    # round-trips ≈ 0.5 s of build latency (measured on
+    # tsdb_interp_linear). Integer `/` in Spark SQL is double division
+    # exactly like Column `/`, so every floor / greatest / least lands
+    # on identical values.
     ET = "ARRAY<STRUCT<k: BIGINT, role: INT>>"
     a = f"(`{ts_col}` - {from_ms})"
 
+    def role(lo, hi, r):
+        return (
+            f"CASE WHEN {lo} <= {hi} THEN transform(sequence({lo}, {hi}), "
+            f"k -> named_struct('k', k, 'role', {r})) ELSE CAST(array() AS {ET}) END"
+        )
+
+    # each cell-index bound is computed once per sample, as a column
+    # (_nlo .. _phi), and the role arrays read those columns
     # cells this sample serves as NEXT neighbor (t <= ts, ts - t <= tol):
     # k ∈ [ceil((a - tol)/step), floor(a/step)]
-    next_lo = f"greatest(0, -CAST(floor(({tolerance_ms} - {a}) / {step_ms}) AS BIGINT))"
-    next_hi = f"least({n_cells}, CAST(floor({a} / {step_ms}) AS BIGINT))"
-    roles = (
-        f"CASE WHEN {next_lo} <= {next_hi} THEN "
-        f"transform(sequence({next_lo}, {next_hi}), "
-        f"k -> named_struct('k', k, 'role', 1)) "
-        f"ELSE CAST(array() AS {ET}) END"
-    )
+    bounds = [
+        f"greatest(0, -CAST(floor(({tolerance_ms} - {a}) / {step_ms}) AS BIGINT)) AS _nlo",
+        f"least({n_cells}, CAST(floor({a} / {step_ms}) AS BIGINT)) AS _nhi",
+    ]
+    roles = role("_nlo", "_nhi", 1)
     if interp == "linear":
         # cells this sample serves as PREV neighbor (t > ts, t - ts <= tol):
         # k ∈ [floor(a/step) + 1, floor((a + tol)/step)]
-        prev_lo = f"greatest(0, CAST(floor({a} / {step_ms}) AS BIGINT) + 1)"
-        prev_hi = f"least({n_cells}, CAST(floor(({a} + {tolerance_ms}) / {step_ms}) AS BIGINT))"
-        prev_roles = (
-            f"CASE WHEN {prev_lo} <= {prev_hi} THEN "
-            f"transform(sequence({prev_lo}, {prev_hi}), "
-            f"k -> named_struct('k', k, 'role', 0)) "
-            f"ELSE CAST(array() AS {ET}) END"
+        bounds += [
+            f"greatest(0, CAST(floor({a} / {step_ms}) AS BIGINT) + 1) AS _plo",
+            f"least({n_cells}, CAST(floor(({a} + {tolerance_ms}) / {step_ms}) AS BIGINT)) AS _phi",
+        ]
+        roles = f"concat({roles}, {role('_plo', '_phi', 0)})"
+        # the line between the neighbors, or the exact sample at t
+        value = (
+            "CASE WHEN _next_t = t THEN _next_v ELSE CASE WHEN _prev_t IS NOT NULL "
+            "AND _next_t IS NOT NULL THEN _prev_v + (_next_v - _prev_v) * (t - _prev_t) "
+            "/ (_next_t - _prev_t) END END"
         )
-        roles = f"concat({roles}, {prev_roles})"
+    else:
+        value = "_next_v"  # role bound already enforced the tolerance
 
-    # group on hashable keys; carry map-typed keys (labels) through the
-    # group key as canonical strings — first(map) would force
-    # SortAggregate (two extra sorts) instead of HashAggregate. The
-    # map→string conversion happens BELOW the explode (once per sample,
-    # not once per role row — a ×(2·tol/step) saving), and the map
-    # column itself never enters the exploded projection.
-    from v3io_tsdb_spark.labels import labels_map_col, labels_string_sql
-
-    map_cols = {
-        f.name for f in samples.schema.fields
-        if f.dataType.typeName() == "map" and f.name in keys
-    }
-    hash_keys = [k for k in keys if k not in map_cols]
-    exploded = samples.selectExpr(
-        *[f"`{k}`" for k in hash_keys],
-        *[f"{labels_string_sql(c)} AS `_mstr_{c}`" for c in map_cols],
-        f"`{ts_col}` AS _ts",
-        f"`{value_col}` AS _v",
-        f"explode({roles}) AS _r",
-    ).selectExpr(
-        *[f"`{k}`" for k in hash_keys],
-        *[f"`_mstr_{c}`" for c in map_cols],
-        "_ts", "_v", "_r.k AS _k", "_r.role AS _role",
-    )
-    cells = exploded.groupBy(*hash_keys, *[f"_mstr_{c}" for c in map_cols], "_k").agg(
-        F.expr("min(CASE WHEN _role = 1 THEN _ts END)").alias("_next_t"),
-        F.expr("min_by(_v, CASE WHEN _role = 1 THEN _ts END)").alias("_next_v"),
-        F.expr("max(CASE WHEN _role = 0 THEN _ts END)").alias("_prev_t"),
-        F.expr("max_by(_v, CASE WHEN _role = 0 THEN _ts END)").alias("_prev_v"),
-    )
-    for c in map_cols:
-        cells = cells.withColumn(c, labels_map_col(F.col(f"_mstr_{c}"))).drop(f"_mstr_{c}")
-    t = (F.lit(from_ms) + F.col("_k") * F.lit(step_ms)).cast("long")
-    cells = cells.withColumn("t", t)
-    next_t, next_v = F.col("_next_t"), F.col("_next_v")
-    prev_t, prev_v = F.col("_prev_t"), F.col("_prev_v")
-    if interp == "next_val":
-        value = next_v  # role bound already enforced the tolerance
-    else:  # linear
-        value = F.when(next_t == F.col("t"), next_v).otherwise(
-            F.when(
-                prev_t.isNotNull() & next_t.isNotNull(),
-                prev_v + (next_v - prev_v) * (F.col("t") - prev_t) / (next_t - prev_t),
-            )
-        )
-    return (
-        cells.where(next_t.isNotNull())  # Seek must succeed
-        .withColumn("value", value)
-        .where(F.col("value").isNotNull())
-        .select(*keys, "t", "value")
-    )
+    # The map→string conversion happens BELOW the explode (once per
+    # sample, not once per role row — a ×(2·tol/step) saving), and the
+    # map column itself never enters the exploded projection.
+    hash_keys, map_cols = _map_keys(samples, keys)
+    hk = [f"`{k}`" for k in hash_keys]
+    mstr = [f"`_mstr_{c}`" for c in map_cols]
+    to_str = [f"{labels_string_sql(c)} AS `_mstr_{c}`" for c in map_cols]
+    to_map = [f"{labels_map_sql('_mstr_' + c)} AS `{c}`" for c in map_cols]
+    group = ", ".join(hk + mstr + ["_k"])
+    with views(samples) as (src,):
+        return samples.sparkSession.sql(f"""
+            SELECT {_names(keys)}, t, value FROM (
+              SELECT *, {value} AS value FROM (
+                SELECT {", ".join(hk + ["_next_t", "_next_v", "_prev_t", "_prev_v"] + to_map)},
+                  CAST({from_ms} + _k * {step_ms} AS BIGINT) AS t
+                FROM (
+                  SELECT {group},
+                    min(CASE WHEN _role = 1 THEN _ts END) AS _next_t,
+                    min_by(_v, CASE WHEN _role = 1 THEN _ts END) AS _next_v,
+                    max(CASE WHEN _role = 0 THEN _ts END) AS _prev_t,
+                    max_by(_v, CASE WHEN _role = 0 THEN _ts END) AS _prev_v
+                  FROM (
+                    SELECT {", ".join(hk + mstr)}, _ts, _v, _r.k AS _k, _r.role AS _role FROM (
+                      SELECT {", ".join(hk + mstr)}, _ts, _v, explode({roles}) AS _r FROM (
+                        SELECT {", ".join(hk + to_str)}, `{ts_col}` AS _ts, `{value_col}` AS _v,
+                          {", ".join(bounds)}
+                        FROM {src})))
+                  GROUP BY {group}))
+              WHERE _next_t IS NOT NULL)
+            WHERE value IS NOT NULL""")
 
 
 def _align_windowed(
     samples, from_ms, to_ms, step_ms, interp, tolerance_ms, key_cols, ts_col, value_col
 ) -> DataFrame:
-
     keys = list(key_cols)
-    pts = samples.select(
-        *keys,
-        F.col(ts_col).alias("t"),
-        F.col(value_col).alias("_v"),
-        F.lit(1).alias("_is_pt"),
-    )
-    # Distinct series list. Map-typed key columns (labels) can't be
-    # grouped/distinct-ed in Spark — serialize them into the group key
-    # (hash-aggregate friendly) and rebuild the maps after.
-    from v3io_tsdb_spark.labels import labels_map_col, labels_string_col
-
-    map_cols = {f.name for f in samples.schema.fields if f.dataType.typeName() == "map" and f.name in keys}
-    hash_keys = [k for k in keys if k not in map_cols]
-    if map_cols:
-        ser = samples
-        for c in map_cols:
-            ser = ser.withColumn(f"_mstr_{c}", labels_string_col(F.col(c)))
-        series = ser.select(*hash_keys, *[f"_mstr_{c}" for c in map_cols]).distinct()
-        for c in map_cols:
-            series = series.withColumn(c, labels_map_col(F.col(f"_mstr_{c}"))).drop(f"_mstr_{c}")
-    else:
-        series = samples.select(*keys).distinct()
-    grid = (
-        series
-        .select(
-            *keys,
-            F.explode(
-                F.sequence(F.lit(from_ms), F.lit(to_ms), F.lit(step_ms))
-            ).alias("t"),
-            F.lit(None).cast("double").alias("_v"),
-            F.lit(0).alias("_is_pt"),
+    kl = _names(keys)
+    hash_keys, map_cols = _map_keys(samples, keys)
+    if interp == "none":
+        interped = "_next_v"
+    elif interp == "nan":
+        interped = "CAST('NaN' AS DOUBLE)"
+    elif interp == "prev_val":
+        interped = f"CASE WHEN _prev_t IS NOT NULL AND (t - _prev_t) <= {tolerance_ms} THEN _prev_v END"
+    elif interp == "next_val":
+        interped = f"CASE WHEN (_next_t - t) <= {tolerance_ms} THEN _next_v END"
+    else:  # linear
+        interped = (
+            f"CASE WHEN _prev_t IS NOT NULL AND (t - _prev_t) <= {tolerance_ms} "
+            f"AND (_next_t - t) <= {tolerance_ms} "
+            f"THEN _prev_v + (_next_v - _prev_v) * (t - _prev_t) / (_next_t - _prev_t) END"
         )
-    )
-    u = pts.unionByName(grid)
-
+    pt_t = "CASE WHEN _is_pt = 1 THEN t END"
     # At equal t the grid row sorts before the sample row, so "prev"
     # (frame ending before current) excludes a same-time sample while
     # "next" (frame from current on) includes it — matching Seek/PeakBack.
-    order = [F.col("t"), F.col("_is_pt")]
-    w_prev = Window.partitionBy("series_id").orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
-    w_next = Window.partitionBy("series_id").orderBy(*order).rowsBetween(0, Window.unboundedFollowing)
-
-    pt_t = F.when(F.col("_is_pt") == 1, F.col("t"))
-    cells = (
-        u.withColumn("_prev_t", F.last(pt_t, ignorenulls=True).over(w_prev))
-        .withColumn("_prev_v", F.last("_v", ignorenulls=True).over(w_prev))
-        .withColumn("_next_t", F.first(pt_t, ignorenulls=True).over(w_next))
-        .withColumn("_next_v", F.first("_v", ignorenulls=True).over(w_next))
-        .where(F.col("_is_pt") == 0)
-    )
-
-    t, tol = F.col("t"), F.lit(tolerance_ms)
-    prev_t, prev_v = F.col("_prev_t"), F.col("_prev_v")
-    next_t, next_v = F.col("_next_t"), F.col("_next_v")
-
-    if interp == "none":
-        interped: Column = next_v
-    elif interp == "nan":
-        interped = F.lit(float("nan"))
-    elif interp == "prev_val":
-        interped = F.when(prev_t.isNotNull() & ((t - prev_t) <= tol), prev_v)
-    elif interp == "next_val":
-        interped = F.when((next_t - t) <= tol, next_v)
-    else:  # linear
-        interped = F.when(
-            prev_t.isNotNull() & ((t - prev_t) <= tol) & ((next_t - t) <= tol),
-            prev_v + (next_v - prev_v) * (t - prev_t) / (next_t - prev_t),
-        )
-
-    value = F.when(next_t == t, next_v).otherwise(interped)
-    out = (
-        cells.where(next_t.isNotNull())  # Seek must succeed
-        .withColumn("value", value)
-        .where(F.col("value").isNotNull())
-        .select(*keys, "t", "value")
-    )
-    return out
+    order = "PARTITION BY series_id ORDER BY t, _is_pt"
+    with views(samples) as (src,):
+        # the distinct series list; map-typed keys travel as strings
+        if map_cols:
+            hk = [f"`{k}`" for k in hash_keys]
+            to_str = [f"{labels_string_sql(c)} AS `_mstr_{c}`" for c in map_cols]
+            to_map = [f"{labels_map_sql('_mstr_' + c)} AS `{c}`" for c in map_cols]
+            series = (
+                f"SELECT {', '.join(hk + to_map)} "
+                f"FROM (SELECT DISTINCT {', '.join(hk + to_str)} FROM {src})"
+            )
+        else:
+            series = f"SELECT DISTINCT {kl} FROM {src}"
+        return samples.sparkSession.sql(f"""
+            SELECT {kl}, t, value FROM (
+              SELECT *, CASE WHEN _next_t = t THEN _next_v ELSE {interped} END AS value FROM (
+                SELECT * FROM (
+                  SELECT *,
+                    last({pt_t}, true) OVER w_prev AS _prev_t,
+                    last(_v, true) OVER w_prev AS _prev_v,
+                    first({pt_t}, true) OVER w_next AS _next_t,
+                    first(_v, true) OVER w_next AS _next_v
+                  FROM (
+                    SELECT {kl}, `{ts_col}` AS t, `{value_col}` AS _v, 1 AS _is_pt FROM {src}
+                    UNION ALL
+                    SELECT {kl}, explode(sequence({from_ms}, {to_ms}, {step_ms})) AS t,
+                      CAST(NULL AS DOUBLE) AS _v, 0 AS _is_pt
+                    FROM ({series}))
+                  WINDOW w_prev AS ({order} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                    w_next AS ({order} ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+                WHERE _is_pt = 0)
+              WHERE _next_t IS NOT NULL)
+            WHERE value IS NOT NULL""")
 
 
 def minmax_decimate(

@@ -564,7 +564,7 @@ def seasonal_decompose(
     from v3io_tsdb_spark.operators.bucketing import tumbling_bucket
 
     half = period // 2
-    t = tumbling_bucket(F.col(ts_col), from_ms, step_ms)
+    t = tumbling_bucket(ts_col, from_ms, step_ms)
     grid = df.groupBy(*series_cols, t.alias("t")).agg(
         F.avg(value_col).alias("value")
     )
@@ -633,7 +633,7 @@ def metric_corr_matrix(
 
     grid = df.groupBy(
         F.col(metric_col).alias("_m"),
-        tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+        tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
     ).agg(F.avg(value_col).alias("_v"))
     a = grid.select(
         F.col("_m").alias("name_a"), F.col("t"), F.col("_v").alias("_va")
@@ -687,7 +687,7 @@ def bollinger_bands(
 
     grid = df.groupBy(
         *series_cols,
-        tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+        tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
     ).agg(F.avg(value_col).alias("value"))
     w = (
         Window.partitionBy(*series_cols)
@@ -754,7 +754,7 @@ def offset_compare(
 
     grid = df.groupBy(
         *series_cols,
-        tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+        tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
     ).agg(F.avg(value_col).alias("value"))
     off = offset_buckets * step_ms
     w = Window.partitionBy(*series_cols).orderBy("t").rangeBetween(-off, -off)
@@ -858,7 +858,7 @@ def holt_winters(
         )
         .groupBy(
             *series_cols,
-            tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+            tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
         )
         .agg(F.round(F.avg(value_col) + 1e-9, 6).alias("x"))
     )
@@ -966,7 +966,7 @@ def drawdown(
 
     grid = df.groupBy(
         *series_cols,
-        tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+        tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
     ).agg(F.round(F.avg(value_col) + 1e-9, 6).alias("x"))
     w = (
         Window.partitionBy(*series_cols)
@@ -1022,7 +1022,7 @@ def predict_linear(
 
     grid = df.groupBy(
         *series_cols,
-        tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+        tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
     ).agg(F.round(F.avg(value_col) + 1e-9, 6).alias("x"))
     i = ((F.col("t") - F.lit(from_ms)) / F.lit(step_ms)).cast("long")
     g = grid.withColumn("_i", i)
@@ -1129,7 +1129,7 @@ def hw_anomaly(
         )
         .groupBy(
             *series_cols,
-            tumbling_bucket(F.col(ts_col), from_ms, step_ms).alias("t"),
+            tumbling_bucket(ts_col, from_ms, step_ms).alias("t"),
         )
         .agg(F.round(F.avg(value_col) + eps, 6).alias("x"))
         # consumed by four downstream branches: cut the data-sized

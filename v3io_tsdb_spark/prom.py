@@ -22,11 +22,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, replace
 
-from pyspark.sql import functions as F
-
 from v3io_tsdb_spark.operators import aggregates as agg
-from v3io_tsdb_spark.operators.frames import to_series
+from v3io_tsdb_spark.operators.frames import to_series_sql
 from v3io_tsdb_spark.querier import Querier, SelectParams
+from v3io_tsdb_spark.sqltext import views
 from v3io_tsdb_spark.timeutils import str2duration_ms
 
 AGGREGATE_LABEL = "Aggregate"  # ref: pkg/aggregate/aggregate.go:35
@@ -87,22 +86,23 @@ def select_series(
     cols = res.columns
 
     present = [f for f in funcs if f in cols]
-    if present:
-        melted = to_series(res, present)
-    else:
-        # raw / downsample results (including DisableClientAggr's
-        # force-raw fallback, where requested functions go unanswered)
-        melted = res
+    with views(res) as (src,):
+        if present:
+            melted = to_series_sql(src, cols, present)
+            cols = [c for c in cols if c not in present] + ["aggregate", "value"]
+        else:
+            # raw / downsample results (including DisableClientAggr's
+            # force-raw fallback, where requested functions go unanswered)
+            melted = f"SELECT * FROM {src}"
+        kv = ", map_keys(labels) AS _lkeys, map_values(labels) AS _lvals" if "labels" in cols else ""
+        rows = querier.spark.sql(
+            f"SELECT *{kv} FROM ({melted}) ORDER BY t LIMIT {max_rows + 1}"
+        ).collect()
     _value_cols = ("value", "value_str", "value_bool", "value_int", "value_blob")
     label_cols = [
-        c for c in melted.columns
+        c for c in cols
         if c not in _value_cols + ("name", "t", "aggregate", "series_id", "labels")
     ]
-    if "labels" in melted.columns:
-        melted = melted.withColumn("_lkeys", F.map_keys("labels")).withColumn(
-            "_lvals", F.map_values("labels")
-        )
-    rows = melted.orderBy("t").limit(max_rows + 1).collect()
     if len(rows) > max_rows:
         raise ValueError(
             f"select_series result exceeds max_rows={max_rows}; narrow the "
@@ -111,17 +111,17 @@ def select_series(
 
     series: dict = {}
     for r in rows:
-        if "labels" in melted.columns:
+        if "labels" in cols:
             labels = dict(zip(r["_lkeys"] or [], r["_lvals"] or []))
         else:
             labels = {c: r[c] for c in label_cols if r[c] is not None}
         labels[METRIC_NAME_LABEL] = r["name"]
-        if show_aggregate_label and "aggregate" in melted.columns:
+        if show_aggregate_label and "aggregate" in cols:
             labels[AGGREGATE_LABEL] = r["aggregate"]
         key = tuple(sorted(labels.items()))
         val = None
         for vc in _value_cols:  # exactly one kind non-null per row
-            if vc in melted.columns and r[vc] is not None:
+            if vc in cols and r[vc] is not None:
                 val = r[vc]
                 break
         series.setdefault(key, []).append((r["t"], val))

@@ -13,6 +13,12 @@ Building a select runs no Spark job: the route is chosen first, then
 only the table it reads is opened, with its declared schema (a
 group-by without a names catalog still probes label existence).
 
+Every route is built from SQL text: the scan is one ``where`` over the
+opened table, and each later stage is one ``selectExpr`` or one
+``spark.sql`` statement over its input (``sqltext.views``). A Column
+tree costs one or more Py4J round trips per node; SQL text is parsed in
+the JVM in one call, so a build makes tens of round trips, not hundreds.
+
 Result shapes (long-format; see operators.frames.to_wide_frame for the
 columnar view):
 
@@ -27,30 +33,40 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from v3io_tsdb_spark import schema
 from v3io_tsdb_spark import rollup as ru
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest
-from v3io_tsdb_spark.labels import labels_map_col, labels_string_col, series_id_col
+from v3io_tsdb_spark.labels import labels_map_sql, labels_string_sql, series_id_col
 from v3io_tsdb_spark.operators import aggregates as agg
-from v3io_tsdb_spark.operators.bucketing import sliding_bucket_ids, tumbling_bucket
+from v3io_tsdb_spark.operators.bucketing import sliding_buckets_sql, tumbling_bucket_sql
 from v3io_tsdb_spark.operators.interpolate import align_to_grid
 from v3io_tsdb_spark.sql.filters import translate_filter
+from v3io_tsdb_spark.sqltext import ident, in_list, lit, views
 from v3io_tsdb_spark.timeutils import get_time_range, str2duration_ms
 
 
-def _group_keeping_labels(df: DataFrame, keys: list, aggs: list) -> DataFrame:
-    """groupBy that carries the ``labels`` map through as a serialized
-    group-key string (functionally dependent on series_id, so groups are
-    unchanged) instead of ``first(labels)`` — a map-typed aggregate
-    forces SortAggregate (two extra sorts); a string key keeps
-    HashAggregate."""
-    d = df.withColumn("_lstr", labels_string_col(F.col("labels")))
-    g = d.groupBy(*keys, "_lstr").agg(*aggs)
-    return g.withColumn("labels", labels_map_col(F.col("_lstr"))).drop("_lstr")
+def _group_keeping_labels(cells: str, keys: list, aggs: list) -> str:
+    """SQL of a GROUP BY ``keys`` over ``cells`` that carries the
+    ``labels`` map through as the serialized group key ``_lstr``
+    (functionally dependent on series_id, so groups are unchanged)
+    instead of ``first(labels)`` — a map-typed aggregate forces
+    SortAggregate (two extra sorts); a string key keeps HashAggregate.
+    ``labels_map_sql('_lstr')`` restores the map."""
+    k = ", ".join([*keys, "_lstr"])
+    return (
+        f"SELECT {k}, {', '.join(aggs)} FROM ("
+        f"SELECT *, {labels_string_sql('labels')} AS _lstr FROM ({cells})) GROUP BY {k}"
+    )
+
+
+def _date(ms: int) -> str:
+    """The session-time-zone date of ``ms`` (the zone ``dt``/``rdt`` are
+    written in), as constant SQL: the optimizer folds it to a DATE
+    literal, so it prunes partitions like one."""
+    return f"CAST(timestamp_millis({ms}) AS DATE)"
 
 
 @dataclass
@@ -157,12 +173,12 @@ class Querier:
         aggregate."""
         df = self.samples_df()
         if filter:
-            df = df.where(F.expr(translate_filter(filter)))
+            df = df.where(translate_filter(filter))
         if label_key == "__name__":
-            return df.select(F.col("name").alias("value")).distinct()
+            return df.selectExpr("name AS value").distinct()
         return (
-            df.select(F.col("labels")[label_key].alias("value"))
-            .where(F.col("value").isNotNull())
+            df.selectExpr(f"labels[{lit(label_key)}] AS value")
+            .where("value IS NOT NULL")
             .distinct()
         )
 
@@ -174,11 +190,8 @@ class Querier:
         explode the pruned labels-keys array, distinct, done."""
         df = self.samples_df()
         if filter:
-            df = df.where(F.expr(translate_filter(filter)))
-        return (
-            df.select(F.explode(F.map_keys(F.col("labels"))).alias("name"))
-            .distinct()
-        )
+            df = df.where(translate_filter(filter))
+        return df.selectExpr("explode(map_keys(labels)) AS name").distinct()
 
     def get_label_sets(self, metric: str | None = None, filter: str | None = None) -> DataFrame:
         """All distinct label sets, with the metric name carried as the
@@ -192,23 +205,14 @@ class Querier:
         partitions as a performance concession; here the distinct is a
         partial-aggregate over two pruned columns, so the exact full
         range costs less than the concession saved."""
-        from v3io_tsdb_spark.labels import labels_map_col, labels_string_col
-
         df = self.samples_df()
         if metric:
-            names = [m.strip() for m in metric.split(",") if m.strip()]
-            df = df.where(F.col("name").isin(names))
+            df = df.where(in_list("name", [m.strip() for m in metric.split(",") if m.strip()]))
         if filter:
-            df = df.where(F.expr(translate_filter(filter)))
-        sets = df.select(
-            "name", labels_string_col(F.col("labels")).alias("labels_str")
-        ).distinct()
-        return sets.withColumn(
-            "labels",
-            F.map_concat(
-                labels_map_col(F.col("labels_str")),
-                F.create_map(F.lit("__name__"), F.col("name")),
-            ),
+            df = df.where(translate_filter(filter))
+        sets = df.selectExpr("name", f"{labels_string_sql('labels')} AS labels_str").distinct()
+        return sets.selectExpr(
+            "*", f"map_concat({labels_map_sql('labels_str')}, map('__name__', name)) AS labels"
         )
 
     def select(self, params: SelectParams | None = None, **kwargs) -> DataFrame:
@@ -351,12 +355,13 @@ class Querier:
             for f in fs_req:
                 if f not in fs:
                     fs.append(f)
-        for f in funcs:
-            if f in wild:
-                continue
-            allowed = [m for m, fs in per.items() if f in fs]
-            res = res.withColumn(f, F.when(F.col("name").isin(allowed), F.col(f)))
-        return res
+        masked = {
+            f: in_list("name", [m for m, fs in per.items() if f in fs]) for f in funcs if f not in wild
+        }
+        return res.selectExpr(*[
+            f"CASE WHEN {masked[c]} THEN {ident(c)} END AS {ident(c)}" if c in masked else ident(c)
+            for c in res.columns
+        ])
 
     def _force_raw(
         self, params: SelectParams, funcs, cross_series: bool, step_ms: int, window_ms: int
@@ -384,33 +389,32 @@ class Querier:
             raise BadRequest("overlapping windows require aggregate functions")
         if not step_ms:
             raise BadRequest("overlapping windows require a step")
-        windows = sorted({int(w) for w in params.overlapping_windows}, reverse=True)
-        max_aligned = (to_ms // step_ms) * step_ms
-        wins = F.array(*[F.lit(w) for w in windows])
-        b = (
-            base.where(F.col("value").isNotNull())
-            .where(F.col("ts") < F.lit(max_aligned))
-            .withColumn("window", F.explode(wins))
-            .where(F.col("ts") > F.lit(max_aligned) - F.col("window") * F.lit(step_ms))
-        )
-        raws = agg.required_raw(funcs)
-        grouped = _group_keeping_labels(
-            b, ["name", "series_id", "window"], agg.raw_agg_exprs(raws)
-        )
-        out = grouped.withColumn("t", F.lit(max_aligned) - F.col("window") * F.lit(step_ms))
-        for f in funcs:
-            if f in ("avg", "stddev", "stdvar"):
-                out = out.withColumn(f, agg.derived_col(f, step_ms))
         if "rate" in funcs:
             raise BadRequest("rate is not defined for overlapping windows")
-        return out.select(
-            "name", "labels", "series_id", "window", "t", *[F.col(f).alias(f) for f in funcs]
-        )
+        windows = sorted({int(w) for w in params.overlapping_windows}, reverse=True)
+        max_aligned = (to_ms // step_ms) * step_ms
+        outs = [
+            f"{agg.derived_sql(f)} AS {f}" if f in ("avg", "stddev", "stdvar") else ident(f)
+            for f in funcs
+        ]
+        with views(base) as (src,):
+            cells = (
+                f"SELECT * FROM (SELECT *, explode(array({', '.join(map(str, windows))})) "
+                f"AS `window` FROM {src} WHERE value IS NOT NULL AND ts < {max_aligned}) "
+                f"WHERE ts > {max_aligned} - `window` * {step_ms}"
+            )
+            grouped = _group_keeping_labels(
+                cells, ["name", "series_id", "`window`"], agg.raw_agg_sql(agg.required_raw(funcs))
+            )
+            return self.spark.sql(
+                f"SELECT name, {labels_map_sql('_lstr')} AS labels, series_id, `window`, "
+                f"{max_aligned} - `window` * {step_ms} AS t, {', '.join(outs)} FROM ({grouped})"
+            )
 
     # -- scan --------------------------------------------------------------
 
     def _scan(self, params: SelectParams, from_ms: int, to_ms: int, window_ms: int) -> DataFrame:
-        """Time/name/filter-pruned scan.
+        """Time/name/filter-pruned scan: one ``where`` over the samples.
 
         The time-range predicate reaches the Parquet scan (plus ``dt``
         partition pruning when present); this is the analog of the
@@ -418,35 +422,32 @@ class Querier:
         (ref: pkg/pquerier/querier.go:195-206, select.go:583-606).
         """
         df = self.samples_df()
+        cols = df.columns
         lo = from_ms - window_ms  # ref: PartsForRange(from - aggWindow, to)
-        df = df.where((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(to_ms)))
+        preds = [f"ts >= {lo} AND ts <= {to_ms}"]
         # When the source keeps its native timestamp column alongside the
         # derived ms one (events feed), mirror the clamp onto it: a plain
         # column predicate reaches the Parquet scan (PushedFilters) where
         # the derived-ms predicate cannot. ts_ms = ns div 1e6, so
         # ts_ms ∈ [lo, to]  ⟺  ns ∈ [lo·1e6, (to+1)·1e6).
-        if "_ts_raw_ns" in df.columns:
-            df = df.where(
-                (F.col("_ts_raw_ns") >= F.lit(lo * 1_000_000))
-                & (F.col("_ts_raw_ns") < F.lit((to_ms + 1) * 1_000_000))
+        if "_ts_raw_ns" in cols:
+            preds.append(
+                f"_ts_raw_ns >= {lo * 1_000_000} AND _ts_raw_ns < {(to_ms + 1) * 1_000_000}"
             )
-        elif "_ts_raw_ts" in df.columns:
-            df = df.where(
-                (F.col("_ts_raw_ts") >= F.timestamp_millis(F.lit(lo)))
-                & (F.col("_ts_raw_ts") < F.timestamp_millis(F.lit(to_ms + 1)))
+        elif "_ts_raw_ts" in cols:
+            preds.append(
+                f"_ts_raw_ts >= timestamp_millis({lo}) AND _ts_raw_ts < timestamp_millis({to_ms + 1})"
             )
-        if "dt" in df.columns:
-            lo_dt = F.date_format(F.timestamp_millis(F.lit(lo)), "yyyy-MM-dd")
-            hi_dt = F.date_format(F.timestamp_millis(F.lit(to_ms)), "yyyy-MM-dd")
-            df = df.where(F.col("dt").between(lo_dt, hi_dt))
+        if "dt" in cols:
+            preds.append(f"dt BETWEEN {_date(lo)} AND {_date(to_ms)}")
         names = self._requested_names(params)
         if names:
             # name-equality fast path → partition/row-group pruning
             # (ref: pkg/pquerier/select.go:579-581 sharding-key range scan)
-            df = df.where(F.col("name").isin(names))
+            preds.append(in_list("name", names))
         if params.filter:
-            df = df.where(F.expr(translate_filter(params.filter)))
-        return df
+            preds.append(translate_filter(params.filter))
+        return df.where(" AND ".join(f"({p})" for p in preds))
 
     def _requested_names(self, params: SelectParams) -> list[str]:
         """Empty list = unbounded (all metrics). A ``*`` column — raw
@@ -472,9 +473,10 @@ class Querier:
         row; unrequested kinds prune out of the Parquet scan)."""
         from v3io_tsdb_spark.appender import VARIANT_COLS
 
-        cols = ["name", "labels", "series_id", F.col("ts").alias("t"), "value"]
-        cols += [c for c, _ in VARIANT_COLS if c in base.columns]
-        return base.select(*cols)
+        return base.selectExpr(
+            "name", "labels", "series_id", "ts AS t", "value",
+            *[c for c, _ in VARIANT_COLS if c in base.columns],
+        )
 
     def _mixed_agg_raw(self, base, params, funcs, from_ms, to_ms, step_ms) -> DataFrame:
         """Aggregate columns + function-less raw columns in ONE select:
@@ -488,14 +490,12 @@ class Querier:
         raw = self._align_columns(
             base, params, [c for c in params.columns if not c.function], from_ms, to_ms, step_ms
         )
-        keys = ["name", "series_id", "t"]
-        left = agg_res.withColumnRenamed("labels", "_al")
-        right = raw.withColumnRenamed("labels", "_rl")
-        return (
-            left.join(right, on=keys, how="full_outer")
-            .withColumn("labels", F.coalesce(F.col("_al"), F.col("_rl")))
-            .select("name", "labels", "series_id", "t", *funcs, "value")
-        )
+        with views(agg_res, raw) as (a, r):
+            return self.spark.sql(
+                f"SELECT name, coalesce(a.labels, r.labels) AS labels, series_id, t, "
+                f"{', '.join(ident(f) for f in funcs)}, value "
+                f"FROM {a} a FULL OUTER JOIN {r} r USING (name, series_id, t)"
+            )
 
     def _downsample(self, base, params, from_ms, to_ms, step_ms) -> DataFrame:
         """Step without functions → per-cell seek+interpolate value
@@ -507,7 +507,7 @@ class Querier:
             return self._align_columns(base, params, params.columns, from_ms, to_ms, step_ms)
         tol = str2duration_ms(params.tolerance) if params.tolerance else None
         return align_to_grid(
-            base.where(F.col("value").isNotNull()), from_ms, to_ms, step_ms,
+            base.where("value IS NOT NULL"), from_ms, to_ms, step_ms,
             interp=params.interpolator or "next_val",
             tolerance_ms=tol,
         )
@@ -516,23 +516,19 @@ class Querier:
         """Each column spec's metric aligned to the step grid with its own
         interpolator (sibling-inherited per metric, see _metric_interp)
         and tolerance, unioned into one frame."""
-        src = base.where(F.col("value").isNotNull())
+        src = base.where("value IS NOT NULL")
         metric_interp = self._metric_interp(params)
         out = None
         for c in cols:
             tol_src = c.tolerance if c.tolerance is not None else params.tolerance
             part = align_to_grid(
-                src.where(F.col("name") == c.metric), from_ms, to_ms, step_ms,
+                src.where(f"name = {lit(c.metric)}"), from_ms, to_ms, step_ms,
                 interp=c.interpolator or metric_interp.get(c.metric)
                 or params.interpolator or "next_val",
                 tolerance_ms=str2duration_ms(tol_src) if tol_src else None,
             )
             out = part if out is None else out.unionByName(part)
         return out
-
-    def _group_keys(self, group_by: list[str]):
-        """Label-subset grouping (ref: pkg/pquerier/select.go:354-367)."""
-        return [F.element_at(F.col("labels"), g).alias(g) for g in group_by]
 
     def _validate_group_by(
         self, base: DataFrame, group_by: list[str], names: list | None = None
@@ -570,7 +566,7 @@ class Querier:
                 )
             return
         for g in group_by:
-            probe = base.where(F.element_at(F.col("labels"), g).isNotNull()).limit(1)
+            probe = base.where(f"element_at(labels, {lit(g)}) IS NOT NULL").limit(1)
             if probe.isEmpty():
                 raise BadRequest(f"group-by label {g!r} does not exist in the data")
 
@@ -608,47 +604,57 @@ class Querier:
         # integration_test.go:177-245); numeric aggs skip the nulls
         from v3io_tsdb_spark.appender import VARIANT_COLS
 
-        presence = F.col("value").isNotNull()
+        presence = "value IS NOT NULL"
         for vc, _ in VARIANT_COLS:
             if vc in base.columns:
-                presence = presence | F.col(vc).isNotNull()
-        base = base.where(presence)
-        if window_ms:
-            b = base.withColumn(
-                "_buckets", sliding_bucket_ids(F.col("ts"), from_ms, to_ms, step_ms, window_ms)
-            ).withColumn("t", F.explode("_buckets"))
-        else:
-            b = base.withColumn("t", tumbling_bucket(F.col("ts"), from_ms, step_ms)).where(
-                F.col("t") <= F.lit(to_ms)
-            )
+                presence = f"({presence}) OR {vc} IS NOT NULL"
+        aggs = agg.raw_agg_sql(agg.required_raw(funcs), count_presence="true")
+        with views(base) as (src,):
+            present = f"SELECT * FROM {src} WHERE {presence}"
+            if window_ms:
+                cells = sliding_buckets_sql(present, "ts", from_ms, to_ms, step_ms, window_ms)
+            else:
+                t = tumbling_bucket_sql("ts", from_ms, step_ms)
+                cells = f"SELECT * FROM (SELECT *, {t} AS t FROM ({present})) WHERE t <= {to_ms}"
+            return self._finish_aggregate(cells, aggs, funcs, step_ms, group_by)
 
-        aggs = agg.raw_agg_exprs(agg.required_raw(funcs), count_presence=F.lit(True))
-        return self._finish_aggregate(b, aggs, funcs, step_ms, group_by)
-
-    def _finish_aggregate(self, cells, aggs, funcs, step_ms, group_by, cross=False) -> DataFrame:
-        """Aggregate ``cells`` (rows tagged with their cell time ``t``)
-        per series, per group-by label set, or — ``cross`` — across
-        series; then derived columns + projection. Empty buckets are
+    def _finish_aggregate(
+        self, cells, aggs, funcs, step_ms, group_by, cross=False, labels=True
+    ) -> DataFrame:
+        """Aggregate ``cells`` (SQL of rows tagged with their cell time
+        ``t``) per series, per group-by label set, or — ``cross`` —
+        across series; then derived columns + projection, in one
+        statement. ``labels=False``: the rows carry their group-by
+        labels as columns (a pre-aggregate). Empty buckets are
         naturally absent (count==0 suppression, ref:
         pkg/aggregate/iterator.go:361-364)."""
         if group_by or cross:
-            # a pre-aggregate carries its group-by labels as columns
-            keys = self._group_keys(group_by) if "labels" in cells.columns else group_by
-            out = cells.groupBy(F.col("name"), *keys, F.col("t")).agg(*aggs)
-        else:
-            out = _group_keeping_labels(cells, ["name", "series_id", "t"], aggs)
-        if "rate" in funcs:
-            part_keys = [c for c in ("name", *group_by, "series_id") if c in out.columns]
-            w = Window.partitionBy(*part_keys).orderBy("t")
-            out = out.withColumn(
-                "rate", agg.rate_col(F.col("last"), F.lag("last").over(w), step_ms)
+            keys = [f"element_at(labels, {lit(g)})" if labels else ident(g) for g in group_by]
+            named = [f"{k} AS {ident(g)}" for k, g in zip(keys, group_by)]
+            grouped = (
+                f"SELECT {', '.join(['name', *named, 't', *aggs])} FROM ({cells}) "
+                f"GROUP BY {', '.join(['name', *keys, 't'])}"
             )
+            head = ["name", *map(ident, group_by), "t"]
+            part = ["name", *group_by]
+        else:
+            keys = ["name", "series_id", "t"]
+            raws = [ident(r) for r in agg.required_raw(funcs)]
+            grouped = (
+                f"SELECT {', '.join(keys + raws)}, {labels_map_sql('_lstr')} AS labels "
+                f"FROM ({_group_keeping_labels(cells, keys, aggs)})"
+            )
+            head = ["name", "labels", "series_id", "t"]
+            part = ["name", "series_id"]
+        outs = []
         for f in funcs:
-            if f in ("avg", "stddev", "stdvar"):
-                out = out.withColumn(f, agg.derived_col(f, step_ms))
-        head = ["name"] + (group_by if group_by else ["labels", "series_id"]) + ["t"]
-        existing = [c for c in head if c in out.columns]
-        return out.select(*existing, *[F.col(f).alias(f) for f in funcs])
+            if f == "rate":
+                outs.append(f"{agg.rate_sql(step_ms, part)} AS rate")
+            elif f in ("avg", "stddev", "stdvar"):
+                outs.append(f"{agg.derived_sql(f)} AS {f}")
+            else:
+                outs.append(ident(f))
+        return self.spark.sql(f"SELECT {', '.join(head + outs)} FROM ({grouped})")
 
     def _cross_series(self, base, params, funcs, from_ms, to_ms, step_ms, group_by) -> DataFrame:
         """``*_all`` aggregation: align each series to the step grid
@@ -661,12 +667,15 @@ class Querier:
             self._validate_group_by(base, group_by, self._requested_names(params))
         tol = str2duration_ms(params.tolerance) if params.tolerance else None
         aligned = align_to_grid(
-            base.where(F.col("value").isNotNull()), from_ms, to_ms, step_ms,
+            base.where("value IS NOT NULL"), from_ms, to_ms, step_ms,
             interp=params.interpolator or "next_val",
             tolerance_ms=tol,
         )
-        aggs = agg.raw_agg_exprs(agg.required_raw(funcs), value_col="value", ts_col="series_id")
-        return self._finish_aggregate(aligned, aggs, funcs, step_ms, group_by, cross=True)
+        aggs = agg.raw_agg_sql(agg.required_raw(funcs), value_col="value", ts_col="series_id")
+        with views(aligned) as (src,):
+            return self._finish_aggregate(
+                f"SELECT * FROM {src}", aggs, funcs, step_ms, group_by, cross=True
+            )
 
     # -- rollup ("server aggregates") routing ------------------------------
 
@@ -724,8 +733,9 @@ class Querier:
         # the filter needs labels the table lacks
         return None if "labels[" in pred else pred
 
-    def _rollup_cells(self, r, from_ms, to_ms, step_ms, window_ms) -> DataFrame:
-        """Map rollup buckets to query cells by bucket **median** time.
+    def _rollup_cells(self, src, from_ms, to_ms, step_ms, window_ms) -> str:
+        """SQL mapping the rollup rows of ``src`` to query cells by
+        bucket **median** time (computed once, as ``_median``).
 
         No window: truncating-division cell with a one-step inclusion
         margin (ref: pkg/pquerier/collector.go:210-234). With an
@@ -735,32 +745,21 @@ class Querier:
         (ref: collector.go:219-223 bottomMargin=window,
         collector.go:366-383 windowAggregationWithServerAggregates).
         """
-        gran = self.config.granularity_ms
-        median = F.col("bucket") + F.lit(gran // 2)
         bottom = window_ms if window_ms else step_ms
-        r = r.where((median >= F.lit(from_ms - bottom)) & (median <= F.lit(to_ms + step_ms)))
+        r = (
+            f"SELECT * FROM (SELECT *, bucket + {self.config.granularity_ms // 2} AS _median "
+            f"FROM {src}) WHERE _median >= {from_ms - bottom} AND _median <= {to_ms + step_ms}"
+        )
         if not window_ms:
-            cell = (
-                F.expr(f"(bucket + {gran // 2} - {from_ms}) div {step_ms}") * F.lit(step_ms)
-                + F.lit(from_ms)
-            ).cast("long")
-            r = r.withColumn("t", cell)
+            cell = f"CAST((_median - {from_ms}) div {step_ms} * {step_ms} + {from_ms} AS BIGINT)"
+            r = f"SELECT *, {cell} AS t FROM ({r})"
         elif window_ms > step_ms:
-            r = (
-                r.withColumn(
-                    "_buckets", sliding_bucket_ids(median, from_ms, to_ms, step_ms, window_ms)
-                )
-                .withColumn("t", F.explode("_buckets"))
-                .drop("_buckets")
-            )
+            r = sliding_buckets_sql(r, "_median", from_ms, to_ms, step_ms, window_ms)
         else:
             # window <= step: round-up cell only (ref: collector.go:380-382)
-            cell = (
-                F.ceil((median - F.lit(from_ms)) / F.lit(step_ms)) * F.lit(step_ms)
-                + F.lit(from_ms)
-            ).cast("long")
-            r = r.withColumn("t", cell)
-        return r.where((F.col("t") >= F.lit(from_ms)) & (F.col("t") <= F.lit(to_ms)))
+            cell = f"CAST(ceil((_median - {from_ms}) / {step_ms}) * {step_ms} + {from_ms} AS BIGINT)"
+            r = f"SELECT *, {cell} AS t FROM ({r})"
+        return f"SELECT * FROM ({r}) WHERE t >= {from_ms} AND t <= {to_ms}"
 
     def _aggregate_from_rollup(
         self, r, pred, params, funcs, from_ms, to_ms, step_ms, window_ms, group_by
@@ -771,12 +770,27 @@ class Querier:
         aggregateServerAggregates), and combine them with the rollup
         merge algebra. ``r`` is the per-series rollup or a pre-aggregate
         already keyed by the group-by labels (no ``labels`` column);
-        ``pred`` is its SQL filter, '' for none."""
+        ``pred`` is its SQL filter, '' for none.
+
+        The scan reads only the ``rdt`` partitions the cells can use:
+        the medians kept lie in [from − bottom, to + step], so the
+        bucket starts lie half a granule below that."""
         names = self._requested_names(params)
-        if names:
-            r = r.where(F.col("name").isin(names))
+        cols = r.columns
+        preds = [in_list("name", names)] if names else []
         if pred:
-            r = r.where(F.expr(pred))
-        r = self._rollup_cells(r, from_ms, to_ms, step_ms, window_ms)
-        combine = ru.combine_exprs(agg.required_raw(funcs))
-        return self._finish_aggregate(r, combine, funcs, step_ms, group_by)
+            preds.append(pred)
+        if "rdt" in cols:
+            half = self.config.granularity_ms // 2
+            bottom = window_ms if window_ms else step_ms
+            preds.append(
+                f"rdt BETWEEN {_date(from_ms - bottom - half)} AND {_date(to_ms + step_ms - half)}"
+            )
+        if preds:
+            r = r.where(" AND ".join(f"({p})" for p in preds))
+        with views(r) as (src,):
+            return self._finish_aggregate(
+                self._rollup_cells(src, from_ms, to_ms, step_ms, window_ms),
+                ru.combine_sql(agg.required_raw(funcs)), funcs, step_ms, group_by,
+                labels="labels" in cols,
+            )

@@ -15,7 +15,7 @@ partials with the standard mergeable-aggregate algebra:
 
 The algebra is defined once: partials are
 ``operators.aggregates.raw_agg_exprs`` plus ``max(ts) AS last_ts``
-(:func:`_partial_exprs`), and :func:`combine_exprs` is the merge that
+(:func:`_partial_exprs`), and :func:`combine_sql` is the merge that
 :func:`merge_partials` and both querier rollup routes use.
 
 This keeps ingest free of read-modify-write (no MERGE needed on plain
@@ -35,16 +35,21 @@ from v3io_tsdb_spark.operators.aggregates import RAW_AGGREGATES, raw_agg_exprs
 from v3io_tsdb_spark.operators.bucketing import wall_bucket
 
 ROLLUP_AGG_COLS = RAW_AGGREGATES + ("last_ts",)
-_MERGE = {"count": F.sum, "sum": F.sum, "sqr": F.sum, "min": F.min, "max": F.max, "last_ts": F.max}
+_MERGE = {"count": "sum", "sum": "sum", "sqr": "sum", "min": "min", "max": "max", "last_ts": "max"}
+
+
+def combine_sql(cols=ROLLUP_AGG_COLS) -> list[str]:
+    """Merge expressions (SQL text) combining partial rows into one, per
+    column (ref: pkg/aggregate/functions.go:48-79)."""
+    return [
+        ("max_by(`last`, `last_ts`)" if c == "last" else f"{_MERGE[c]}(`{c}`)") + f" AS `{c}`"
+        for c in cols
+    ]
 
 
 def combine_exprs(cols=ROLLUP_AGG_COLS) -> list[Column]:
-    """Merge expressions combining partial rows into one, per column
-    (ref: pkg/aggregate/functions.go:48-79)."""
-    return [
-        (F.max_by("last", "last_ts") if c == "last" else _MERGE[c](c)).alias(c)
-        for c in cols
-    ]
+    """:func:`combine_sql` as Columns."""
+    return [F.expr(e) for e in combine_sql(cols)]
 
 
 def with_rdt(partial: DataFrame) -> DataFrame:
@@ -60,7 +65,7 @@ def _partial_exprs() -> list[Column]:
 
 def _samples_by_bucket(samples: DataFrame, gran_ms: int) -> DataFrame:
     return samples.where(F.col("value").isNotNull()).withColumn(
-        "bucket", wall_bucket(F.col("ts"), gran_ms)
+        "bucket", wall_bucket("ts", gran_ms)
     )
 
 
@@ -74,7 +79,7 @@ def _per_series(df: DataFrame, aggs: list) -> DataFrame:
         df.withColumn("_lstr", labels_string_col(F.col("labels")))
         .groupBy("name", "series_id", "_lstr", "bucket")
         .agg(*aggs)
-        .withColumn("labels", labels_map_col(F.col("_lstr")))
+        .withColumn("labels", labels_map_col("_lstr"))
         .select("bucket", "name", "labels", "series_id", *ROLLUP_AGG_COLS)
     )
 

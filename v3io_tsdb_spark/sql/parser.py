@@ -35,9 +35,10 @@ from pyspark.sql import functions as F
 
 from v3io_tsdb_spark.errors import BadRequest
 from v3io_tsdb_spark.operators.aggregates import ALL_AGGREGATES
-from v3io_tsdb_spark.operators.frames import to_series
+from v3io_tsdb_spark.operators.frames import pivot_first, to_series_sql
 from v3io_tsdb_spark.operators.interpolate import INTERPOLATORS
 from v3io_tsdb_spark.querier import RequestedColumn, SelectParams
+from v3io_tsdb_spark.sqltext import ident, in_list, lit, views
 
 _INTERP_NAMES = {"none", "nan", "prev_val", "prev", "next_val", "next", "linear", "lin"}
 # FROM is optional: the reference's vitess-based ParseQuery accepts a
@@ -253,12 +254,10 @@ def run_sql(querier, sql: str, extensions: bool = False, **overrides) -> DataFra
             parsed,
         )
 
-    melted = to_series(res, funcs)
     group_cols = [g.strip() for g in (parsed.group_by or "").split(",") if g.strip()]
     keys = None  # pivot keys, when the request alone defines them
     if not parsed.wildcard:
         # keep only requested (metric, function) pairs; name columns by alias
-        pairs = []
         names = {}
         star_fns = set()
         for c in parsed.columns:
@@ -270,44 +269,39 @@ def run_sql(querier, sql: str, extensions: bool = False, **overrides) -> DataFra
                 # response (ref: pkg/pquerier/frames.go:160-165)
                 star_fns.add(fn)
                 continue
-            pairs.append((c.metric, fn))
             names[(c.metric, fn)] = c.alias or (f"{fn}({c.metric})" if fn else c.metric)
-        cond = None
-        for metric, fn in pairs:
-            p = (F.col("name") == metric) & (F.col("aggregate") == fn)
-            cond = p if cond is None else (cond | p)
-        for fn in sorted(star_fns):
-            p = F.col("aggregate") == fn
-            cond = p if cond is None else (cond | p)
-        if cond is not None:
-            melted = melted.where(cond)
-        mapping = F.create_map(
-            *[x for (metric, fn), alias in names.items()
-              for x in (F.lit(f"{metric}\x00{fn}"), F.lit(alias))]
-        ) if names else None
-        ckey = mapping[F.concat_ws("\x00", F.col("name"), F.col("aggregate"))] if names is not None and names else F.lit(None).cast("string")
-        if star_fns:
-            ckey = F.coalesce(
-                ckey,
-                F.when(
-                    F.col("aggregate").isin(list(star_fns)),
-                    F.concat(F.col("aggregate"), F.lit("("), F.col("name"), F.lit(")")),
-                ),
+        conds = [f"name = {lit(m)} AND aggregate = {lit(fn)}" for m, fn in names]
+        conds += [f"aggregate = {lit(fn)}" for fn in sorted(star_fns)]
+        cond = ""
+        for p in conds:
+            cond = f"({cond}) OR ({p})" if cond else f"({p})"
+        ckey = (
+            "map({})[concat_ws({}, name, aggregate)]".format(
+                ", ".join(f"{lit(m + chr(0) + fn)}, {lit(a)}" for (m, fn), a in names.items()),
+                lit(chr(0)),
             )
-        melted = melted.withColumn("_ckey", ckey)
+            if names else "CAST(NULL AS STRING)"
+        )
+        if star_fns:
+            ckey = (
+                f"coalesce({ckey}, CASE WHEN {in_list('aggregate', sorted(star_fns))} "
+                f"THEN concat(aggregate, '(', name, ')') END)"
+            )
         if names and not star_fns:
             # as for raw queries: a requested column with no in-range
             # data still gets its (all-null) column, and the pivot skips
             # its distinct-values pre-pass (sorted, Spark's own order)
             keys = sorted(set(names.values()))
     else:
-        melted = melted.withColumn(
-            "_ckey", F.concat(F.col("aggregate"), F.lit("("), F.col("name"), F.lit(")"))
+        cond, ckey = "", "concat(aggregate, '(', name, ')')"
+    rows = ["time", *(ident(g) for g in group_cols)]
+    with views(res) as (src,):
+        melted = to_series_sql(src, res.columns, funcs)
+        if cond:
+            melted = f"SELECT * FROM ({melted}) WHERE {cond}"
+        cells = (
+            f"SELECT t AS time, {', '.join(rows[1:] + ['_ckey', 'value'])} "
+            f"FROM (SELECT *, {ckey} AS _ckey FROM ({melted}))"
         )
-    wide = (
-        melted.groupBy(F.col("t").alias("time"), *[F.col(g) for g in group_cols])
-        .pivot("_ckey", keys)
-        .agg(F.first("value", ignorenulls=True))
-        .orderBy("time", *group_cols)
-    )
+        wide = pivot_first(querier.spark, cells, rows, keys)
     return _apply_extensions(wide, parsed)
