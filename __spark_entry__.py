@@ -318,10 +318,12 @@ def _label_rollup_ensure(spark: SparkSession, sf_dir: str, gran_ms: int) -> Data
     ``agg/<labels>/`` tables at INGEST time (ref:
     pkg/appender/appender.go:220-231), so the query path must only READ
     the small pre-aggregate — rebuilding it per query made warm slower
-    than cold in round 5."""
+    than cold in round 5. Its rows are the engine's rollup rows (the
+    ``labels`` map holds the ``uid`` label alone); ``_v2`` names that
+    shape."""
     from v3io_tsdb_spark.rollup import build_label_rollup
 
-    path = _persist_path("spark_graft_lrollup_uid_v1", sf_dir, "events")
+    path = _persist_path("spark_graft_lrollup_uid_v2", sf_dir, "events")
     key = _open_key(spark, path)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         samples = events_as_samples(spark, sf_dir)

@@ -148,9 +148,10 @@ def test_delete_leaves_session_conf_unchanged(tmp_path, spark):
     assert sorted(r["value"] for r in left.collect()) == [1.0] * 3 + [2.0] * 5
     day0 = datetime.fromtimestamp(T0H / 1000, timezone.utc).date()
     want = {str(day0): 3, str(day0 + timedelta(days=1)): 5}
-    for path in (a.rollup_path, a._label_rollup_path(["os"])):
-        cnt = spark.read.parquet(path).groupBy("rdt").agg(F.sum("count").alias("n"))
-        assert {str(r["rdt"]): r["n"] for r in cnt.collect()} == want
+    cnt = spark.read.parquet(a.rollup_path).groupBy("set", "rdt").agg(F.sum("count").alias("n"))
+    assert {(r["set"], str(r["rdt"])): r["n"] for r in cnt.collect()} == {
+        (s, d): n for s in ("series", "by,os") for d, n in want.items()
+    }
 
 
 def test_delete_whole_partition(tmp_path, spark):
@@ -226,18 +227,18 @@ def test_rollup_partials_merge(spark, make_samples):
         )
 
     label = ru.build_label_rollup(whole, gran, ("os",))
-    merged = (
-        ru.build_label_rollup(a, gran, ("os",))
-        .unionByName(ru.build_label_rollup(b, gran, ("os",)))
-        .groupBy("name", "os", "bucket")
-        .agg(*ru.combine_exprs())
+    merged = ru.merge_partials(
+        ru.build_label_rollup(a, gran, ("os",)).unionByName(ru.build_label_rollup(b, gran, ("os",)))
     )
     assert rows(merged.select(*label.columns)) == rows(label)
     assert len(rows(label)) > 4
 
-    per_series = ru.build_rollup(whole, gran)
-    merged = ru.merge_partials(ru.build_rollup(a, gran).unionByName(ru.build_rollup(b, gran)))
-    assert rows(merged) == rows(per_series)
+    per_series = ru.build_rollup(whole, gran, [("os",)])
+    merged = ru.merge_partials(
+        ru.build_rollup(a, gran, [("os",)]).unionByName(ru.build_rollup(b, gran, [("os",)]))
+    )
+    assert rows(merged.select(*per_series.columns)) == rows(per_series)
+    assert rows(label) == rows(per_series.where("set = 'by,os'").drop("set"))
 
 def test_label_rollup_path_agreement(tmp_path, spark):
     """Cross-label pre-aggregate path equals client path on

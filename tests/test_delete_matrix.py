@@ -120,26 +120,31 @@ def test_delete_matrix(tmp_path, spark, desc, kwargs, survives):
 
 def test_delete_collects_once_before_samples_write(spark, tmp_path, monkeypatch):
     """The doomed rows' dt and rdt partitions come from ONE distinct
-    collect; with the kept-dt collect that is two collect jobs (each a
-    shuffle-map job plus a result job under AQE) before the samples
-    partitions are rewritten."""
+    collect (a shuffle-map job plus a result job under AQE) before the
+    samples partitions are rewritten; the partitions each rewrite
+    leaves empty come from an observation of the write itself. The
+    whole delete — samples rewrite, one rollup rebuild for every set,
+    catalog and kinds refresh — stays within a fixed job budget."""
     import uuid
 
     from v3io_tsdb_spark import adapter as adapter_mod
 
     a = TSDBAdapter(spark, str(tmp_path / "db"),
-                    TSDBConfig(aggregation_granularity="1h")).create()
+                    TSDBConfig(aggregation_granularity="1h", pre_aggregates=(("os",),))).create()
     a.append(_fixture_rows())
     sc = spark.sparkContext
     grp = f"delete-{uuid.uuid4()}"
     before_write = []
     write = adapter_mod._overwrite_partitions
 
-    def counted(df, key, path, emptied):
-        if key == "dt" and not before_write:
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            before_write.append(len(sc.statusTracker().getJobIdsForGroup(grp)))
-        return write(df, key, path, emptied)
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(grp))
+
+    def counted(df, keys, path, targets):
+        if keys == ["dt"] and not before_write:
+            before_write.append(jobs())
+        return write(df, keys, path, targets)
 
     monkeypatch.setattr(adapter_mod, "_overwrite_partitions", counted)
     sc.setJobGroup(grp, "delete")
@@ -147,6 +152,6 @@ def test_delete_collects_once_before_samples_write(spark, tmp_path, monkeypatch)
         a.delete(from_time=D0, to_time=D0 + HOUR, filter="os=='linux'")
     finally:
         sc.setJobGroup(None, None)
-    assert before_write == [4], before_write
+    assert (before_write, jobs()) == ([2], 9), (before_write, jobs())
     left = a.select(SelectParams(from_time=0, to_time=9_999_999_999_999)).count()
     assert left == len(_fixture_rows()) - 2 * 3

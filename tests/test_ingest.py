@@ -55,23 +55,40 @@ def test_row_input_plans_as_local_relation(spark):
     assert df.count() == 100
 
 
-def test_steady_append_job_budget(spark, tmp_path):
-    """A steady-state scrape append into a table with one pre-aggregate
-    runs at most 12 Spark jobs: the checkpoint, the kinds join, the
-    samples write and the two rollup writes."""
-    ad = _mk(spark, tmp_path, aggregation_granularity="1h", pre_aggregates=(("dc",),))
-    ad.append(_scrape(0))
+def _append_jobs(spark, ad, rows):
+    """Spark jobs one append runs, counted by job group."""
     sc = spark.sparkContext
     grp = f"append-{uuid.uuid4()}"
-    sc.setJobGroup(grp, "steady append")
+    sc.setJobGroup(grp, "append")
     try:
-        ad.append(_scrape(1))
+        ad.append(rows)
     finally:
         sc.setJobGroup(None, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(grp))
-    assert 0 < jobs <= 12, jobs
+    return len(sc.statusTracker().getJobIdsForGroup(grp))
+
+
+def test_steady_append_job_budget(spark, tmp_path):
+    """A steady-state scrape append into a table with one pre-aggregate
+    runs at most 5 Spark jobs: the checkpoint (one shuffle), the samples
+    write, and one rollup write (aggregate + write) for every set; the
+    kinds guard of known series runs none."""
+    ad = _mk(spark, tmp_path, aggregation_granularity="1h", pre_aggregates=(("dc",),))
+    ad.append(_scrape(0))
+    jobs = _append_jobs(spark, ad, _scrape(1))
+    assert 0 < jobs <= 5, jobs
     assert ad.select(name="m1", from_time=T0, to_time=T0 + 10 * MIN - 1).count() == 200
+
+
+def test_append_jobs_do_not_grow_with_pre_aggregates(spark, tmp_path):
+    """Every rollup set comes from one aggregate and one write, so three
+    pre-aggregates cost an append no more jobs than one."""
+    jobs = {}
+    for n, pre in ((1, (("dc",),)), (3, (("dc",), ("host",), ("dc", "host")))):
+        ad = _mk(spark, tmp_path / str(n), aggregation_granularity="1h", pre_aggregates=pre)
+        ad.append(_scrape(0))
+        jobs[n] = _append_jobs(spark, ad, _scrape(1))
+    assert jobs[3] == jobs[1], jobs
 
 
 def test_validate_false_updates_catalog(spark, tmp_path):
@@ -149,6 +166,28 @@ def test_known_series_leave_kinds_sidecar_alone(spark, tmp_path):
 def _kinds(spark, ad):
     rows = spark.read.parquet(ad.kinds_path).collect()
     return sorted((r["series_id"], r["kind"]) for r in rows)
+
+
+def test_kinds_cache_sees_another_writers_changes(spark, tmp_path):
+    """The kinds guard trusts the pairs it verified only while the
+    sidecar's files are unchanged: after a second adapter deletes a
+    series and re-ingests it as a string, the first adapter's float
+    append of that series is rejected; re-typing after a delete works
+    from either adapter."""
+    ad = _mk(spark, tmp_path)
+    ad.append(_scrape(0, hosts=2))
+    ad.append(_scrape(1, hosts=2))  # known series: verified from the cache
+    other = TSDBAdapter(spark, ad.path)
+    other.delete(metrics=["m1"])
+    h0 = {"host": "h0", "dc": "d0"}
+    other.append([{"ts": T0, "name": "m1", "labels": h0, "value_str": "up"}])
+    with pytest.raises(BadRequest, match="Cannot append float type metric to str"):
+        ad.append([{"ts": T0 + MIN, "name": "m1", "labels": h0, "value": 1.0}])
+    ad.delete(metrics=["m1"])
+    ad.append([{"ts": T0 + MIN, "name": "m1", "labels": h0, "value": 1.0}])
+    with pytest.raises(BadRequest, match="Cannot append str type metric to float"):
+        other.append([{"ts": T0 + 2 * MIN, "name": "m1", "labels": h0, "value_str": "x"}])
+    assert [k for _, k in _kinds(spark, ad)] == ["float"]
 
 
 def test_many_series_kinds_guard_is_distributed(spark, tmp_path, monkeypatch):

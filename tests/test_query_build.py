@@ -64,9 +64,13 @@ def _jobs(spark, fn):
 
 
 def _tables(df, root):
-    """Table directories under ``root`` that the plan reads."""
-    return {os.path.relpath(f.split(":", 1)[-1], root).split(os.sep)[0]
-            for f in df.inputFiles()}
+    """Table directories under ``root`` that the plan reads; a rollup
+    set as ``rollup/set=<name>``."""
+    out = set()
+    for f in df.inputFiles():
+        parts = os.path.relpath(f.split(":", 1)[-1], root).split(os.sep)
+        out.add("/".join(parts[:2]) if parts[0] == "rollup" else parts[0])
+    return out
 
 
 ROUTES = {
@@ -75,9 +79,9 @@ ROUTES = {
     "client_aggregate": (dict(name="m1", functions="avg", step="5m", from_time=T0, to_time=T1),
                          "samples"),
     "rollup": (dict(name="m1", functions="count,sum", step="6h", from_time=T0, to_time=T1),
-               "rollup"),
+               "rollup/set=series"),
     "label_rollup": (dict(name="m2", functions="sum", step="1d", group_by="dc",
-                          from_time=T0, to_time=T1), "rollup_by_dc"),
+                          from_time=T0, to_time=T1), "rollup/set=by,dc"),
     "raw_group_by": (dict(name="m2", functions="max", step="1h", group_by="host",
                           from_time=T0, to_time=T1), "samples"),
     "cross_series": (dict(name="m1", functions="sum_all", step="10m", from_time=T1 - 6 * HOUR,
@@ -125,7 +129,7 @@ def test_two_label_pre_aggregate_matches_raw_group_by(spark, table):
     params = dict(name="m1", functions="sum,count,max", step="1d", group_by="dc,host",
                   from_time=T0, to_time=T1)
     rolled = table.select(SelectParams(**params))
-    assert _tables(rolled, table.path) == {"rollup_by_dc_host"}
+    assert _tables(rolled, table.path) == {"rollup/set=by,dc,host"}
     raw = table.select(SelectParams(use_only_client_aggr=True, **params))
     assert _tables(raw, table.path) == {"samples"}
     key = ["name", "dc", "host", "t"]
@@ -297,12 +301,10 @@ def test_rollup_scan_pruned_by_rdt(spark, wide, case):
     parts = _scan_filters(df, "PartitionFilters")
     assert "(rdt >= 2024-01-02)" in parts and "(rdt <= 2024-01-03)" in parts, parts
     # the same rollup rows without an rdt column: nothing to prune on
-    table = "rollup_by_dc" if "group_by" in PRUNED[case] else "rollup"
-    rows = read_table(spark, os.path.join(wide.path, table),
-                      ROLLUP_READ_SCHEMA if table == "rollup" else q.label_rollup_df(("dc",)).schema)
+    subset = ("dc",) if "group_by" in PRUNED[case] else None
+    rows = read_table(spark, wide._set_path(subset), ROLLUP_READ_SCHEMA).drop("rdt")
     unpruned = Querier(spark, wide.samples_path, config=wide.config, catalog=q._catalog,
-                       **({"label_rollups": {("dc",): rows.drop("rdt")}} if table != "rollup"
-                          else {"rollup": rows.drop("rdt")}))
+                       **({"label_rollups": {subset: rows}} if subset else {"rollup": rows}))
     ref = unpruned.select(params)
     assert "rdt" not in _scan_filters(ref, "PartitionFilters")
     cols = [c for c in df.columns if c != "labels"]

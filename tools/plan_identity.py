@@ -2,6 +2,7 @@
 two checkouts can be diffed plan by plan.
 
     python tools/plan_identity.py OUT_FILE [--calls]
+    python tools/plan_identity.py OUT_FILE --append
 
 Builds a table shaped like the ``dashboard`` workload's (7 days x 6
 hosts x 5 metrics at 1/min, 1h rollups, a ``dc`` pre-aggregate) and
@@ -17,6 +18,14 @@ and ``diff`` the two files.
 ``--calls`` also prints, per query, the Py4J round trips and the
 milliseconds its build took before its first collect (median of
 five passes).
+
+``--append`` instead times steady ``live``-shaped appends: after the
+preload and four warm-up batches, five 1,000-sample batches, each
+appended as row dicts. It prints, per ``localCheckpoint``, ``collect``
+and ``DataFrameWriter.parquet`` call of an append, the Spark jobs and
+milliseconds the call took (medians over the five appends), and the
+jobs run outside those calls; OUT_FILE gets the optimized plan of each
+checkpoint and write.
 """
 
 from __future__ import annotations
@@ -127,13 +136,117 @@ def _live(spark, work):
     ]
 
 
+def _plan_text(df) -> str:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"\bx_\d+", "k", re.sub(r"#\d+", "", plan))
+
+
+def _append_calls(spark, work, passes: int = PASSES) -> list[str]:
+    """Per-call jobs and ms of steady ``live``-shaped appends; returns
+    the plan lines (see the module docstring)."""
+    import live
+    from inputs import scrape_batch, series_values
+    from v3io_tsdb_spark import TSDBAdapter, TSDBConfig
+
+    warmup = live.WARMUP_CYCLES
+    minutes = live.PRELOAD_MIN + (warmup + passes) * live.BATCH_MIN
+    values = series_values(1, len(live.HOSTS), minutes)
+    adapter = TSDBAdapter(
+        spark, os.path.join(work, "live"),
+        TSDBConfig(aggregation_granularity="1h", pre_aggregates=(("dc",),)),
+    ).create()
+    adapter.append(scrape_batch(values, 0, live.PRELOAD_MIN))
+    sc = spark.sparkContext
+    DataFrame = type(spark.range(0))  # the session's concrete classes
+    DataFrameWriter = type(spark.range(0).write)
+    calls: list = []  # (name, jobs, ms) of the current append
+    plans: list = []
+    outer = {"group": None}
+
+    def jobs_of(group):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def wrap(owner, attr):
+        raw = getattr(owner, attr)
+
+        def timed(self, *a, **k):
+            if outer["group"] is None:
+                return raw(self, *a, **k)
+            group = f"{outer['group']}-{len(calls)}"
+            sc.setJobGroup(group, attr)
+            t0 = time.perf_counter()
+            try:
+                return raw(self, *a, **k)
+            finally:
+                ms = (time.perf_counter() - t0) * 1e3
+                sc.setJobGroup(outer["group"], "append")
+                calls.append((attr, jobs_of(group), ms))
+                if attr != "collect":  # a writer's frame is its _df
+                    plans.append((attr, _plan_text(getattr(self, "_df", self))))
+
+        setattr(owner, attr, timed)
+        return raw
+
+    raws = [
+        (owner, attr, wrap(owner, attr))
+        for owner, attr in ((DataFrame, "localCheckpoint"), (DataFrame, "collect"),
+                            (DataFrameWriter, "parquet"))
+    ]
+    per_pass = []
+    try:
+        for i in range(warmup + passes):
+            batch = scrape_batch(values, live.PRELOAD_MIN + i * live.BATCH_MIN, live.BATCH_MIN)
+            calls.clear()
+            plans.clear()
+            outer["group"] = f"append-{i}"
+            sc.setJobGroup(outer["group"], "append")
+            t0 = time.perf_counter()
+            adapter.append(batch)
+            total_ms = (time.perf_counter() - t0) * 1e3
+            outer["group"] = None
+            sc.setJobGroup(None, None)
+            if i >= warmup:
+                per_pass.append((list(calls), jobs_of(f"append-{i}"), total_ms, list(plans)))
+    finally:
+        outer["group"] = None
+        for owner, attr, raw in raws:
+            setattr(owner, attr, raw)
+    shape = [[c[0] for c in p[0]] for p in per_pass]
+    if any(s != shape[0] for s in shape):
+        print("calls differ between appends:", shape, flush=True)
+    med = statistics.median
+    jobs_in_calls = 0
+    for k, name in enumerate(shape[0]):
+        jobs = med(p[0][k][1] for p in per_pass)
+        jobs_in_calls += jobs
+        ms = med(p[0][k][2] for p in per_pass)
+        print(f"append {k:2d} {name:16s} jobs {jobs:4.0f} {ms:8.1f} ms", flush=True)
+    other = med(p[1] for p in per_pass)
+    print(f"append    other            jobs {other:4.0f}", flush=True)
+    ms = med(p[2] for p in per_pass)
+    print(f"append    total            jobs {other + jobs_in_calls:4.0f} {ms:8.1f} ms", flush=True)
+    lines = ["## live.append", ""]
+    for k, (name, plan) in enumerate(per_pass[-1][3]):
+        lines += [f"### {name} {k}", plan.rstrip(), ""]
+    return lines
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("out")
     ap.add_argument("--calls", action="store_true")
+    ap.add_argument("--append", action="store_true")
     args = ap.parse_args(argv)
     sys.path[:0] = [ROOT, BENCH]
     spark = _session()
+    if args.append:
+        with tempfile.TemporaryDirectory(prefix="plan-identity-") as work:
+            lines = _append_calls(spark, work)
+        with open(args.out, "w") as f:
+            f.write("\n".join(lines))
+        spark.stop()
+        return 0
     probe = _Probe(spark)
     lines = []
     with tempfile.TemporaryDirectory(prefix="plan-identity-") as work:

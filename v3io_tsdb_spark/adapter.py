@@ -6,8 +6,11 @@ Mirrors the reference's V3ioAdapter surface
 
     <path>/_tsdb_schema.json      config (the ".schema" analog)
     <path>/samples/               long table, partitioned by dt
-    <path>/rollup/                partial-aggregate log, partitioned by rdt
-    <path>/rollup_by_<labels>/    optional cross-label pre-aggregates
+    <path>/rollup/                partial-aggregate log, partitioned by set
+                                  and rdt: set=series/ holds the per-series
+                                  rollup, set=by,<labels>/ each declared
+                                  cross-label pre-aggregate
+
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark import appender as app
@@ -26,11 +29,14 @@ from v3io_tsdb_spark.catalog import NamesCatalog
 from v3io_tsdb_spark.config import SCHEMA_FILE, TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest, SchemaError
 from v3io_tsdb_spark.querier import Querier, SelectParams
-from v3io_tsdb_spark.schema import ROLLUP_READ_SCHEMA, SAMPLES_READ_SCHEMA, read_table
+from v3io_tsdb_spark.schema import ROLLUP_TABLE_READ_SCHEMA, SAMPLES_READ_SCHEMA, read_table
 from v3io_tsdb_spark.sql.filters import translate_filter
 from v3io_tsdb_spark.timeutils import str2unix_ms
 
 DAY_MS = 86_400_000
+# characters Spark writes as %XX in a partition directory name
+# (ExternalCatalogUtils.escapePathName)
+_PATH_ESCAPED = set('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(1, 32)}
 # the per-series high-water-mark sidecar, read with this declared schema
 _MAXTS_SCHEMA = "series_id long, max_ts long"
 
@@ -153,23 +159,34 @@ def _replace_sidecar(df: DataFrame, path: str) -> None:
         os.rename(tmp, path)
 
 
-def _overwrite_partitions(df: DataFrame, key: str, path: str, emptied) -> None:
-    """Rewrite only the ``key`` partitions present in ``df`` (dynamic
-    overwrite, set on this write alone), then remove the ``emptied``
-    ones, which a dynamic overwrite leaves in place."""
-    df.write.option("partitionOverwriteMode", "dynamic").mode("overwrite").partitionBy(
-        key
-    ).parquet(path)
-    for v in emptied:
-        shutil.rmtree(os.path.join(path, f"{key}={v}"), ignore_errors=True)
+def _escape_path(value: str) -> str:
+    """A partition value as Spark writes it in a directory name."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value)
 
 
-def _publish_compacted(df: DataFrame, root: str, src: str, key: str, online: bool) -> None:
+def _overwrite_partitions(df: DataFrame, keys: list, path: str, targets) -> None:
+    """Rewrite only the ``keys`` partitions present in ``df`` (dynamic
+    overwrite, set on this write alone), then remove the ``targets``
+    partitions (value tuples) the write left without rows, which a
+    dynamic overwrite leaves in place. The written partitions come from
+    an observation the write itself fills: no extra job."""
+    obs = Observation()
+    df.observe(obs, F.expr(f"collect_set(struct({', '.join(keys)})) AS parts")).write.option(
+        "partitionOverwriteMode", "dynamic"
+    ).mode("overwrite").partitionBy(*keys).parquet(path)
+    written = {tuple(map(str, p)) for p in obs.get["parts"]}
+    for t in targets:
+        if tuple(map(str, t)) not in written:
+            parts = [f"{k}={_escape_path(str(v))}" for k, v in zip(keys, t)]
+            shutil.rmtree(os.path.join(path, *parts), ignore_errors=True)
+
+
+def _publish_compacted(df: DataFrame, root: str, src: str, keys: list, online: bool) -> None:
     """Write a compacted copy of the table at ``src`` and publish it:
     online, as a new generation under ``root`` behind the ``_CURRENT``
     pointer; offline, by swapping it into ``src``'s place."""
     dest = os.path.join(root, _gen_next(root)) if online else src + "_compacting"
-    df.write.mode("overwrite").partitionBy(key).parquet(dest)
+    df.write.mode("overwrite").partitionBy(*keys).parquet(dest)
     if online:
         _gen_publish(root, os.path.basename(dest), src)
     else:
@@ -193,6 +210,9 @@ class TSDBAdapter:
         # crashed batch would pass the filter and duplicate rows
         self._maxts_pending = os.path.join(path, "series_maxts.pending")
         self._maxts_synced = os.path.join(path, "series_maxts.synced")
+        # (series_kinds/ file listing, (series_id, kind) pairs verified
+        # against those files), see _check_series_kinds
+        self._kinds_seen: tuple = (None, frozenset())
         self._schema_mtime: float | None = None
         schema_file = os.path.join(path, SCHEMA_FILE)
         if os.path.exists(schema_file):
@@ -202,6 +222,8 @@ class TSDBAdapter:
             # point trigger a reload
             self._schema_mtime = os.path.getmtime(schema_file)
         self.config = config or TSDBConfig()
+        if os.path.exists(schema_file):
+            self._upgrade_rollup()
 
     @property
     def samples_path(self) -> str:
@@ -272,12 +294,12 @@ class TSDBAdapter:
         """Batch append samples; maintains the rollup log.
 
         ref: pkg/appender/appender.go:194-287 + SURVEY §3.3 — the whole
-        async pipeline becomes normalize → observe → dedup, materialized
-        by ONE checkpoint job that also fills the observation →
-        validate + kinds check + catalog delta from the observation →
-        write + rollup append.
+        async pipeline becomes normalize → shuffle by series → observe →
+        dedup, materialized by ONE checkpoint job that also fills the
+        observation → validate + kinds check + catalog delta from the
+        observation → samples write + one rollup write for every set.
         """
-        df, seen = app.observe_batch(app.normalize_samples(self.spark, data))
+        df, seen = app.observe_batch(app.by_series(app.normalize_samples(self.spark, data)))
         kept = seen
         if not self.config.override_old:
             # validation counts every row; the kinds and catalog deltas
@@ -317,33 +339,42 @@ class TSDBAdapter:
         else:
             NamesCatalog.load(self.path).merge(app.batch_names(facts)).save()
         if update_rollup:
-            # reuse the checkpointed batch (no plan recompute). The
-            # pre-write repartition on rdt collapses the agg shuffle's
-            # 32-way fan-out to one file per date dir (measured at
-            # sf0.1: 150 files -> 30, write 3.8s -> 1.3s) — rollup rows
-            # per (batch, day) are bounded by series count; a
-            # deployment with very large per-day rollups adds a
-            # series-id salt here exactly like compact_samples
-            batch = out.drop("dt")
-            for path, build in self._rollup_tables():
-                ru.with_rdt(build(batch)).repartition(F.col("rdt")).write.mode(
-                    "append"
-                ).partitionBy("rdt").parquet(path)
+            # every rollup set from the checkpointed batch, in one
+            # aggregate and one write (ref: pkg/appender/appender.go:
+            # 220-231), so an interrupted append cannot leave one set
+            # ahead of another
+            self._rollup_partials(out.drop("dt")).write.mode("append").partitionBy(
+                ru.SET_COL, "rdt"
+            ).parquet(self.rollup_path)
 
-    def _label_rollup_path(self, subset) -> str:
-        return os.path.join(self.path, "rollup_by_" + "_".join(subset))
+    def _rollup_partials(self, samples: DataFrame) -> DataFrame:
+        """Partial rows of every rollup set over ``samples``, with their
+        ``set`` and ``rdt`` partition columns."""
+        return ru.with_rdt(
+            ru.build_rollup(samples, self.config.granularity_ms, self.config.pre_aggregates)
+        )
 
-    def _rollup_tables(self) -> list:
-        """``(path, builder)`` for the per-series rollup, then each
-        declared pre-aggregate; a builder maps samples to partial rows."""
-        gran = self.config.granularity_ms
-        tables = [(self.rollup_path, lambda s: ru.build_rollup(s, gran))]
-        for subset in self.config.pre_aggregates:
-            tables.append((
-                self._label_rollup_path(subset),
-                lambda s, k=tuple(subset): ru.build_label_rollup(s, gran, k),
-            ))
-        return tables
+    def _set_path(self, subset=None) -> str:
+        """The subtree of one rollup set (``subset`` None: per-series),
+        its name escaped as Spark escapes a partition value."""
+        return os.path.join(self.rollup_path, f"{ru.SET_COL}={_escape_path(ru.set_name(subset))}")
+
+    def _upgrade_rollup(self) -> None:
+        """Rebuild from the samples, once, a rollup in the older layout
+        (``rollup/rdt=…`` plus a ``rollup_by_<labels>/`` table per
+        pre-aggregate); the old directories go after the rebuild, so an
+        interrupted upgrade is redone."""
+        old = glob.glob(os.path.join(self.rollup_path, "rdt=*")) + glob.glob(
+            os.path.join(self.path, "rollup_by_*")
+        )
+        if not old:
+            return
+        dts = [p.split("=", 1)[1] for p in glob.glob(os.path.join(self.samples_path, "dt=*"))]
+        if dts:
+            target_rdts, source_dts = self._rollup_rebuild_scope(dts, [])
+            self._rebuild_rollup_for_dates(source_dts, target_rdts)
+        for d in old:
+            shutil.rmtree(d, ignore_errors=True)
 
     def start_time(self) -> int | None:
         """Earliest queryable sample time in ms, or None for an empty
@@ -414,31 +445,33 @@ class TSDBAdapter:
         else:
             part = df.repartition(F.col("dt"))
         part = part.sortWithinPartitions("dt", "name", "ts")
-        _publish_compacted(part, self._samples_root, src, "dt", online)
+        _publish_compacted(part, self._samples_root, src, ["dt"], online)
 
     def compact_rollup(self, online: bool = False) -> None:
-        """Merge partial rollup rows (optional maintenance).
-        ``online=True`` publishes via the generation pointer exactly
-        like :meth:`compact_samples` — safe under concurrent readers."""
-        if not glob.glob(os.path.join(self.rollup_path, "rdt=*")):
+        """Merge partial rollup rows of every rollup set (optional
+        maintenance). ``online=True`` publishes via the generation
+        pointer exactly like :meth:`compact_samples` — safe under
+        concurrent readers."""
+        if not glob.glob(os.path.join(self.rollup_path, f"{ru.SET_COL}=*", "rdt=*")):
             return
         src = self.rollup_path
-        merged = ru.merge_partials(read_table(self.spark, src, ROLLUP_READ_SCHEMA).drop("rdt"))
-        _publish_compacted(ru.with_rdt(merged), self._rollup_root, src, "rdt", online)
+        rows = read_table(self.spark, src, ROLLUP_TABLE_READ_SCHEMA).drop("rdt")
+        merged = ru.merge_partials(rows)
+        _publish_compacted(ru.with_rdt(merged), self._rollup_root, src, [ru.SET_COL, "rdt"], online)
 
     # -- query -------------------------------------------------------------
 
     def querier(self) -> Querier:
         self._maybe_reload_schema()
-        rollup = self.rollup_path if os.path.exists(self.rollup_path) else None
+        rollup = self._set_path()
         label_rollups = {
-            tuple(subset): self._label_rollup_path(subset)
+            tuple(subset): self._set_path(subset)
             for subset in self.config.pre_aggregates
-            if os.path.exists(self._label_rollup_path(subset))
+            if os.path.exists(self._set_path(subset))
         }
         cat = NamesCatalog.load(self.path)
         return Querier(
-            self.spark, self.samples_path, rollup=rollup,
+            self.spark, self.samples_path, rollup=rollup if os.path.exists(rollup) else None,
             config=self.config, label_rollups=label_rollups,
             catalog={k: sorted(v) for k, v in cat.names.items()} if cat.exists() else None,
         )
@@ -526,8 +559,7 @@ class TSDBAdapter:
             return
         doomed_rdts = sorted({r["rdt"] for r in pairs})
         kept = df.where(F.col("dt").isin(affected_dts)).where(~cond)
-        kept_dts = {r["dt"] for r in kept.select("dt").distinct().collect()}
-        _overwrite_partitions(kept, "dt", self.samples_path, set(affected_dts) - kept_dts)
+        _overwrite_partitions(kept, ["dt"], self.samples_path, [(d,) for d in affected_dts])
         if os.path.exists(self.rollup_path):
             # dt reads back as a DATE — normalize to ISO strings for
             # the scope set-math, re-typing at the filter boundary
@@ -618,9 +650,20 @@ class TSDBAdapter:
         distributed joins over the checkpointed ``batch``, so its
         series never pass through the driver. Rebuilt from surviving
         samples after deletes, so deleting a series' history frees its
-        name+labels for re-typing."""
+        name+labels for re-typing. Pairs this adapter verified (up to
+        ``DRIVER_SERIES_LIMIT``) skip the join while the sidecar's file
+        listing is unchanged, so a steady batch of known series runs no
+        job; any writer's change to the sidecar empties that cache."""
+        listing = self._kinds_listing()
+        cached, seen = self._kinds_seen
+        if listing is None or listing != cached:
+            seen = frozenset()
+        if kinds is not None:
+            kinds = [k for k in kinds if k not in seen]
+            if not kinds:
+                return
         known = None
-        if os.path.exists(self.kinds_path):
+        if listing is not None:
             known = self.spark.read.schema(app.KINDS_SCHEMA).parquet(self.kinds_path)
         if kinds is None:
             new = app.series_kinds(batch)
@@ -634,22 +677,36 @@ class TSDBAdapter:
                 new = new.join(known, "series_id", "left_anti")
                 if new.isEmpty():
                     return
-        else:
-            if kinds and known is not None:
-                # broadcast the batch side: the sidecar holds every
-                # series ever seen and only streams through the join
-                matched = (
-                    F.broadcast(app.kinds_frame(self.spark, kinds))
-                    .join(known.withColumnRenamed("kind", "old"), "series_id")
-                    .collect()
-                )
-                _raise_kind_conflict([r for r in matched if r["kind"] != r["old"]])
-                known_ids = {r["series_id"] for r in matched}
-                kinds = [k for k in kinds if k[0] not in known_ids]
-            if not kinds:
-                return
-            new = app.kinds_frame(self.spark, kinds)
-        new.coalesce(1).write.mode("append").parquet(self.kinds_path)
+            new.coalesce(1).write.mode("append").parquet(self.kinds_path)
+            return
+        if known is not None:
+            # broadcast the batch side: the sidecar holds every series
+            # ever seen and only streams through the join
+            matched = (
+                F.broadcast(app.kinds_frame(self.spark, kinds))
+                .join(known.withColumnRenamed("kind", "old"), "series_id")
+                .collect()
+            )
+            _raise_kind_conflict([r for r in matched if r["kind"] != r["old"]])
+            known_ids = {r["series_id"] for r in matched}
+            seen |= {k for k in kinds if k[0] in known_ids}
+            kinds = [k for k in kinds if k[0] not in known_ids]
+        if kinds:
+            app.kinds_frame(self.spark, kinds).coalesce(1).write.mode("append").parquet(
+                self.kinds_path
+            )
+            seen |= set(kinds)
+            after = self._kinds_listing()
+            # the new listing vouches for the pairs only if its one new file is ours
+            listing = after if len(after - (listing or frozenset())) == 1 else None
+        self._kinds_seen = (listing, seen if len(seen) <= app.DRIVER_SERIES_LIMIT else frozenset())
+
+    def _kinds_listing(self) -> frozenset | None:
+        """The series-kind sidecar's data files, None when it is absent."""
+        try:
+            return frozenset(f for f in os.listdir(self.kinds_path) if f.startswith("part-"))
+        except OSError:
+            return None
 
     def _refresh_catalog(self) -> None:
         """Names may vanish when their last samples go — recompute the
@@ -693,23 +750,21 @@ class TSDBAdapter:
         return sorted(target), sorted(source)
 
     def _rebuild_rollup_for_dates(self, source_dts: list, target_rdts: list) -> None:
+        """Rewrite the ``target_rdts`` partitions of every rollup set
+        from the samples of ``source_dts``, in one aggregate and one
+        write."""
         from datetime import date
 
         # DATE literals for the DATE partition column, so the IN stays a
         # partition-pruning predicate (no column cast)
         src = [date.fromisoformat(s) for s in source_dts]
         fresh = self._samples().where(F.col("dt").isin(src)).drop("dt")
-        stale = None
-        for path, build in self._rollup_tables():
-            if not os.path.exists(path):
-                continue
-            partial = ru.with_rdt(build(fresh)).where(F.col("rdt").isin(target_rdts))
-            if stale is None:
-                # every table buckets the same samples, so the first
-                # (the per-series rollup) names the target rdts left empty
-                new_rdts = {r["rdt"] for r in partial.select("rdt").distinct().collect()}
-                stale = set(target_rdts) - new_rdts
-            _overwrite_partitions(partial, "rdt", path, stale)
+        partial = self._rollup_partials(fresh).where(F.col("rdt").isin(target_rdts))
+        sets = [ru.set_name(s) for s in [None, *self.config.pre_aggregates]]
+        _overwrite_partitions(
+            partial, [ru.SET_COL, "rdt"], self.rollup_path,
+            [(n, r) for n in sets for r in target_rdts],
+        )
 
     # -- retention ---------------------------------------------------------
 
@@ -737,10 +792,12 @@ class TSDBAdapter:
         cutoff_ms = now_ms - hours * 3_600_000
         gran = self.config.granularity_ms
         dropped = {"samples": self._drop_expired(self.samples_path, "dt", cutoff_ms, 0)}
-        for path, _ in self._rollup_tables():
-            # keyed by the table's directory under the TSDB root
-            table = os.path.relpath(path, self.path).split(os.sep)[0]
-            dropped[table] = self._drop_expired(path, "rdt", cutoff_ms, gran)
+        for subset in [None, *self.config.pre_aggregates]:
+            # keyed "rollup", or "rollup_by_<labels>" for a pre-aggregate
+            table = "_".join(["rollup", *(() if subset is None else ("by", *subset))])
+            dropped.setdefault(table, []).extend(
+                self._drop_expired(self._set_path(subset), "rdt", cutoff_ms, gran)
+            )
         if dropped["samples"]:
             self._refresh_catalog()
         return dropped

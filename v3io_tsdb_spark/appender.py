@@ -4,14 +4,16 @@ The reference's Add/AddFast + async ingest pipeline (per-metric pending
 lists, elastic queues, UpdateItem expressions; ref:
 pkg/appender/appender.go:194-287, pkg/appender/ingest.go:38-146,
 pkg/appender/store.go:292-484) collapses on Spark into: normalize (row
-dicts become an Arrow table, i.e. a JVM ``LocalRelation``) → observe →
-dedup + layout, materialized ONCE by the append's eager checkpoint.
+dicts become an Arrow table, i.e. a JVM ``LocalRelation``) → one
+shuffle by series → observe → dedup + layout, materialized ONCE by the
+append's eager checkpoint.
 That one job also fills the batch's :func:`observe_batch` facts —
 validation counters, per-series kinds, per-name label keys — so
 validation, the series-kind guard and the catalog delta run no Spark
 job of their own (a batch of more than :data:`DRIVER_SERIES_LIMIT`
 series runs the kinds guard as distributed joins instead). Then one
-partitioned, sorted Parquet append + one rollup partial append. The
+partitioned, sorted Parquet append + one rollup partial append that
+holds every rollup set. The
 state machine, LRU cache, and expression builder have no Spark
 counterpart because the write path is a bulk columnar append rather
 than a per-item read-modify-write.
@@ -240,20 +242,32 @@ def batch_names(facts: dict) -> dict:
     return out
 
 
-def prepare_for_write(df: DataFrame, config: TSDBConfig, num_buckets: int | None = None) -> DataFrame:
-    """Dedup + layout for the storage table.
+def by_series(df: DataFrame) -> DataFrame:
+    """Hash-partition a batch by ``series_id``: the one shuffle of an
+    append. The dedup of :func:`prepare_for_write` and the samples
+    write reuse it, and the batch's observations go above it: Spark's
+    adaptive planner drops an empty shuffle stage, and any observation
+    inside it, when an aggregate reads that stage."""
+    return df.repartition(F.col("series_id"))
+
+
+def prepare_for_write(df: DataFrame, config: TSDBConfig) -> DataFrame:
+    """Dedup + layout for the storage table, over a batch clustered by
+    :func:`by_series` (no shuffle of their own).
 
     Dedup on (series_id, ts) replicates the reference's
     duplicate-sample policy as idempotent last-write-wins
     (ref: pkg/appender/store.go:336-352, OverrideOld
-    pkg/config/config.go:146-147). Rows are bucketed by
-    (dt, series_id-hash) so no single date becomes one giant task, and
-    sorted within partitions by (name, series_id, ts) so Parquet
-    row-group min/max statistics prune both name and time predicates
-    (ref analog: per-series KV items + sharding keys,
-    pkg/partmgr/partmgr.go:459-487).
+    pkg/config/config.go:146-147). A series' rows sit in one task, so
+    no date becomes one giant task and each file's row groups are
+    series-clustered. Rows are sorted within partitions by
+    (dt, name, series_id, ts): the ``dt``-partitioned write needs no
+    sort of its own, and Parquet row-group min/max statistics prune
+    both name and time predicates (ref analog: per-series KV items +
+    sharding keys, pkg/partmgr/partmgr.go:459-487). The dedup groups
+    by the same four columns — ``dt`` follows from ``ts`` and ``name``
+    from ``series_id`` — so one sort serves it and the layout.
     """
-    df = df.dropDuplicates(["series_id", "ts"])
     # no dt for a ts whose microseconds overflow a long: the ANSI
     # overflow would fail the checkpoint job before the append reads
     # its observed counters (which reject such a batch before any write)
@@ -261,6 +275,5 @@ def prepare_for_write(df: DataFrame, config: TSDBConfig, num_buckets: int | None
     df = df.withColumn(
         "dt", F.when(fits, F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd"))
     )
-    n = num_buckets or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = df.repartition(n, F.col("dt"), F.pmod(F.col("series_id"), F.lit(n)))
-    return df.sortWithinPartitions("name", "series_id", "ts")
+    layout = ["dt", "name", "series_id", "ts"]
+    return df.dropDuplicates(layout).sortWithinPartitions(*layout)

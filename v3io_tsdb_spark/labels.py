@@ -82,11 +82,6 @@ def labels_map_sql(col_name: str) -> str:
     )
 
 
-def labels_map_col(col_name: str) -> Column:
-    """:func:`labels_map_sql` of the named column, as a Column."""
-    return F.expr(labels_map_sql(col_name))
-
-
 def series_id_sql(name_col: str = "name", labels_col: str = "labels") -> str:
     """Series identity = xxhash64(name, canonical labels string), as
     SQL text: the one definition, parsed once (see

@@ -18,9 +18,6 @@ reference/oracle independent of per-partition association order.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from v3io_tsdb_spark.errors import BadRequest
 
 RAW_AGGREGATES = ("count", "sum", "sqr", "min", "max", "last")
@@ -115,11 +112,6 @@ def raw_agg_sql(
         "last": f"max_by({v}, {t})",
     }
     return [f"{exprs[r]} AS `{r}`" for r in raws]
-
-
-def raw_agg_exprs(raws: list[str], value_col: str = "value", ts_col: str = "ts") -> list[Column]:
-    """:func:`raw_agg_sql` as Columns."""
-    return [F.expr(e) for e in raw_agg_sql(raws, value_col, ts_col)]
 
 
 def derived_sql(func: str) -> str:

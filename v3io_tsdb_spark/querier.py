@@ -122,7 +122,7 @@ class Querier:
         self.config = config or TSDBConfig()
         self._samples = samples
         self._rollup = rollup
-        # cross-label pre-aggregates: {(label, ...): DataFrame|path}
+        # cross-label pre-aggregate sets: {(label, ...): DataFrame|path}
         # (ref: pkg/appender/appender.go:220-231, select.go:261-283)
         self._label_rollups = {
             tuple(sorted(k)): v for k, v in (label_rollups or {}).items()
@@ -146,16 +146,13 @@ class Querier:
         """Whether a per-series rollup is attached, without opening it."""
         return self._rollup is not None
 
-    def rollup_df(self) -> DataFrame | None:
-        if isinstance(self._rollup, str):
-            return schema.read_table(self.spark, self._rollup, schema.ROLLUP_READ_SCHEMA)
-        return self._rollup
-
-    def label_rollup_df(self, subset) -> DataFrame | None:
-        key = tuple(sorted(subset))
-        v = self._label_rollups.get(key)
+    def rollup_df(self, subset=None) -> DataFrame | None:
+        """The per-series rollup set, or the pre-aggregate set of the
+        labels ``subset``: a DataFrame, or the path of the set's subtree
+        of the rollup table (one ``ROLLUP_SCHEMA`` for every set)."""
+        v = self._rollup if subset is None else self._label_rollups.get(tuple(sorted(subset)))
         if isinstance(v, str):
-            return schema.read_table(self.spark, v, schema.label_rollup_read_schema(key))
+            return schema.read_table(self.spark, v, schema.ROLLUP_READ_SCHEMA)
         return v
 
     # -- public API --------------------------------------------------------
@@ -587,7 +584,7 @@ class Querier:
         pred = self._label_rollup_plan(funcs, step_ms, window_ms, params, group_by)
         if pred is not None:
             return self._aggregate_from_rollup(
-                self.label_rollup_df(group_by), pred,
+                self.rollup_df(group_by), pred,
                 params, funcs, from_ms, to_ms, step_ms, window_ms, group_by,
             )
         if self._can_use_rollup(funcs, step_ms, window_ms, params):
@@ -618,18 +615,14 @@ class Querier:
                 cells = f"SELECT * FROM (SELECT *, {t} AS t FROM ({present})) WHERE t <= {to_ms}"
             return self._finish_aggregate(cells, aggs, funcs, step_ms, group_by)
 
-    def _finish_aggregate(
-        self, cells, aggs, funcs, step_ms, group_by, cross=False, labels=True
-    ) -> DataFrame:
+    def _finish_aggregate(self, cells, aggs, funcs, step_ms, group_by, cross=False) -> DataFrame:
         """Aggregate ``cells`` (SQL of rows tagged with their cell time
         ``t``) per series, per group-by label set, or — ``cross`` —
         across series; then derived columns + projection, in one
-        statement. ``labels=False``: the rows carry their group-by
-        labels as columns (a pre-aggregate). Empty buckets are
-        naturally absent (count==0 suppression, ref:
-        pkg/aggregate/iterator.go:361-364)."""
+        statement. Empty buckets are naturally absent (count==0
+        suppression, ref: pkg/aggregate/iterator.go:361-364)."""
         if group_by or cross:
-            keys = [f"element_at(labels, {lit(g)})" if labels else ident(g) for g in group_by]
+            keys = [f"element_at(labels, {lit(g)})" for g in group_by]
             named = [f"{k} AS {ident(g)}" for k, g in zip(keys, group_by)]
             grouped = (
                 f"SELECT {', '.join(['name', *named, 't', *aggs])} FROM ({cells}) "
@@ -718,20 +711,20 @@ class Querier:
     def _label_rollup_plan(
         self, funcs, step_ms, window_ms, params: SelectParams, group_by
     ) -> str | None:
-        """Choose a cross-label pre-aggregate table when GroupBy exactly
+        """Choose a cross-label pre-aggregate set when GroupBy exactly
         matches a declared label subset and the filter only references
         those labels (ref: pkg/pquerier/select.go:261-283). Returns the
-        filter rewritten onto the table's label columns ('' for none),
-        or None when the route declines."""
+        filter ('' for none), or None when the route declines."""
         if not group_by or self._label_rollups.get(tuple(sorted(group_by))) is None:
             return None
         if not self._rollup_step_ok(funcs, step_ms, window_ms, params):
             return None
         pred = translate_filter(params.filter) if params.filter else ""
+        rest = pred
         for g in group_by:
-            pred = pred.replace(f"labels['{g}']", f"`{g}`")
-        # the filter needs labels the table lacks
-        return None if "labels[" in pred else pred
+            rest = rest.replace(f"labels['{g}']", "")
+        # a pre-aggregate row's labels map holds only its own labels
+        return None if "labels[" in rest else pred
 
     def _rollup_cells(self, src, from_ms, to_ms, step_ms, window_ms) -> str:
         """SQL mapping the rollup rows of ``src`` to query cells by
@@ -768,19 +761,18 @@ class Querier:
         time (see :meth:`_rollup_cells`), replicating the reference's
         mapping (ref: pkg/pquerier/collector.go:187-234
         aggregateServerAggregates), and combine them with the rollup
-        merge algebra. ``r`` is the per-series rollup or a pre-aggregate
-        already keyed by the group-by labels (no ``labels`` column);
+        merge algebra. ``r`` is the per-series rollup set or a
+        pre-aggregate set, whose ``labels`` hold the group-by labels;
         ``pred`` is its SQL filter, '' for none.
 
         The scan reads only the ``rdt`` partitions the cells can use:
         the medians kept lie in [from − bottom, to + step], so the
         bucket starts lie half a granule below that."""
         names = self._requested_names(params)
-        cols = r.columns
         preds = [in_list("name", names)] if names else []
         if pred:
             preds.append(pred)
-        if "rdt" in cols:
+        if "rdt" in r.columns:
             half = self.config.granularity_ms // 2
             bottom = window_ms if window_ms else step_ms
             preds.append(
@@ -792,5 +784,4 @@ class Querier:
             return self._finish_aggregate(
                 self._rollup_cells(src, from_ms, to_ms, step_ms, window_ms),
                 ru.combine_sql(agg.required_raw(funcs)), funcs, step_ms, group_by,
-                labels="labels" in cols,
             )

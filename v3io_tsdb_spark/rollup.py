@@ -3,39 +3,47 @@
 The reference maintains per-series, per-bucket aggregate arrays
 (count/sum/sqr/min/max/last) updated by server-side expressions at
 ingest time (ref: pkg/aggregate/aggregate.go:68-79,
-pkg/aggregate/functions.go:30-151, pkg/appender/store.go:374-397).
+pkg/aggregate/functions.go:30-151, pkg/appender/store.go:374-397); one
+``Add`` updates the series item and every ``agg/<labels>`` pre-aggregate
+item (ref: pkg/appender/appender.go:220-231).
 
-Spark-first design: the rollup is an **append-only partial-aggregate
-log**. Every ingested batch appends one partially-aggregated row per
-(series, bucket); the query path (and the optional compactor) merges
-partials with the standard mergeable-aggregate algebra:
+Spark-first design: the rollup is ONE **append-only partial-aggregate
+log** for every rollup set — the per-series set and one set per declared
+cross-label pre-aggregate, partitioned by ``set`` (:func:`set_name`) and
+``rdt``. A batch appends one partial row per (set key, bucket), every
+set from one ``GROUPING SETS`` aggregate (:func:`build_rollup`). All
+rows share ``schema.ROLLUP_SCHEMA``; a pre-aggregate row's ``labels``
+holds only its label subset and its ``series_id`` is null. Readers and
+the compactor merge partials with one algebra, :func:`combine_sql`:
 
     count=Σcount, sum=Σsum, sqr=Σsqr, min=min(min), max=max(max),
     last=argmax(last, last_ts)
 
-The algebra is defined once: partials are
-``operators.aggregates.raw_agg_exprs`` plus ``max(ts) AS last_ts``
-(:func:`_partial_exprs`), and :func:`combine_sql` is the merge that
-:func:`merge_partials` and both querier rollup routes use.
-
-This keeps ingest free of read-modify-write (no MERGE needed on plain
-Parquet), is idempotent-friendly, and scales: each batch does exactly
-one map-side-combinable groupBy. Cross-label pre-aggregates
-(ref: pkg/appender/appender.go:220-231) are additional rollup tables
-keyed by a label subset.
+No read-modify-write at ingest (no MERGE on plain Parquet), and one
+map-side-combinable aggregate per batch, whatever the number of sets.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from v3io_tsdb_spark.labels import labels_map_col, labels_string_col
-from v3io_tsdb_spark.operators.aggregates import RAW_AGGREGATES, raw_agg_exprs
-from v3io_tsdb_spark.operators.bucketing import wall_bucket
+from v3io_tsdb_spark.labels import labels_map_sql, labels_string_sql
+from v3io_tsdb_spark.operators.aggregates import RAW_AGGREGATES, raw_agg_sql
+from v3io_tsdb_spark.schema import SET_COL
+from v3io_tsdb_spark.sqltext import lit, views
 
 ROLLUP_AGG_COLS = RAW_AGGREGATES + ("last_ts",)
 _MERGE = {"count": "sum", "sum": "sum", "sqr": "sum", "min": "min", "max": "max", "last_ts": "max"}
+
+
+def set_name(subset=None) -> str:
+    """The ``set`` partition value: ``series`` for the per-series set
+    (``subset`` None), ``by,<label>,...`` over the sorted labels for a
+    pre-aggregate. Distinct subsets get distinct names, since a label
+    key holds no comma (the canonical labels string separates its pairs
+    with commas)."""
+    return "series" if subset is None else ",".join(["by", *sorted(subset)])
 
 
 def combine_sql(cols=ROLLUP_AGG_COLS) -> list[str]:
@@ -47,11 +55,6 @@ def combine_sql(cols=ROLLUP_AGG_COLS) -> list[str]:
     ]
 
 
-def combine_exprs(cols=ROLLUP_AGG_COLS) -> list[Column]:
-    """:func:`combine_sql` as Columns."""
-    return [F.expr(e) for e in combine_sql(cols)]
-
-
 def with_rdt(partial: DataFrame) -> DataFrame:
     """Add the ``rdt`` partition column: the UTC date of the bucket start."""
     return partial.withColumn(
@@ -59,47 +62,71 @@ def with_rdt(partial: DataFrame) -> DataFrame:
     )
 
 
-def _partial_exprs() -> list[Column]:
-    return raw_agg_exprs(list(RAW_AGGREGATES)) + [F.max("ts").alias("last_ts")]
+def _build(samples: DataFrame, gran_ms: int, subsets: list) -> DataFrame:
+    """Partial rows of the given rollup sets (None = the per-series set)
+    over float samples, in one ``GROUPING SETS`` aggregate: the
+    per-series set groups by ``(name, series_id, labels string,
+    bucket)``, a pre-aggregate by ``(name, <its labels>, bucket)``. The
+    labels map rides through the per-series grouping as its string
+    (constant per series_id): a map-typed key would force SortAggregate."""
+    subsets = list(dict.fromkeys(None if s is None else tuple(sorted(s)) for s in subsets))
+    col = {k: f"_l{i}" for i, k in enumerate(sorted({k for s in subsets if s for k in s}))}
+
+    def keys_of(s):
+        if s is None:
+            return ["name", "series_id", "_lstr", "bucket"]
+        return ["name", *(col[k] for k in s), "bucket"]
+
+    keys = list(dict.fromkeys(k for s in subsets for k in keys_of(s)))
+
+    def gid(s):  # grouping_id() of the set: a bit per key it leaves out
+        return sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in keys_of(s))
+
+    pairs = ", ".join(f"{lit(k)}, {c}" for k, c in col.items())
+    pre = f"map_filter(map({pairs}), (k, v) -> v IS NOT NULL)"
+    labels, sid = labels_map_sql("_lstr"), "series_id"
+    if None not in subsets:
+        labels, sid = pre, "CAST(NULL AS BIGINT) AS series_id"
+    elif col:
+        labels = f"IF(grouping(series_id) = 0, {labels}, {pre})"
+    inputs = ", ".join([
+        f"CAST(floor(ts / {gran_ms}) * {gran_ms} AS BIGINT) AS bucket",
+        f"{labels_string_sql('labels')} AS _lstr",
+        *(f"element_at(labels, {lit(k)}) AS {c}" for k, c in col.items()),
+    ])
+    aggs = ", ".join([*raw_agg_sql(list(RAW_AGGREGATES)), "max(ts) AS last_ts"])
+    names = " ".join(f"WHEN {gid(s)} THEN {lit(set_name(s))}" for s in subsets)
+    sets = ", ".join("(" + ", ".join(keys_of(s)) + ")" for s in subsets)
+    with views(samples) as (src,):
+        return samples.sparkSession.sql(
+            f"SELECT bucket, name, {labels} AS labels, {sid}, {aggs}, "
+            f"CASE grouping_id() {names} END AS `{SET_COL}` "
+            f"FROM (SELECT name, series_id, ts, value, {inputs} FROM {src} "
+            f"WHERE value IS NOT NULL) GROUP BY {', '.join(keys)} GROUPING SETS ({sets})"
+        )
 
 
-def _samples_by_bucket(samples: DataFrame, gran_ms: int) -> DataFrame:
-    return samples.where(F.col("value").isNotNull()).withColumn(
-        "bucket", wall_bucket("ts", gran_ms)
-    )
-
-
-def _per_series(df: DataFrame, aggs: list) -> DataFrame:
-    """One row per (series, bucket) in the rollup table's columns.
-
-    The labels map rides through the groupBy as a serialized group-key
-    string (constant per series_id, so groups are unchanged) — a
-    map-typed first() would force SortAggregate."""
-    return (
-        df.withColumn("_lstr", labels_string_col(F.col("labels")))
-        .groupBy("name", "series_id", "_lstr", "bucket")
-        .agg(*aggs)
-        .withColumn("labels", labels_map_col("_lstr"))
-        .select("bucket", "name", "labels", "series_id", *ROLLUP_AGG_COLS)
-    )
-
-
-def build_rollup(samples: DataFrame, gran_ms: int) -> DataFrame:
-    """Partial rollup rows for a batch of samples (float metrics only)."""
-    return _per_series(_samples_by_bucket(samples, gran_ms), _partial_exprs())
+def build_rollup(samples: DataFrame, gran_ms: int, pre_aggregates=()) -> DataFrame:
+    """Partial rows of every rollup set of a batch of samples — the
+    per-series set, then one set per pre-aggregate label subset — with
+    their ``set`` column, from one aggregate (float metrics only)."""
+    return _build(samples, gran_ms, [None, *pre_aggregates])
 
 
 def build_label_rollup(samples: DataFrame, gran_ms: int, label_subset: tuple) -> DataFrame:
-    """Cross-label pre-aggregate: rollup keyed by a label subset
-    (ref: pkg/partmgr/partmgr.go:472-485 agg/<labels>/ path)."""
-    keys = [F.element_at(F.col("labels"), k).alias(k) for k in label_subset]
-    return (
-        _samples_by_bucket(samples, gran_ms)
-        .groupBy(F.col("name"), *keys, F.col("bucket"))
-        .agg(*_partial_exprs())
-    )
+    """The rows of one cross-label pre-aggregate set, without the
+    ``set`` column (ref: pkg/partmgr/partmgr.go:472-485 agg/<labels>/)."""
+    return _build(samples, gran_ms, [tuple(label_subset)]).drop(SET_COL)
 
 
 def merge_partials(rollup: DataFrame) -> DataFrame:
-    """Compact partial rollup rows to one row per (series, bucket)."""
-    return _per_series(rollup, combine_exprs())
+    """Compact partial rollup rows to one row per (set, series or label
+    subset, bucket)."""
+    sets = [f"`{SET_COL}`"] if SET_COL in rollup.columns else []
+    out = ["bucket", "name", f"{labels_map_sql('_lstr')} AS labels", "series_id", *combine_sql()]
+    with views(rollup) as (src,):
+        return rollup.sparkSession.sql(
+            f"SELECT {', '.join(out + sets)} "
+            f"FROM (SELECT *, {labels_string_sql('labels')} AS _lstr FROM {src}) "
+            f"GROUP BY {', '.join([*sets, 'name', 'series_id', '_lstr', 'bucket'])}"
+        )

@@ -7,7 +7,8 @@ rollup fields; pkg/appender/appender.go:194-208 for the sample shape).
 All timestamps are int64 Unix milliseconds (``ts`` / ``bucket``),
 matching the reference and avoiding timezone ambiguity; a derived
 ``dt`` (yyyy-MM-dd) partitions the storage table so time-range
-predicates prune Parquet partitions (``rdt`` the rollup tables).
+predicates prune Parquet partitions (``rdt`` the rollup table, whose
+rollup sets are partitioned by ``set`` above it).
 The engine opens its tables with the declared read schemas below, as
 the reference keeps its table schema in memory (ref:
 pkg/partmgr/partmgr.go:228-264), so opening a table runs no Spark job.
@@ -70,17 +71,13 @@ def _read_schema(fields, partition: str) -> T.StructType:
 
 
 SAMPLES_READ_SCHEMA = _read_schema(SAMPLES_SCHEMA.fields, "dt")
+# the rollup table's partition column naming a row's rollup set
+SET_COL = "set"
+# one rollup set's subtree; the whole rollup table adds its set column
 ROLLUP_READ_SCHEMA = _read_schema(ROLLUP_SCHEMA.fields, "rdt")
-
-
-def label_rollup_read_schema(subset) -> T.StructType:
-    """A cross-label pre-aggregate: name, one string per label of the
-    subset, bucket, then the rollup's aggregate columns."""
-    labels = [T.StructField(k, T.StringType()) for k in subset]
-    aggs = ROLLUP_SCHEMA.fields[4:]  # count .. last_ts
-    return _read_schema(
-        [ROLLUP_SCHEMA["name"], *labels, ROLLUP_SCHEMA["bucket"], *aggs], "rdt"
-    )
+ROLLUP_TABLE_READ_SCHEMA = T.StructType(
+    [*ROLLUP_READ_SCHEMA.fields, T.StructField(SET_COL, T.StringType())]
+)
 
 
 def read_table(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
