@@ -248,17 +248,22 @@ def _src_tag(sf_dir: str, table: str) -> str:
 def _persist_path(prefix: str, sf_dir: str, table: str) -> str:
     """/tmp artifact path keyed by the source fingerprint, with stale-
     sibling pruning: when testdata is regenerated in place the
-    fingerprint changes, so every OLDER artifact of the same prefix AND
-    same sf-dir basename is an orphan that would otherwise accumulate
-    forever — sweep them before handing out the fresh path. Artifacts
-    for other sf dirs (different basename) are left alone."""
-    import glob
+    fingerprint changes, and when an artifact's ``_vN`` prefix is bumped
+    its older versions are superseded, so every other artifact of the
+    same family (the prefix less its ``_vN``) AND same sf-dir basename
+    is an orphan that would otherwise accumulate forever — sweep them
+    before handing out the fresh path. Artifacts for other sf dirs
+    (different basename) or other families are left alone."""
+    import re
     import shutil
 
     base = os.path.basename(os.path.normpath(sf_dir))
     path = f"/tmp/{prefix}_{_src_tag(sf_dir, table)}"
-    for stale in glob.glob(f"/tmp/{prefix}_{base}_*"):
-        if stale != path:
+    family = re.sub(r"_v\d+$", "", prefix)
+    sibling = re.compile(rf"{re.escape(family)}(_v\d+)?_{re.escape(base)}_\d+_\d+")
+    for name in os.listdir("/tmp"):
+        stale = os.path.join("/tmp", name)
+        if sibling.fullmatch(name) and stale != path:
             shutil.rmtree(stale, ignore_errors=True)
     return path
 

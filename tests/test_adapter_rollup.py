@@ -16,6 +16,7 @@ from v3io_tsdb_spark.adapter import TSDBAdapter
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest, SchemaError
 from v3io_tsdb_spark.querier import SelectParams
+from v3io_tsdb_spark.schema import ROLLUP_TABLE_READ_SCHEMA, read_table
 
 HOUR = 3_600_000
 # T0 aligned down to the hour for bucket-aligned comparisons
@@ -24,6 +25,18 @@ T0H = (T0 // HOUR) * HOUR
 
 def _mk(tmp_path, spark, **cfg):
     return TSDBAdapter(spark, str(tmp_path / "tsdb"), TSDBConfig(**cfg)).create()
+
+
+def _rollup(a):
+    """The rollup rows of the table log's current version."""
+    a.log.refresh()
+    return read_table(a.spark, a._table("rollup"), ROLLUP_TABLE_READ_SCHEMA)
+
+
+def _files(a, table="samples"):
+    """The data files of ``table`` at the log's current version."""
+    a.log.refresh()
+    return sorted(os.path.join(a.path, f) for f in a.log.files[table])
 
 
 def test_create_append_select(tmp_path, spark):
@@ -148,7 +161,7 @@ def test_delete_leaves_session_conf_unchanged(tmp_path, spark):
     assert sorted(r["value"] for r in left.collect()) == [1.0] * 3 + [2.0] * 5
     day0 = datetime.fromtimestamp(T0H / 1000, timezone.utc).date()
     want = {str(day0): 3, str(day0 + timedelta(days=1)): 5}
-    cnt = spark.read.parquet(a.rollup_path).groupBy("set", "rdt").agg(F.sum("count").alias("n"))
+    cnt = _rollup(a).groupBy("set", "rdt").agg(F.sum("count").alias("n"))
     assert {(r["set"], str(r["rdt"])): r["n"] for r in cnt.collect()} == {
         (s, d): n for s in ("series", "by,os") for d, n in want.items()
     }
@@ -188,9 +201,9 @@ def test_compact_rollup(tmp_path, spark):
         pts = [(T0H + start + i * 10, batch * 10.0 + i + 0.5) for i in range(5)]
         values += pts
         a.append([{"ts": t, "name": "m", "labels": labels, "value": v} for t, v in pts])
-    pre = spark.read.parquet(a.rollup_path).count()
+    pre = _rollup(a).count()
     a.compact_rollup()
-    post = spark.read.parquet(a.rollup_path).collect()
+    post = _rollup(a).collect()
     assert len(post) == 1  # one (series, bucket)
     assert pre >= 3
     row = post[0]
@@ -359,7 +372,7 @@ def test_delete_rebuilds_midnight_spanning_rdt(tmp_path, spark):
         ]
     )
     a.delete(from_time=M + 15 * MIN, to_time=M + 45 * MIN)  # only the 2.0 sample
-    rollup = spark.read.parquet(a.rollup_path)
+    rollup = _rollup(a)
     row = rollup.where(F.col("bucket") == B).collect()
     assert len(row) == 1 and row[0]["sum"] == 1.0 and row[0]["count"] == 1
     left = a.select(SelectParams(name="cpu", from_time=M - DAY, to_time=M + DAY))
@@ -423,8 +436,13 @@ def test_names_catalog_seeded_for_pre_catalog_table(tmp_path, spark):
 
     a = _mk(tmp_path, spark)
     a.append([{"ts": T0, "name": "cpu", "labels": {"os": "linux"}, "value": 1.0}])
-    # simulate a pre-catalog table: drop the sidecar
-    os.remove(os.path.join(a.path, "_names_catalog.json"))
+    # simulate a pre-catalog table: one with samples and no log, so the
+    # log is bootstrapped from its directories, without a catalog
+    import shutil
+
+    shutil.rmtree(os.path.join(a.path, "_log"))
+    a = TSDBAdapter(spark, a.path)
+    assert not a.log.names
     a.append([{"ts": T0 + MIN, "name": "mem", "labels": {"zone": "z1"}, "value": 2.0}])
     assert a.metric_names() == ["cpu", "mem"]  # cpu survived the reseed
     a.querier()._validate_group_by(None, ["os"])  # cpu's label keys too
@@ -455,7 +473,6 @@ def test_compact_samples(tmp_path, spark):
     """Small-file compaction: N appends leave N file sets per dt
     partition; compaction merges to one file per date dir and changes
     neither the row set nor the rollup."""
-    import glob
     import os
 
     a = _mk(tmp_path, spark)
@@ -464,19 +481,12 @@ def test_compact_samples(tmp_path, spark):
             [{"ts": T0H + batch * MIN + i * 10, "name": "m", "labels": {}, "value": float(i)}
              for i in range(5)]
         )
-    part_dirs = glob.glob(os.path.join(a.samples_path, "dt=*"))
-    assert part_dirs
-    pre_files = glob.glob(os.path.join(part_dirs[0], "*.parquet"))
-    assert len(pre_files) >= 3
-    pre_rows = sorted(
-        (r["ts"], r["value"]) for r in spark.read.parquet(a.samples_path).collect()
-    )
+    assert len({p["dt"] for p in a.log.files["samples"].values()}) == 1
+    assert len(_files(a)) >= 3
+    pre_rows = sorted((r["ts"], r["value"]) for r in a._samples().collect())
     a.compact_samples()
-    post_files = glob.glob(os.path.join(part_dirs[0], "*.parquet"))
-    assert len(post_files) == 1
-    post_rows = sorted(
-        (r["ts"], r["value"]) for r in spark.read.parquet(a.samples_path).collect()
-    )
+    assert len(_files(a)) == 1
+    post_rows = sorted((r["ts"], r["value"]) for r in a._samples().collect())
     assert post_rows == pre_rows
     # queries still route and agree after the swap
     res = a.select(name="m", from_time=T0H, to_time=T0H + 3 * MIN)
@@ -487,7 +497,6 @@ def test_compact_samples_size_targeted(tmp_path, spark):
     """target_file_mb fans compaction out over multiple files instead
     of one-per-date, preserving the row set (the deployment knob for
     ~target-sized files)."""
-    import glob
     import os
 
     a = _mk(tmp_path, spark)
@@ -496,16 +505,10 @@ def test_compact_samples_size_targeted(tmp_path, spark):
             [{"ts": T0H + batch * MIN + i * 10, "name": "m", "labels": {"i": str(i)},
               "value": float(i)} for i in range(50)]
         )
-    pre_rows = sorted(
-        (r["ts"], r["value"]) for r in spark.read.parquet(a.samples_path).collect()
-    )
+    pre_rows = sorted((r["ts"], r["value"]) for r in a._samples().collect())
     a.compact_samples(target_file_mb=1)
-    part_dirs = glob.glob(os.path.join(a.samples_path, "dt=*"))
-    files = [f for d in part_dirs for f in glob.glob(os.path.join(d, "*.parquet"))]
-    assert len(files) >= 1
-    post_rows = sorted(
-        (r["ts"], r["value"]) for r in spark.read.parquet(a.samples_path).collect()
-    )
+    assert len(_files(a)) >= 1
+    post_rows = sorted((r["ts"], r["value"]) for r in a._samples().collect())
     assert post_rows == pre_rows
     # the fan-out arithmetic itself (test data is under 1 MB, so the
     # write above exercises the buckets=1 floor)
@@ -518,26 +521,33 @@ def test_compact_samples_size_targeted(tmp_path, spark):
     assert _compact_buckets(10_000 * mb, 128) == 79  # ceil(10000/128)
 
 
-def test_swap_dirs_crash_safety(tmp_path):
-    """The compactor swap must never leave the live path absent: the
-    live dir is renamed ASIDE before promotion (a crash leaves old or
-    new data, not neither), and a stale _old leftover from a previous
-    crash is swept, not fatal."""
-    import os
+def test_swap_dirs_crash_safety(tmp_path, spark, monkeypatch):
+    """A compaction that dies at any point — in its write, or at its log
+    commit — leaves the table answering from the old files, and the
+    next compaction completes."""
+    from v3io_tsdb_spark import tablelog
 
-    from v3io_tsdb_spark.adapter import _swap_dirs
+    a = _mk(tmp_path, spark)
+    for batch in range(2):
+        a.append([{"ts": T0H + batch * MIN + i * 10, "name": "m", "labels": {}, "value": 1.0}
+                  for i in range(5)])
+    old = _files(a)
+    stage, create = TSDBAdapter._stage, tablelog.TableLog._create
 
-    live, staged = str(tmp_path / "samples"), str(tmp_path / "samples_compacting")
-    os.makedirs(live)
-    open(os.path.join(live, "old.parquet"), "w").write("old")
-    os.makedirs(staged)
-    open(os.path.join(staged, "new.parquet"), "w").write("new")
-    # leftover from a hypothetical earlier crash after promotion
-    os.makedirs(str(tmp_path / "samples_old"))
-    _swap_dirs(live, staged)
-    assert os.listdir(live) == ["new.parquet"]
-    assert not os.path.exists(staged)
-    assert not os.path.exists(str(tmp_path / "samples_old"))
+    def fail(*args, **kwargs):
+        raise OSError("crash")
+
+    for target, name in ((TSDBAdapter, "_stage"), (tablelog.TableLog, "_create")):
+        monkeypatch.setattr(target, name, fail)
+        with pytest.raises(OSError):
+            a.compact_samples()
+        monkeypatch.undo()
+        assert _files(a) == old
+        assert a.select(name="m", from_time=T0H, to_time=T0H + HOUR).count() == 10
+    a.compact_samples()
+    assert len(_files(a)) == 1
+    assert a.select(name="m", from_time=T0H, to_time=T0H + HOUR).count() == 10
+    assert (stage, create) == (TSDBAdapter._stage, tablelog.TableLog._create)
 
 
 def test_typed_variant_values_roundtrip(tmp_path, spark):
@@ -657,7 +667,6 @@ def test_compact_samples_sorted_for_data_skipping(tmp_path, spark):
     """Compacted files are sorted by (name, ts) within each file so
     Parquet row-group min/max stats stay selective on both — the data-
     skipping property a name- or range-filtered scan relies on."""
-    import glob
     import os
 
     import pyarrow.parquet as pq
@@ -669,7 +678,7 @@ def test_compact_samples_sorted_for_data_skipping(tmp_path, spark):
     a.append([{"ts": T0H + 5 + i * 10, "name": "aa", "labels": {}, "value": 2.0}
               for i in range(50)])
     a.compact_samples()
-    f = glob.glob(os.path.join(a.samples_path, "dt=*", "*.parquet"))[0]
+    f = _files(a)[0]
     t = pq.read_table(f, columns=["name", "ts"])
     names, ts = t["name"].to_pylist(), t["ts"].to_pylist()
     assert names == sorted(names)

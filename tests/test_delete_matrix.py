@@ -7,8 +7,6 @@ plain time ranges on Parquet; every other dimension of the matrix is
 exercised: the surviving rows AND the surviving dt partition dirs are
 checked, plus rollup agreement after the delete."""
 
-import glob
-import os
 
 import pytest
 from conftest import MIN, T0
@@ -85,21 +83,18 @@ def test_delete_matrix(tmp_path, spark, desc, kwargs, survives):
             (r["t"], r["name"], r["labels"]["os"], r["value"]) for r in res.collect()
         )
     else:
-        got = [] if not os.path.exists(a.samples_path) or not glob.glob(
-            os.path.join(a.samples_path, "dt=*")
-        ) else sorted(
+        got = sorted(
             (r["t"], r["name"], r["labels"]["os"], r["value"])
             for r in a.select(SelectParams(from_time=0, to_time=9_999_999_999_999)).collect()
         )
     assert got == expected, desc
 
-    # partition dirs for fully-deleted days must be gone (the reference
-    # asserts expectedPartitions after partition-spanning deletes)
+    # partitions of fully-deleted days must be gone from the table (the
+    # reference asserts expectedPartitions after partition-spanning
+    # deletes): the log's current version holds no file in them
     surviving_days = {t // DAY for (t, _, _, _) in expected}
-    dirs = {
-        d.split("dt=")[1]
-        for d in glob.glob(os.path.join(a.samples_path, "dt=*"))
-    } if os.path.exists(a.samples_path) else set()
+    a.log.refresh()
+    dirs = {p["dt"] for p in a.log.files["samples"].values()}
     import datetime
 
     expected_dirs = {
@@ -121,13 +116,10 @@ def test_delete_matrix(tmp_path, spark, desc, kwargs, survives):
 def test_delete_collects_once_before_samples_write(spark, tmp_path, monkeypatch):
     """The doomed rows' dt and rdt partitions come from ONE distinct
     collect (a shuffle-map job plus a result job under AQE) before the
-    samples partitions are rewritten; the partitions each rewrite
-    leaves empty come from an observation of the write itself. The
-    whole delete — samples rewrite, one rollup rebuild for every set,
-    catalog and kinds refresh — stays within a fixed job budget."""
+    samples partitions are rewritten. The whole delete — samples
+    rewrite, one rollup rebuild for every set, catalog and kinds
+    refresh, one log commit — stays within a fixed job budget."""
     import uuid
-
-    from v3io_tsdb_spark import adapter as adapter_mod
 
     a = TSDBAdapter(spark, str(tmp_path / "db"),
                     TSDBConfig(aggregation_granularity="1h", pre_aggregates=(("os",),))).create()
@@ -135,18 +127,18 @@ def test_delete_collects_once_before_samples_write(spark, tmp_path, monkeypatch)
     sc = spark.sparkContext
     grp = f"delete-{uuid.uuid4()}"
     before_write = []
-    write = adapter_mod._overwrite_partitions
+    stage = TSDBAdapter._stage
 
     def jobs():
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(grp))
 
-    def counted(df, keys, path, targets):
-        if keys == ["dt"] and not before_write:
+    def counted(self, df, table, parts=()):
+        if table == "samples" and not before_write:
             before_write.append(jobs())
-        return write(df, keys, path, targets)
+        return stage(self, df, table, parts)
 
-    monkeypatch.setattr(adapter_mod, "_overwrite_partitions", counted)
+    monkeypatch.setattr(TSDBAdapter, "_stage", counted)
     sc.setJobGroup(grp, "delete")
     try:
         a.delete(from_time=D0, to_time=D0 + HOUR, filter="os=='linux'")

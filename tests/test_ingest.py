@@ -18,6 +18,7 @@ from v3io_tsdb_spark.appender import normalize_samples
 from v3io_tsdb_spark.catalog import NamesCatalog
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.errors import BadRequest
+from v3io_tsdb_spark.schema import read_table
 
 T0 = 1704067200000  # 2024-01-01T00:00Z
 MIN = 60_000
@@ -45,8 +46,14 @@ def _leaf_names(df):
     return {leaves.apply(i).nodeName() for i in range(leaves.size())}
 
 
-def _parquet_files(path):
-    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+def _kinds_files(ad):
+    """The series-kinds files at the table log's current version."""
+    ad.log.refresh()
+    return sorted(ad.log.files["kinds"])
+
+
+def _kinds_table(ad):
+    return read_table(ad.spark, ad._table("kinds"), appender.KINDS_SCHEMA)
 
 
 def test_row_input_plans_as_local_relation(spark):
@@ -131,7 +138,7 @@ def test_two_kinds_at_one_sample_rejected(spark, tmp_path):
             ]
         )
     assert not os.path.exists(ad.samples_path)
-    assert not os.path.exists(ad.kinds_path)
+    assert not _kinds_files(ad)
     assert NamesCatalog.load(ad.path).names == {}
 
 
@@ -143,7 +150,7 @@ def test_no_override_conflicting_kind_older_than_watermark(spark, tmp_path):
     ad = _mk(spark, tmp_path, override_old=False)
     ad.append([{"ts": T0 + MIN, "name": "m", "labels": {}, "value": 1.0}])
     ad.append([{"ts": T0, "name": "m", "labels": {}, "value_str": "late"}])
-    assert [r["kind"] for r in spark.read.parquet(ad.kinds_path).collect()] == ["float"]
+    assert [r["kind"] for r in _kinds_table(ad).collect()] == ["float"]
     rows = ad.select(name="m", from_time=T0, to_time=T0 + 2 * MIN).collect()
     assert [(r["t"], r["value"]) for r in rows] == [(T0 + MIN, 1.0)]
     with pytest.raises(BadRequest, match="Cannot append str type metric to float"):
@@ -153,18 +160,18 @@ def test_no_override_conflicting_kind_older_than_watermark(spark, tmp_path):
 def test_known_series_leave_kinds_sidecar_alone(spark, tmp_path):
     ad = _mk(spark, tmp_path)
     ad.append(_scrape(0, hosts=2))
-    files = _parquet_files(ad.kinds_path)
+    files = _kinds_files(ad)
     for k in range(1, 5):
         ad.append(_scrape(k, hosts=2))
-    assert _parquet_files(ad.kinds_path) == files
+    assert _kinds_files(ad) == files
     ad.append([{"ts": T0, "name": "m2", "labels": {}, "value_int": 7}])
-    assert len(_parquet_files(ad.kinds_path)) == len(files) + 1
-    kinds = spark.read.parquet(ad.kinds_path).groupBy("kind").count().collect()
+    assert len(_kinds_files(ad)) == len(files) + 1
+    kinds = _kinds_table(ad).groupBy("kind").count().collect()
     assert {r["kind"]: r["count"] for r in kinds} == {"float": 2, "int": 1}
 
 
 def _kinds(spark, ad):
-    rows = spark.read.parquet(ad.kinds_path).collect()
+    rows = _kinds_table(ad).collect()
     return sorted((r["series_id"], r["kind"]) for r in rows)
 
 
@@ -200,9 +207,9 @@ def test_many_series_kinds_guard_is_distributed(spark, tmp_path, monkeypatch):
     ad.append(_scrape(0, hosts=5))
     kinds = _kinds(spark, ad)
     assert [k for _, k in kinds] == ["float"] * 5
-    files = _parquet_files(ad.kinds_path)
+    files = _kinds_files(ad)
     ad.append(_scrape(1, hosts=5))
-    assert _parquet_files(ad.kinds_path) == files
+    assert _kinds_files(ad) == files
     ad.append(_scrape(2, hosts=6))
     assert len(_kinds(spark, ad)) == 6
     clash = [

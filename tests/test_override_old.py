@@ -135,34 +135,43 @@ def test_no_override_rollup_sees_only_kept_rows(spark, tmp_path):
 
 
 def test_no_override_crash_between_write_and_watermark_fold(spark, tmp_path):
-    """Crash-window golden (ADVICE r8): samples must become durable
-    BEFORE the watermark fold, so a crash between the two leaves the
-    sidecar stale-LOW — and a naive retry of the same batch would pass
-    the monotonic filter and duplicate committed rows. The write-ahead
-    token pair (series_maxts.pending / .synced) detects the torn append
-    on the next ingest and reseeds the sidecar from committed samples,
-    so the retry dedups instead of duplicating."""
+    """Crash-window golden (ADVICE r8): an append that dies after its
+    samples and high-water-mark writes but before its commit is
+    invisible — the samples and the marks publish in one log commit, so
+    the marks never lag the samples — and the client's retry of the
+    batch lands exactly once."""
     ad = _mk(spark, tmp_path / "db", override_old=False)
     ad.append([{"ts": T0 + 1000, "name": "m", "labels": {}, "value": 1.0}])
 
     batch_b = [{"ts": T0 + 2000, "name": "m", "labels": {}, "value": 2.0}]
-    # simulate the crash: samples write succeeds, watermark fold dies
-    real_fold = ad._update_maxts
-    ad._update_maxts = lambda batch: (_ for _ in ()).throw(OSError("crash"))
-    with pytest.raises(OSError):
-        ad.append(batch_b)
-    ad._update_maxts = real_fold
-    # torn state on disk: B committed, watermark still at t0+1000
-    assert _rows(ad) == [(T0 + 1000, 1.0), (T0 + 2000, 2.0)]
+    stage = TSDBAdapter._stage
+
+    def crashing(self, df, table, parts=()):
+        out = stage(self, df, table, parts)
+        if table == "samples":
+            raise OSError("crash")
+        return out
+
+    TSDBAdapter._stage = crashing
+    try:
+        with pytest.raises(OSError):
+            ad.append(batch_b)
+    finally:
+        TSDBAdapter._stage = stage
+    # the crashed batch is invisible
+    assert _rows(ad) == [(T0 + 1000, 1.0)]
 
     # the ingest client retries the whole batch (at-least-once source)
     ad2 = TSDBAdapter(spark, str(tmp_path / "db"))  # fresh process
     assert ad2.config.override_old is False
     ad2.append(batch_b)
+    ad2.append(batch_b)
     assert _rows(ad2) == [(T0 + 1000, 1.0), (T0 + 2000, 2.0)]  # no dup
 
-    # and the sidecar is consistent again: a genuinely new sample lands
-    ad2.append([{"ts": T0 + 3000, "name": "m", "labels": {}, "value": 3.0}])
+    # and the marks are consistent: an older sample is dropped, a
+    # genuinely new one lands
+    ad2.append([{"ts": T0 + 1500, "name": "m", "labels": {}, "value": 9.0},
+                {"ts": T0 + 3000, "name": "m", "labels": {}, "value": 3.0}])
     assert _rows(ad2) == [
         (T0 + 1000, 1.0), (T0 + 2000, 2.0), (T0 + 3000, 3.0)
     ]

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark import prom
+from v3io_tsdb_spark import rollup as ru
 from v3io_tsdb_spark.adapter import TSDBAdapter
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.querier import Querier, SelectParams
@@ -142,12 +143,14 @@ def test_two_label_pre_aggregate_matches_raw_group_by(spark, table):
 def test_older_layout_without_variant_columns(spark, tmp_path):
     """A samples file written before the variant columns existed still
     answers; its variant columns read as null."""
-    ad = TSDBAdapter(spark, str(tmp_path / "db"), TSDBConfig()).create()
+    path = str(tmp_path / "db")
+    TSDBConfig().save(path)  # planted before the table has a log
     old = spark.createDataFrame(
         [(T0 + i * MIN, "m1", {"host": "h0"}, 7, float(i)) for i in range(5)],
         "ts long, name string, labels map<string,string>, series_id long, value double",
     )
-    old.write.parquet(os.path.join(ad.samples_path, "dt=2024-01-01"))
+    old.write.parquet(os.path.join(path, "samples", "dt=2024-01-01"))
+    ad = TSDBAdapter(spark, path)
     raw = ad.select(name="m1", from_time=T0, to_time=T0 + 10 * MIN).orderBy("t").collect()
     assert [r["value"] for r in raw] == [0.0, 1.0, 2.0, 3.0, 4.0]
     assert all(r["value_str"] is None and r["value_int"] is None for r in raw)
@@ -163,7 +166,7 @@ def test_samples_schema_stable_across_lifecycle(spark, tmp_path):
     ad.append(_rows(names=("m1",), hosts=1, days=1, every=60))
     assert ad._samples().schema == before
     ad.delete(from_time=T0 - DAY, to_time=T1)
-    assert not [d for d in os.listdir(ad.samples_path) if d.startswith("dt=")]
+    assert not ad.log.files["samples"]
     after = ad._samples()
     assert after.schema == before
     assert after.count() == 0
@@ -302,8 +305,9 @@ def test_rollup_scan_pruned_by_rdt(spark, wide, case):
     assert "(rdt >= 2024-01-02)" in parts and "(rdt <= 2024-01-03)" in parts, parts
     # the same rollup rows without an rdt column: nothing to prune on
     subset = ("dc",) if "group_by" in PRUNED[case] else None
-    rows = read_table(spark, wide._set_path(subset), ROLLUP_READ_SCHEMA).drop("rdt")
-    unpruned = Querier(spark, wide.samples_path, config=wide.config, catalog=q._catalog,
+    rows = read_table(spark, wide._table("rollup", ru.set_name(subset)),
+                      ROLLUP_READ_SCHEMA).drop("rdt")
+    unpruned = Querier(spark, wide._table("samples"), config=wide.config, catalog=q._catalog,
                        **({"label_rollups": {subset: rows}} if subset else {"rollup": rows}))
     ref = unpruned.select(params)
     assert "rdt" not in _scan_filters(ref, "PartitionFilters")

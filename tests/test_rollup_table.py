@@ -13,6 +13,7 @@ from v3io_tsdb_spark import rollup as ru
 from v3io_tsdb_spark.adapter import TSDBAdapter
 from v3io_tsdb_spark.config import TSDBConfig
 from v3io_tsdb_spark.querier import SelectParams
+from v3io_tsdb_spark.schema import ROLLUP_READ_SCHEMA, read_table
 
 T0 = 1704067200000  # 2024-01-01T00:00Z
 MIN = 60_000
@@ -23,6 +24,12 @@ DAY = 24 * HOUR
 def _mk(spark, tmp_path, **cfg):
     cfg.setdefault("aggregation_granularity", "1h")
     return TSDBAdapter(spark, str(tmp_path / "db"), TSDBConfig(**cfg)).create()
+
+
+def _set_rows(ad, subset=None):
+    """The rows of one rollup set at the table log's current version."""
+    ad.log.refresh()
+    return read_table(ad.spark, ad._table("rollup", ru.set_name(subset)), ROLLUP_READ_SCHEMA)
 
 
 def _batch(k, hosts=6, minutes=30):
@@ -81,7 +88,8 @@ def test_label_name_spark_escapes_keeps_its_set(spark, tmp_path):
     directory (``k:x`` → ``set=by,k%3Ax``) still routes to its set."""
     ad = _mk(spark, tmp_path, pre_aggregates=(("k:x",),))
     ad.append([dict(r, labels={"k:x": r["labels"]["dc"]}) for r in _batch(0)])
-    assert os.path.isdir(ad._set_path(("k:x",)))
+    assert os.path.isdir(os.path.join(ad.rollup_path, "set=by,k%3Ax"))
+    assert _set_rows(ad, ("k:x",)).count() > 0
     params = dict(name="cpu", functions="sum,count", step="4h", group_by="k:x",
                   from_time=T0, to_time=T0 + DAY)
     q = ad.querier()
@@ -127,10 +135,10 @@ def test_compact_rollup_compacts_every_set(spark, tmp_path):
     params = dict(name="cpu", functions="sum,count", step="1d", group_by="dc",
                   from_time=T0, to_time=T0 + DAY)
     before = _cells(ad.select(SelectParams(**params)), ["dc", "t"])
-    assert spark.read.parquet(ad._set_path(("dc",))).count() == 3 * 3
+    assert _set_rows(ad, ("dc",)).count() == 3 * 3
     ad.compact_rollup()
-    assert spark.read.parquet(ad._set_path(("dc",))).count() == 3
-    assert spark.read.parquet(ad._set_path()).count() == 6
+    assert _set_rows(ad, ("dc",)).count() == 3
+    assert _set_rows(ad).count() == 6
     assert _cells(ad.select(SelectParams(**params)), ["dc", "t"]) == before
 
 
@@ -143,10 +151,12 @@ def test_older_layout_rebuilt_once_from_samples(spark, tmp_path):
     ad.append(_batch(0))
     ad.append([dict(r, ts=r["ts"] + DAY) for r in _batch(1)])
     root = ad.rollup_path
-    for d in glob.glob(os.path.join(ad._set_path(), "rdt=*")):
+    # an older table has no log: it is bootstrapped from its directories
+    shutil.rmtree(os.path.join(ad.path, "_log"))
+    for d in glob.glob(os.path.join(root, "set=series", "rdt=*")):
         os.rename(d, os.path.join(root, os.path.basename(d)))
-    os.rename(ad._set_path(("dc",)), os.path.join(ad.path, "rollup_by_dc"))
-    shutil.rmtree(ad._set_path())
+    os.rename(os.path.join(root, "set=by,dc"), os.path.join(ad.path, "rollup_by_dc"))
+    shutil.rmtree(os.path.join(root, "set=series"))
 
     reopened = TSDBAdapter(spark, ad.path)
     assert not glob.glob(os.path.join(root, "rdt=*"))

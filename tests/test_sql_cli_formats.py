@@ -389,10 +389,9 @@ def test_parse_query_reference_goldens():
         parse_query("select avg(cpu), max(cpu) as cpu")
 
 
-def test_cli_compact_online_and_offline(tmp_path, spark, capsys):
-    import os
-
+def test_cli_compact(tmp_path, spark, capsys):
     from v3io_tsdb_spark import cli
+    from v3io_tsdb_spark.tablelog import TableLog
 
     path = str(tmp_path / "cli_compact_db")
     assert cli.main(["create", "-p", path, "--granularity", "1h"]) == 0
@@ -401,13 +400,16 @@ def test_cli_compact_online_and_offline(tmp_path, spark, capsys):
         "cpu,host=a,1.5,1704067200000\ncpu,host=a,2.5,1704067260000\n"
     )
     assert cli.main(["add", "-p", path, "-f", str(csv_file)]) == 0
-    assert cli.main(["compact", "-p", path]) == 0
-    assert "offline" in capsys.readouterr().out
-    assert not os.path.exists(os.path.join(path, "samples", "_CURRENT"))
-    assert cli.main(["compact", "-p", path, "--online"]) == 0
-    assert "online" in capsys.readouterr().out
-    assert os.path.exists(os.path.join(path, "samples", "_CURRENT"))
-    # data survives both modes
+    before = TableLog(path)
+    before.refresh()
+    for _ in range(2):
+        assert cli.main(["compact", "-p", path]) == 0
+        assert "compacted samples + rollup" in capsys.readouterr().out
+    after = TableLog(path)
+    after.refresh()
+    # each compaction of each table is one log commit
+    assert after.version == before.version + 4
+    # data survives both compactions
     rc = cli.main(["query", "-p", path, "-m", "cpu",
                    "-a", "1704067200000", "-e", "1704070800000", "-o", "csv"])
     assert rc == 0

@@ -5,12 +5,17 @@ Mirrors the reference's V3ioAdapter surface
 273-477 DeleteDB, 786-805 CountMetrics) on a Parquet-backed layout:
 
     <path>/_tsdb_schema.json      config (the ".schema" analog)
+    <path>/_log/                  the table log: the files below that make
+                                  up each version (tablelog.py)
     <path>/samples/               long table, partitioned by dt
     <path>/rollup/                partial-aggregate log, partitioned by set
                                   and rdt: set=series/ holds the per-series
                                   rollup, set=by,<labels>/ each declared
                                   cross-label pre-aggregate
+    <path>/series_kinds/          (series_id, kind) of every series
+    <path>/series_maxts/          per-series last ts (override_old=False)
 
+Every change writes new files, then publishes them in one log commit.
 """
 
 from __future__ import annotations
@@ -19,8 +24,9 @@ import glob
 import os
 import shutil
 import uuid
+from datetime import date
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from v3io_tsdb_spark import appender as app
@@ -31,13 +37,12 @@ from v3io_tsdb_spark.errors import BadRequest, SchemaError
 from v3io_tsdb_spark.querier import Querier, SelectParams
 from v3io_tsdb_spark.schema import ROLLUP_TABLE_READ_SCHEMA, SAMPLES_READ_SCHEMA, read_table
 from v3io_tsdb_spark.sql.filters import translate_filter
+from v3io_tsdb_spark.sqltext import lit
+from v3io_tsdb_spark.tablelog import TableLog, partition_values
 from v3io_tsdb_spark.timeutils import str2unix_ms
 
 DAY_MS = 86_400_000
-# characters Spark writes as %XX in a partition directory name
-# (ExternalCatalogUtils.escapePathName)
-_PATH_ESCAPED = set('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(1, 32)}
-# the per-series high-water-mark sidecar, read with this declared schema
+# the per-series high-water marks, read with this declared schema
 _MAXTS_SCHEMA = "series_id long, max_ts long"
 
 
@@ -60,158 +65,19 @@ def _compact_buckets(total_bytes: int, target_mb: int) -> int:
     return max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
 
 
-def _write_token(path: str, token: str) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(token)
-    os.replace(tmp, path)
-
-
-def _read_token(path: str) -> str | None:
-    try:
-        with open(path) as f:
-            return f.read().strip()
-    except OSError:
-        return None
-
-
-def _gen_resolve(root: str) -> str:
-    """Live data dir for ``root``: ``root/<gen>`` when an online-
-    compaction pointer exists, else ``root`` itself (flat layout)."""
-    cur = os.path.join(root, "_CURRENT")
-    try:
-        with open(cur) as f:
-            return os.path.join(root, f.read().strip())
-    except OSError:
-        return root
-
-
-def _gen_publish(root: str, new_gen: str, source: str) -> None:
-    """Atomically point ``root/_CURRENT`` at ``new_gen``, then purge
-    every generation except the new one and its source. The source is
-    retained exactly ONE compaction cycle, so the concurrent-reader
-    guarantee is BOUNDED: a query whose file index was resolved against
-    the source keeps reading existing files only until the NEXT online
-    compaction publishes (a reader still running across two publishes
-    can hit deleted files). That bound fits the stated maintenance
-    cadence (compaction is an occasional offline-hours CLI command, not
-    a continuous background process); a cadence where readers routinely
-    outlive two compactions needs the snapshot-isolated table format
-    (Delta/Iceberg) documented in SCALE.md §6 — offline ``_swap_dirs``
-    gives no concurrent-reader window at all. When the source was the flat layout,
-    its ``dt=``/``rdt=`` dirs are the retained 'previous generation'
-    and are purged on the NEXT online compaction."""
-    tmp = os.path.join(root, "_CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(new_gen)
-    os.replace(tmp, os.path.join(root, "_CURRENT"))
-    keep = {new_gen, os.path.basename(source)}
-    for d in os.listdir(root):
-        full = os.path.join(root, d)
-        if d.startswith("gen-") and d not in keep:
-            shutil.rmtree(full, ignore_errors=True)
-        # flat-layout leftovers: purge once the source is a generation
-        # (i.e. the flat data already survived one full cycle)
-        elif (
-            os.path.basename(source).startswith("gen-")
-            and os.path.isdir(full)
-            and "=" in d
-        ):
-            shutil.rmtree(full, ignore_errors=True)
-
-
-def _gen_next(root: str) -> str:
-    n = 0
-    if os.path.isdir(root):
-        for d in os.listdir(root):
-            if d.startswith("gen-"):
-                try:
-                    n = max(n, int(d.split("-", 1)[1]))
-                except ValueError:
-                    pass
-    return f"gen-{n + 1:06d}"
-
-
-def _swap_dirs(live: str, staged: str) -> None:
-    """Crash-safe table-directory swap for the compactors: rename the
-    live dir ASIDE first, promote the staged one, then delete the old
-    copy. A crash at any point leaves either the old or the new data
-    under the live path — never neither (the delete-first version left
-    the table with NO data and a rerun silently no-oping on the
-    missing-path guard). Renames within one filesystem are atomic;
-    stale ``_old`` leftovers from a crash after promotion are swept on
-    the next swap."""
-    old = live + "_old"
-    shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
-    os.rename(live, old)
-    os.rename(staged, live)
-    shutil.rmtree(old)
-
-
-def _replace_sidecar(df: DataFrame, path: str) -> None:
-    """Write ``df`` as one file to a staging dir, then move it into
-    place (crash-safe swap when ``path`` already exists)."""
-    tmp = path + "_staging"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        _swap_dirs(path, tmp)
-    else:
-        os.rename(tmp, path)
-
-
-def _escape_path(value: str) -> str:
-    """A partition value as Spark writes it in a directory name."""
-    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value)
-
-
-def _overwrite_partitions(df: DataFrame, keys: list, path: str, targets) -> None:
-    """Rewrite only the ``keys`` partitions present in ``df`` (dynamic
-    overwrite, set on this write alone), then remove the ``targets``
-    partitions (value tuples) the write left without rows, which a
-    dynamic overwrite leaves in place. The written partitions come from
-    an observation the write itself fills: no extra job."""
-    obs = Observation()
-    df.observe(obs, F.expr(f"collect_set(struct({', '.join(keys)})) AS parts")).write.option(
-        "partitionOverwriteMode", "dynamic"
-    ).mode("overwrite").partitionBy(*keys).parquet(path)
-    written = {tuple(map(str, p)) for p in obs.get["parts"]}
-    for t in targets:
-        if tuple(map(str, t)) not in written:
-            parts = [f"{k}={_escape_path(str(v))}" for k, v in zip(keys, t)]
-            shutil.rmtree(os.path.join(path, *parts), ignore_errors=True)
-
-
-def _publish_compacted(df: DataFrame, root: str, src: str, keys: list, online: bool) -> None:
-    """Write a compacted copy of the table at ``src`` and publish it:
-    online, as a new generation under ``root`` behind the ``_CURRENT``
-    pointer; offline, by swapping it into ``src``'s place."""
-    dest = os.path.join(root, _gen_next(root)) if online else src + "_compacting"
-    df.write.mode("overwrite").partitionBy(*keys).parquet(dest)
-    if online:
-        _gen_publish(root, os.path.basename(dest), src)
-    else:
-        _swap_dirs(src, dest)
+def _marks(df: DataFrame) -> DataFrame:
+    """Per-series high-water marks (series_id, max_ts) of samples or marks."""
+    ts = "max_ts" if "max_ts" in df.columns else "ts"
+    return df.groupBy("series_id").agg(F.max(ts).alias("max_ts"))
 
 
 class TSDBAdapter:
     def __init__(self, spark: SparkSession, path: str, config: TSDBConfig | None = None):
         self.spark = spark
         self.path = path
-        self._samples_root = os.path.join(path, "samples")
-        self._rollup_root = os.path.join(path, "rollup")
-        self.kinds_path = os.path.join(path, "series_kinds")
-        self.maxts_path = os.path.join(path, "series_maxts")
-        # write-ahead sync tokens for the maxts sidecar: `pending` is
-        # stamped BEFORE a no-override samples write, `synced` after
-        # the watermark fold commits; inequality on the next append
-        # means a crash landed between the two (samples durable,
-        # watermark stale-low) and the sidecar must be reseeded before
-        # the monotonic filter trusts it — otherwise a retry of the
-        # crashed batch would pass the filter and duplicate rows
-        self._maxts_pending = os.path.join(path, "series_maxts.pending")
-        self._maxts_synced = os.path.join(path, "series_maxts.synced")
-        # (series_kinds/ file listing, (series_id, kind) pairs verified
-        # against those files), see _check_series_kinds
+        self.log = TableLog(path)
+        # (log version, (series_id, kind) pairs verified at that
+        # version), see _check_series_kinds
         self._kinds_seen: tuple = (None, frozenset())
         self._schema_mtime: float | None = None
         schema_file = os.path.join(path, SCHEMA_FILE)
@@ -223,29 +89,56 @@ class TSDBAdapter:
             self._schema_mtime = os.path.getmtime(schema_file)
         self.config = config or TSDBConfig()
         if os.path.exists(schema_file):
+            self.log.refresh()
             self._upgrade_rollup()
 
     @property
     def samples_path(self) -> str:
-        """Current samples data directory, resolved through the
-        generation pointer when online compaction has created one
-        (``samples/_CURRENT`` names the live ``gen-N`` dir); the flat
-        pre-compaction layout otherwise. Every reader and writer in
-        the adapter goes through this property, so a pointer swap is
-        the single publication point."""
-        return _gen_resolve(self._samples_root)
+        """The samples table's directory, the base of its partitions."""
+        return os.path.join(self.path, self.log.roots["samples"])
 
     @property
     def rollup_path(self) -> str:
-        return _gen_resolve(self._rollup_root)
+        return os.path.join(self.path, self.log.roots["rollup"])
+
+    def _table(self, table: str, set_name: str | None = None, files=None) -> tuple:
+        """(base directory, files) of ``table`` at the log's current
+        version (or of ``files``); of one rollup set with ``set_name``,
+        based at its directory so that ``rdt`` is its one partition."""
+        base = os.path.join(self.path, self.log.roots[table])
+        files = [
+            f for f, p in (self.log.files[table] if files is None else files).items()
+            if set_name is None or p["set"] == set_name
+        ]
+        if set_name is not None and files:
+            base = os.path.join(base, os.path.relpath(files[0], self.log.roots[table]).split(os.sep)[0])
+        return base, [os.path.join(self.path, f) for f in files]
+
+    def _stage(self, df: DataFrame, table: str, parts=()) -> dict:
+        """Write ``df`` as new, unpublished files of ``table``: {file:
+        partition values}. Written to a fresh ``_``-prefixed directory,
+        which listings skip, so no other writer's files are mistaken for
+        its own, then moved into their partition directories."""
+        root = self.log.roots[table]
+        stage = os.path.join(self.path, root, f"_stage-{uuid.uuid4().hex}")
+        df.write.partitionBy(*parts).parquet(stage)
+        out = {}
+        for d, _, names in os.walk(stage):
+            rel = os.path.relpath(d, stage)
+            for n in names:
+                if n.startswith("part-"):
+                    f = os.path.normpath(os.path.join(root, rel, n))
+                    os.makedirs(os.path.dirname(os.path.join(self.path, f)), exist_ok=True)
+                    os.rename(os.path.join(d, n), os.path.join(self.path, f))
+                    out[f] = partition_values(rel)
+        shutil.rmtree(stage, ignore_errors=True)
+        return out
 
     def _maybe_reload_schema(self) -> None:
-        """Hot-reload the on-disk schema before query planning: a
-        long-lived session picks up an external config change (e.g. a
-        granularity edit by another writer) without reopening the
-        adapter. Mtime-gated exactly like the reference's
-        ReadAndUpdateSchema (ref: pkg/partmgr/partmgr.go:228-264) — the
-        stat is the only cost on the unchanged path."""
+        """Hot-reload the on-disk schema before query planning, so a
+        long-lived session sees another writer's config edit. Mtime-gated
+        like the reference's ReadAndUpdateSchema
+        (ref: pkg/partmgr/partmgr.go:228-264)."""
         schema_file = os.path.join(self.path, SCHEMA_FILE)
         try:
             mtime = os.path.getmtime(schema_file)
@@ -275,10 +168,8 @@ class TSDBAdapter:
             self.config.validate()
         self.config.save(self.path)
         self._schema_mtime = os.path.getmtime(schema_file)
-        # Fresh table → empty catalog from day one, so the pre-catalog
-        # rebuild path in append() only ever fires for tables created
-        # before the catalog feature existed.
-        NamesCatalog(self.path).save()
+        # version 0: no files, and an empty names catalog from day one
+        self.log.refresh()
         return self
 
     def exists(self) -> bool:
@@ -287,65 +178,65 @@ class TSDBAdapter:
     def delete_db(self) -> None:
         """Delete-all (ref: pkg/tsdb/v3iotsdb.go:273-290 DeleteAll path)."""
         shutil.rmtree(self.path, ignore_errors=True)
+        self.log, self._kinds_seen = TableLog(self.path), (None, frozenset())
 
     # -- ingest ------------------------------------------------------------
 
     def append(self, data, validate: bool = True, update_rollup: bool = True) -> None:
         """Batch append samples; maintains the rollup log.
 
-        ref: pkg/appender/appender.go:194-287 + SURVEY §3.3 — the whole
-        async pipeline becomes normalize → shuffle by series → observe →
-        dedup, materialized by ONE checkpoint job that also fills the
-        observation → validate + kinds check + catalog delta from the
-        observation → samples write + one rollup write for every set.
+        ref: pkg/appender/appender.go:194-287 + SURVEY §3.3 — normalize →
+        shuffle by series → observe → dedup, materialized by ONE
+        checkpoint job that also fills the observations (validation,
+        kinds and catalog deltas, content key) → the samples and every
+        rollup set, written unpublished → one log commit. An interrupted
+        append leaves nothing visible; one whose content key is
+        committed (a retry, a replayed micro-batch) changes nothing.
         """
+        self.log.refresh()
         df, seen = app.observe_batch(app.by_series(app.normalize_samples(self.spark, data)))
         kept = seen
         if not self.config.override_old:
             # validation counts every row; the kinds and catalog deltas
             # only the rows the watermark filter keeps
-            df, kept = app.observe_batch(self._monotonic_filter(df))
+            wm = self._watermarks()
+            seed = wm if not self.log.files["maxts"] else None
+            df, kept = app.observe_batch(self._monotonic_filter(df, wm))
         # Materialize the normalize/dedup pipeline ONCE: the same job
-        # fills the observations, and the write, watermark fold and
-        # rollup builds below reuse the checkpointed batch instead of
-        # recomputing the whole write plan per consumer.
-        out = app.prepare_for_write(df, self.config).localCheckpoint(eager=True)
+        # fills the observations, and the writes below reuse the
+        # checkpointed batch instead of recomputing the write plan.
+        out, key = app.observe_key(app.prepare_for_write(df, self.config))
+        out = out.localCheckpoint(eager=True)
         seen_facts = seen.get
         if validate:
             app.validate_samples(seen_facts)
         app.check_writable(seen_facts)
-        facts = kept.get
-        # Pre-catalog table? (data written before the catalog existed)
-        # Seed from ALL existing samples, not just this batch, or the
-        # catalog would silently hide previously ingested metrics.
-        needs_seed = not NamesCatalog.load(self.path).exists() and os.path.exists(
-            self.samples_path
-        )
+        key = app.content_key(key.get)
+        if key in self.log.keys:
+            return
+        facts, version, add = kept.get, self.log.version, {}
         if validate:
-            self._check_series_kinds(app.batch_kinds(facts), out)
+            add["kinds"], verified = self._check_series_kinds(app.batch_kinds(facts), out)
         if not self.config.override_old:
-            # stamp the write-ahead token BEFORE samples become durable:
-            # if we crash after the write but before the watermark fold,
-            # the next append sees pending != synced and reseeds
-            token = uuid.uuid4().hex
-            _write_token(self._maxts_pending, token)
-        out.write.mode("append").partitionBy("dt").parquet(self.samples_path)
-        if not self.config.override_old:
-            self._update_maxts(out)
-            _write_token(self._maxts_synced, token)
-        # ingest-side names directory (ref: pkg/appender/store.go:190-203)
-        if needs_seed:
-            NamesCatalog.rebuild(self.path, self._samples()).save()
-        else:
-            NamesCatalog.load(self.path).merge(app.batch_names(facts)).save()
+            # the batch's marks, and the seed of a table that had none
+            marks = _marks(out) if seed is None else _marks(out).unionByName(seed)
+            add["maxts"] = self._stage(marks.coalesce(1), "maxts")
+        add["samples"] = self._stage(out, "samples", ["dt"])
         if update_rollup:
             # every rollup set from the checkpointed batch, in one
-            # aggregate and one write (ref: pkg/appender/appender.go:
-            # 220-231), so an interrupted append cannot leave one set
-            # ahead of another
-            self._rollup_partials(out.drop("dt")).write.mode("append").partitionBy(
-                ru.SET_COL, "rdt"
-            ).parquet(self.rollup_path)
+            # aggregate (ref: pkg/appender/appender.go:220-231)
+            add["rollup"] = self._stage(
+                self._rollup_partials(out.drop("dt")), "rollup", [ru.SET_COL, "rdt"]
+            )
+        # ingest-side names directory (ref: pkg/appender/store.go:190-203)
+        names = app.batch_names(facts)
+        if NamesCatalog.load(self.path, self.log).exists():
+            names = {"merge": names}
+        else:  # a table from before the catalog: seed it from every sample
+            names = {"names": NamesCatalog.rebuild(self.path, self._samples()).merge(names).names}
+        ok = self.log.commit(add=add, key=key, **names) and self.log.version == version + 1
+        if validate:
+            self._kinds_seen = (self.log.version if ok else None, verified)
 
     def _rollup_partials(self, samples: DataFrame) -> DataFrame:
         """Partial rows of every rollup set over ``samples``, with their
@@ -354,25 +245,21 @@ class TSDBAdapter:
             ru.build_rollup(samples, self.config.granularity_ms, self.config.pre_aggregates)
         )
 
-    def _set_path(self, subset=None) -> str:
-        """The subtree of one rollup set (``subset`` None: per-series),
-        its name escaped as Spark escapes a partition value."""
-        return os.path.join(self.rollup_path, f"{ru.SET_COL}={_escape_path(ru.set_name(subset))}")
-
     def _upgrade_rollup(self) -> None:
         """Rebuild from the samples, once, a rollup in the older layout
         (``rollup/rdt=…`` plus a ``rollup_by_<labels>/`` table per
-        pre-aggregate); the old directories go after the rebuild, so an
+        pre-aggregate); the old directories go after the commit, so an
         interrupted upgrade is redone."""
         old = glob.glob(os.path.join(self.rollup_path, "rdt=*")) + glob.glob(
             os.path.join(self.path, "rollup_by_*")
         )
         if not old:
             return
-        dts = [p.split("=", 1)[1] for p in glob.glob(os.path.join(self.samples_path, "dt=*"))]
+        dts = sorted({p["dt"] for p in self.log.files["samples"].values()})
         if dts:
             target_rdts, source_dts = self._rollup_rebuild_scope(dts, [])
-            self._rebuild_rollup_for_dates(source_dts, target_rdts)
+            add, gone = self._rebuild_rollup_for_dates(source_dts, target_rdts, self._samples())
+            self.log.commit(add={"rollup": add}, remove={"rollup": gone})
         for d in old:
             shutil.rmtree(d, ignore_errors=True)
 
@@ -381,63 +268,40 @@ class TSDBAdapter:
         table. The reference hardcodes now-1000d with a TODO
         (ref: pkg/tsdb/v3iotsdb.go:250-253); here it is the true
         minimum — partition pruning makes it cheap: only the earliest
-        ``dt=`` directory is scanned."""
-        if not os.path.exists(self.samples_path):
+        ``dt`` partition is scanned."""
+        self.log.refresh()
+        days = sorted({p["dt"] for p in self.log.files["samples"].values()})
+        if not days:
             return None
-        parts = sorted(
-            d for d in os.listdir(self.samples_path) if d.startswith("dt=")
-        )
-        if not parts:
-            return None
-        df = self._samples().where(F.col("dt") == parts[0].split("=", 1)[1])
+        df = self._samples().where(F.col("dt") == days[0])
         row = df.agg(F.min("ts").alias("m")).collect()[0]
         return None if row["m"] is None else int(row["m"])
 
-    def compact_samples(
-        self, target_file_mb: int | None = None, online: bool = False
-    ) -> None:
-        """Merge small append files inside each ``dt=`` partition (the
-        maintenance twin of :meth:`compact_rollup`): every ``append``
-        adds one file set per partition, and at ingest frequency × days
-        the scan becomes listing/footer-bound. Crash-safe swap like the
-        rollup compactor. Analog of the reference's chunk consolidation
-        on UpdateItem (ref: pkg/appender/store.go:374-397).
+    def compact_samples(self, target_file_mb: int | None = None) -> None:
+        """Merge small append files inside each ``dt=`` partition: every
+        ``append`` adds one file set per partition, and at ingest
+        frequency × days the scan becomes listing/footer-bound. Analog
+        of the reference's chunk consolidation on UpdateItem (ref:
+        pkg/appender/store.go:374-397).
 
-        Without ``target_file_mb``: one shuffle keyed on the partition
-        column → one output file per date dir (right locally / for
-        small tables). With it: output fans out over
+        Without ``target_file_mb``: one output file per date. With it:
         ``ceil(on_disk_bytes / target)`` shuffle buckets spread WITHIN
-        each date (salt on series_id), so a deployment gets
-        ~target-sized files per partition instead of one giant file —
-        the size knob a 100 TB table needs (one file per day would be
-        a multi-GB single write task).
+        each date (salt on series_id) — ~target-sized files, the knob a
+        100 TB table needs. Output is sorted within each write task by
+        (name, ts), so Parquet row-group stats prune name and range
+        predicates (the analog of the reference's per-metric KV layout,
+        pkg/pquerier/querier.go:195-206).
 
-        Output is sorted WITHIN each write task by (name, ts) — a free
-        task-local sort, no extra shuffle — so Parquet row-group min/max
-        stats become selective on both columns and a name- or
-        range-filtered scan skips row groups instead of decoding them
-        (the analog of the reference's per-metric KV layout making
-        name-equality a seek, pkg/pquerier/querier.go:195-206).
-
-        ``online=True`` makes the rewrite safe under CONCURRENT
-        READERS (the default swap assumes a maintenance window,
-        SCALE.md): the compacted copy lands in a fresh ``gen-N`` dir,
-        an atomic ``_CURRENT`` pointer swap publishes it, and the
-        source generation is retained one full cycle so queries
-        planned before the swap keep reading existing files — the
-        same manifest-pointer discipline Delta/Iceberg use, minus the
-        transaction log (single-writer compaction assumed either
-        way)."""
-        if not glob.glob(os.path.join(self.samples_path, "dt=*")):
+        Safe under concurrent readers and writers: one log commit swaps
+        the compacted files for the ones read, which stay on disk until
+        the next removing commit; files appended meanwhile are kept."""
+        self.log.refresh()
+        live = dict(self.log.files["samples"])
+        if not live:
             return
-        src = self.samples_path
         df = self._samples()
         if target_file_mb:
-            total = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(src)
-                for f in fs if f.endswith(".parquet")
-            )
+            total = sum(os.path.getsize(os.path.join(self.path, f)) for f in live)
             buckets = _compact_buckets(total, target_file_mb)
             part = df.repartition(
                 int(buckets), F.col("dt"), F.pmod(F.col("series_id"), F.lit(int(buckets)))
@@ -445,33 +309,35 @@ class TSDBAdapter:
         else:
             part = df.repartition(F.col("dt"))
         part = part.sortWithinPartitions("dt", "name", "ts")
-        _publish_compacted(part, self._samples_root, src, ["dt"], online)
+        self.log.commit(add={"samples": self._stage(part, "samples", ["dt"])}, remove={"samples": live})
 
-    def compact_rollup(self, online: bool = False) -> None:
+    def compact_rollup(self) -> None:
         """Merge partial rollup rows of every rollup set (optional
-        maintenance). ``online=True`` publishes via the generation
-        pointer exactly like :meth:`compact_samples` — safe under
-        concurrent readers."""
-        if not glob.glob(os.path.join(self.rollup_path, f"{ru.SET_COL}=*", "rdt=*")):
+        maintenance), published like :meth:`compact_samples`."""
+        self.log.refresh()
+        live = dict(self.log.files["rollup"])
+        if not live:
             return
-        src = self.rollup_path
-        rows = read_table(self.spark, src, ROLLUP_TABLE_READ_SCHEMA).drop("rdt")
-        merged = ru.merge_partials(rows)
-        _publish_compacted(ru.with_rdt(merged), self._rollup_root, src, [ru.SET_COL, "rdt"], online)
+        rows = read_table(self.spark, self._table("rollup"), ROLLUP_TABLE_READ_SCHEMA).drop("rdt")
+        merged = ru.with_rdt(ru.merge_partials(rows))
+        self.log.commit(
+            add={"rollup": self._stage(merged, "rollup", [ru.SET_COL, "rdt"])}, remove={"rollup": live}
+        )
 
     # -- query -------------------------------------------------------------
 
     def querier(self) -> Querier:
         self._maybe_reload_schema()
-        rollup = self._set_path()
+        self.log.refresh()
+        rollup = self._table("rollup", ru.set_name())
         label_rollups = {
-            tuple(subset): self._set_path(subset)
+            tuple(subset): t
             for subset in self.config.pre_aggregates
-            if os.path.exists(self._set_path(subset))
+            if (t := self._table("rollup", ru.set_name(subset)))[1]
         }
-        cat = NamesCatalog.load(self.path)
+        cat = NamesCatalog.load(self.path, self.log)
         return Querier(
-            self.spark, self.samples_path, rollup=rollup if os.path.exists(rollup) else None,
+            self.spark, self._table("samples"), rollup=rollup if rollup[1] else None,
             config=self.config, label_rollups=label_rollups,
             catalog={k: sorted(v) for k, v in cat.names.items()} if cat.exists() else None,
         )
@@ -483,6 +349,7 @@ class TSDBAdapter:
 
     def count_metrics(self) -> int:
         """ref: pkg/tsdb/v3iotsdb.go:786-805 (CountMetrics)"""
+        self.log.refresh()
         return self._samples().select("series_id").distinct().count()
 
     def metric_names(self) -> list:
@@ -491,18 +358,17 @@ class TSDBAdapter:
         (ref: pkg/pquerier/querier.go:231-255 getMetricNames,
         pkg/appender/store.go:190-203). Falls back to a distinct scan
         for pre-catalog tables."""
-        cat = NamesCatalog.load(self.path)
+        cat = NamesCatalog.load(self.path, self.log)
         if cat.exists():
             return cat.metric_names()
         return [r["name"] for r in self._samples().select("name").distinct().orderBy("name").collect()]
 
-    def _samples(self) -> DataFrame:
-        """All stored samples, read with the declared schema: a table
-        never written, or whose every partition has been deleted, reads
-        as an empty frame of the same schema — a full-range delete must
-        leave a queryable (empty) table, like the reference's delete-all
+    def _samples(self, files: dict | None = None) -> DataFrame:
+        """The samples of the log's version (or of ``files``) with the
+        declared schema; none read as an empty frame, so a full-range
+        delete leaves a queryable table, like the reference's delete-all
         (ref: pkg/tsdb/delete_integration_test.go:97-127)."""
-        return read_table(self.spark, self.samples_path, SAMPLES_READ_SCHEMA)
+        return read_table(self.spark, self._table("samples", files=files), SAMPLES_READ_SCHEMA)
 
     # -- delete ------------------------------------------------------------
 
@@ -519,9 +385,9 @@ class TSDBAdapter:
 
         ref: pkg/tsdb/v3iotsdb.go:273-477 (DeleteDB) — the partial-chunk
         surgical rewrite becomes: rewrite only the affected dt
-        partitions (dynamic partition overwrite), then rebuild rollup
-        partials for those dates (analog of the aggregate-bucket
-        recompute, v3iotsdb.go:722-783).
+        partitions, rebuild the rollup partials for those dates (analog
+        of the aggregate-bucket recompute, v3iotsdb.go:722-783), and
+        swap both in with one log commit.
         """
         if delete_all:
             self.delete_db()
@@ -543,6 +409,8 @@ class TSDBAdapter:
         # did NOT match the delete condition. Pin NULL to "not deleted".
         cond = F.coalesce(cond, F.lit(False))
 
+        self.log.refresh()
+        live = self.log.files["samples"]
         df = self._samples()
         # one pass over the doomed rows: their dt partitions and the rdt
         # partitions their buckets land in (bucket-date can differ from
@@ -554,117 +422,76 @@ class TSDBAdapter:
                 F.timestamp_millis(F.col("ts") - F.col("ts") % F.lit(gran)), "yyyy-MM-dd"
             ).alias("rdt"),
         ).distinct().collect()
-        affected_dts = sorted({r["dt"] for r in pairs})
-        if not affected_dts:
+        affected = sorted({r["dt"] for r in pairs})
+        if not affected:
             return
         doomed_rdts = sorted({r["rdt"] for r in pairs})
-        kept = df.where(F.col("dt").isin(affected_dts)).where(~cond)
-        _overwrite_partitions(kept, ["dt"], self.samples_path, [(d,) for d in affected_dts])
-        if os.path.exists(self.rollup_path):
-            # dt reads back as a DATE — normalize to ISO strings for
-            # the scope set-math, re-typing at the filter boundary
-            target_rdts, source_dts = self._rollup_rebuild_scope(
-                [str(d) for d in affected_dts], doomed_rdts
+        kept = df.where(F.col("dt").isin(affected)).where(~cond)
+        # dt reads back as a DATE — ISO strings for the partition values
+        days = [str(d) for d in affected]
+        remove = {"samples": [f for f, p in live.items() if p["dt"] in days]}
+        add = {"samples": self._stage(kept, "samples", ["dt"])}
+        after = {f: p for f, p in live.items() if p["dt"] not in days}
+        samples = self._samples({**after, **add["samples"]})
+        if self.log.files["rollup"]:
+            target_rdts, source_dts = self._rollup_rebuild_scope(days, doomed_rdts)
+            add["rollup"], remove["rollup"] = self._rebuild_rollup_for_dates(
+                source_dts, target_rdts, samples
             )
-            self._rebuild_rollup_for_dates(source_dts, target_rdts)
-        self._refresh_catalog()
+        self._commit_rewrite(add, remove, samples)
 
-    def _monotonic_filter(self, df):
+    def _monotonic_filter(self, df, wm):
         """``override_old=False`` ingest mode: drop samples at-or-before
         each series' last committed timestamp — the reference's
-        OverrideOld-disabled discard (ref: pkg/appender/store.go:336-352
-        "got older sample ... - dropping", pkg/config/config.go:146-147).
-        The per-series high-water mark lives in a (series_id, max_ts)
-        parquet sidecar — O(series) rows, same class as the kinds
-        sidecar — joined against the batch (broadcast-sized vs any
-        realistic batch; AQE picks the strategy). A table that predates
-        the flag flip seeds the sidecar once from existing samples.
-        Within a batch, equal-timestamp rows still collapse via
-        ``prepare_for_write``'s dedup (a DataFrame has no arrival order
-        to make "first sample wins" meaningful; SURVEY §7.4(6)).
-
-        Crash safety: samples must become durable BEFORE the watermark
-        fold (the reverse order could drop data: watermark high, rows
-        missing), so a crash between the two leaves the sidecar
-        stale-LOW and a naive retry of the same batch would re-pass the
-        filter and duplicate committed rows. The write-ahead token pair
-        stamped around the append detects exactly that window here and
-        reseeds the sidecar from committed samples before filtering."""
-        pending = _read_token(self._maxts_pending)
-        if (
-            pending is not None
-            and pending != _read_token(self._maxts_synced)
-            and glob.glob(os.path.join(self.samples_path, "dt=*"))
-        ):
-            self._rebuild_maxts(self._samples())
-        if not os.path.exists(self.maxts_path):
-            if glob.glob(os.path.join(self.samples_path, "dt=*")):
-                self._rebuild_maxts(self._samples())
-            else:
-                return df
-        wm = self.spark.read.schema(_MAXTS_SCHEMA).parquet(self.maxts_path).withColumnRenamed(
-            "max_ts", "_wm"
-        )
+        OverrideOld-disabled discard (ref: pkg/appender/store.go:336-352,
+        pkg/config/config.go:146-147) — by joining the per-series marks
+        ``wm`` (O(series) rows). Within a batch, equal-timestamp rows
+        collapse via ``prepare_for_write``'s dedup (SURVEY §7.4(6)). The
+        marks commit with their samples, so they never lag them."""
+        if wm is None:
+            return df
         return (
-            df.join(wm, "series_id", "left")
+            df.join(wm.withColumnRenamed("max_ts", "_wm"), "series_id", "left")
             .where(F.col("_wm").isNull() | (F.col("ts") > F.col("_wm")))
             .drop("_wm")
         )
 
-    def _update_maxts(self, batch) -> None:
-        """Fold a written batch into the high-water-mark sidecar
-        (crash-safe staged swap, like the kinds rebuild)."""
-        new = batch.groupBy("series_id").agg(F.max("ts").alias("max_ts"))
-        if os.path.exists(self.maxts_path):
-            old = self.spark.read.schema(_MAXTS_SCHEMA).parquet(self.maxts_path)
-            new = (
-                old.unionByName(new)
-                .groupBy("series_id")
-                .agg(F.max("max_ts").alias("max_ts"))
-            )
-        _replace_sidecar(new, self.maxts_path)
+    def _watermarks(self) -> DataFrame | None:
+        """Per-series high-water marks: folded from the marks each
+        append adds, or seeded from the samples of a table that predates
+        the flag flip; None while the table has no samples."""
+        if self.log.files["maxts"]:
+            return _marks(read_table(self.spark, self._table("maxts"), _MAXTS_SCHEMA))
+        return _marks(self._samples()) if self.log.files["samples"] else None
 
-    def _rebuild_maxts(self, samples) -> None:
-        _replace_sidecar(
-            samples.groupBy("series_id").agg(F.max("ts").alias("max_ts")), self.maxts_path
-        )
-        # a full rebuild reflects every committed sample, so whatever
-        # append the pending token came from is now folded in
-        pending = _read_token(self._maxts_pending)
-        if pending is not None:
-            _write_token(self._maxts_synced, pending)
-
-    def _check_series_kinds(self, kinds: list | None, batch) -> None:
+    def _check_series_kinds(self, kinds: list | None, batch) -> tuple:
         """Cross-APPEND type-conflict guard: a series that was ever
         ingested as one value kind rejects samples of another kind in
         every later batch — the durable analog of the reference's
         in-memory MetricState check (ref: pkg/appender/appender.go:
         244-254, "Cannot append %v type metric to %v type metric";
         goldens: pkg/tsdb/v3iotsdb_integration_test.go:1057-1122
-        TestIngestDataFloatThenString / StringThenFloat). The state is
-        a (series_id, kind) parquet sidecar — one row per series ever
-        seen. The batch's observed ``kinds`` join it once: the matches
-        give the conflicts, the rest are the new series, appended only
-        when there are any. A batch with more series than the
-        observation lists (``kinds`` None) runs the same check as
-        distributed joins over the checkpointed ``batch``, so its
-        series never pass through the driver. Rebuilt from surviving
-        samples after deletes, so deleting a series' history frees its
-        name+labels for re-typing. Pairs this adapter verified (up to
-        ``DRIVER_SERIES_LIMIT``) skip the join while the sidecar's file
-        listing is unchanged, so a steady batch of known series runs no
-        job; any writer's change to the sidecar empties that cache."""
-        listing = self._kinds_listing()
+        TestIngestDataFloatThenString / StringThenFloat), over the
+        (series_id, kind) table. The batch's observed ``kinds`` join it
+        once: the matches give the conflicts, the rest are new series.
+        A batch with more series than the observation lists (``kinds``
+        None) runs it as distributed joins over the checkpointed
+        ``batch``. Deletes rebuild the table from surviving samples, so
+        a deleted series' name+labels may be re-typed. Pairs verified
+        (up to ``DRIVER_SERIES_LIMIT``) skip the join while the log
+        stays at their version: a steady batch runs no job.
+
+        Returns the new series' staged kinds file, and the pairs verified."""
         cached, seen = self._kinds_seen
-        if listing is None or listing != cached:
+        if cached != self.log.version:
             seen = frozenset()
         if kinds is not None:
             kinds = [k for k in kinds if k not in seen]
             if not kinds:
-                return
+                return {}, seen
         known = None
-        if listing is not None:
-            known = self.spark.read.schema(app.KINDS_SCHEMA).parquet(self.kinds_path)
+        if self.log.files["kinds"]:
+            known = read_table(self.spark, self._table("kinds"), app.KINDS_SCHEMA)
         if kinds is None:
             new = app.series_kinds(batch)
             if known is not None:
@@ -676,12 +503,11 @@ class TSDBAdapter:
                 )
                 new = new.join(known, "series_id", "left_anti")
                 if new.isEmpty():
-                    return
-            new.coalesce(1).write.mode("append").parquet(self.kinds_path)
-            return
+                    return {}, frozenset()
+            return self._stage(new.coalesce(1), "kinds"), frozenset()
         if known is not None:
-            # broadcast the batch side: the sidecar holds every series
-            # ever seen and only streams through the join
+            # broadcast the batch side: the kinds table holds every
+            # series ever seen and only streams through the join
             matched = (
                 F.broadcast(app.kinds_frame(self.spark, kinds))
                 .join(known.withColumnRenamed("kind", "old"), "series_id")
@@ -691,38 +517,24 @@ class TSDBAdapter:
             known_ids = {r["series_id"] for r in matched}
             seen |= {k for k in kinds if k[0] in known_ids}
             kinds = [k for k in kinds if k[0] not in known_ids]
+        files = {}
         if kinds:
-            app.kinds_frame(self.spark, kinds).coalesce(1).write.mode("append").parquet(
-                self.kinds_path
-            )
+            files = self._stage(app.kinds_frame(self.spark, kinds).coalesce(1), "kinds")
             seen |= set(kinds)
-            after = self._kinds_listing()
-            # the new listing vouches for the pairs only if its one new file is ours
-            listing = after if len(after - (listing or frozenset())) == 1 else None
-        self._kinds_seen = (listing, seen if len(seen) <= app.DRIVER_SERIES_LIMIT else frozenset())
+        return files, seen if len(seen) <= app.DRIVER_SERIES_LIMIT else frozenset()
 
-    def _kinds_listing(self) -> frozenset | None:
-        """The series-kind sidecar's data files, None when it is absent."""
-        try:
-            return frozenset(f for f in os.listdir(self.kinds_path) if f.startswith("part-"))
-        except OSError:
-            return None
-
-    def _refresh_catalog(self) -> None:
-        """Names may vanish when their last samples go — recompute the
-        catalog (and the series-kind sidecar) from the surviving data."""
-        NamesCatalog.rebuild(self.path, self._samples()).save()
-        try:
-            _replace_sidecar(app.series_kinds(self._samples()), self.kinds_path)
-        except Exception:
-            shutil.rmtree(self.kinds_path, ignore_errors=True)
-        # deletes can LOWER a series' high-water mark; a stale sidecar
-        # would wrongly discard re-ingested history in no-override mode
-        if os.path.exists(self.maxts_path):
-            try:
-                self._rebuild_maxts(self._samples())
-            except Exception:
-                shutil.rmtree(self.maxts_path, ignore_errors=True)
+    def _commit_rewrite(self, add: dict, remove: dict, samples: DataFrame) -> None:
+        """Commit a delete or sweep, with the names catalog, series kinds
+        and (when kept) high-water marks recomputed from the ``samples``
+        it leaves: names vanish with their last samples, marks drop."""
+        derived = {"kinds": app.series_kinds(samples)}
+        if self.log.files["maxts"]:
+            derived["maxts"] = _marks(samples)
+        for table, df in derived.items():
+            add[table] = self._stage(df.coalesce(1), table)
+            remove[table] = list(self.log.files[table])
+        names = NamesCatalog.rebuild(self.path, samples).names
+        self.log.commit(add=add, remove=remove, names=names)
 
     def _rollup_rebuild_scope(self, affected_dts: list, doomed_rdts: list) -> tuple:
         """(rdt partitions to rewrite, dt dates whose samples feed them).
@@ -730,13 +542,9 @@ class TSDBAdapter:
         When granularity divides a day, buckets nest in days and the
         scope is just the affected dates. Otherwise a bucket starting
         late on day R sources samples from up to ``ceil(gran/day)``
-        following days, so (a) every rdt an affected date contributes
-        to must be rewritten, and (b) every rewritten rdt must be
-        rebuilt from ALL its source dates — including unaffected
-        neighbors — or the dynamic overwrite would drop their
-        contributions. The rebuilt partial is then filtered to exactly
-        the target rdts so no partition is rewritten from a partial
-        source set."""
+        following days, so every rdt an affected date feeds is rewritten,
+        each from ALL its source dates (unaffected neighbors included);
+        the rebuilt partial is filtered to exactly the target rdts."""
         gran = self.config.granularity_ms
         span = 0 if DAY_MS % gran == 0 else -(-gran // DAY_MS)  # ceil
         target = set(doomed_rdts or []) | set(affected_dts)
@@ -749,22 +557,17 @@ class TSDBAdapter:
                 source.add(_date_shift(r, k))  # later days feeding bucket of r
         return sorted(target), sorted(source)
 
-    def _rebuild_rollup_for_dates(self, source_dts: list, target_rdts: list) -> None:
-        """Rewrite the ``target_rdts`` partitions of every rollup set
-        from the samples of ``source_dts``, in one aggregate and one
-        write."""
-        from datetime import date
-
+    def _rebuild_rollup_for_dates(self, source_dts: list, target_rdts: list, samples) -> tuple:
+        """The ``target_rdts`` partitions of every rollup set rebuilt
+        from the ``samples`` of ``source_dts``, in one aggregate and one
+        write: (staged files, rollup files they replace)."""
         # DATE literals for the DATE partition column, so the IN stays a
         # partition-pruning predicate (no column cast)
         src = [date.fromisoformat(s) for s in source_dts]
-        fresh = self._samples().where(F.col("dt").isin(src)).drop("dt")
+        fresh = samples.where(F.col("dt").isin(src)).drop("dt")
         partial = self._rollup_partials(fresh).where(F.col("rdt").isin(target_rdts))
-        sets = [ru.set_name(s) for s in [None, *self.config.pre_aggregates]]
-        _overwrite_partitions(
-            partial, [ru.SET_COL, "rdt"], self.rollup_path,
-            [(n, r) for n in sets for r in target_rdts],
-        )
+        gone = [f for f, p in self.log.files["rollup"].items() if p["rdt"] in target_rdts]
+        return self._stage(partial, "rollup", [ru.SET_COL, "rdt"]), gone
 
     # -- retention ---------------------------------------------------------
 
@@ -775,12 +578,11 @@ class TSDBAdapter:
         LayerRetentionTime; pkg/partmgr/partmgr.go:330,357,390-411
         retentionDays carried per partition).
 
-        Partition-level directory drops only — a metadata operation at
-        any scale, never a data rewrite. A dt partition covers
-        [dt, dt+1d) and expires when its END passes the cutoff; an rdt
-        partition holds buckets STARTING on rdt, whose coverage can
-        extend ``granularity`` past the day end, so its expiry is
-        shifted by the granularity. Returns {table: [dropped dirs]}.
+        One log commit removing expired partitions' files, never a data
+        rewrite. A dt partition covers its day in the session time zone
+        (the zone ``dt`` is written in) and expires when its END passes
+        the cutoff; an rdt partition's buckets START on rdt, so its end
+        is shifted by the granularity. Returns {table: [partitions]}.
         """
         hours = self.config.retention_hours
         if not hours:
@@ -790,37 +592,27 @@ class TSDBAdapter:
 
             now_ms = int(time.time() * 1000)
         cutoff_ms = now_ms - hours * 3_600_000
-        gran = self.config.granularity_ms
-        dropped = {"samples": self._drop_expired(self.samples_path, "dt", cutoff_ms, 0)}
-        for subset in [None, *self.config.pre_aggregates]:
-            # keyed "rollup", or "rollup_by_<labels>" for a pre-aggregate
-            table = "_".join(["rollup", *(() if subset is None else ("by", *subset))])
-            dropped.setdefault(table, []).extend(
-                self._drop_expired(self._set_path(subset), "rdt", cutoff_ms, gran)
-            )
-        if dropped["samples"]:
-            self._refresh_catalog()
-        return dropped
-
-    @staticmethod
-    def _drop_expired(path: str, key: str, cutoff_ms: int, slack_ms: int) -> list:
-        """rmtree ``key=YYYY-MM-DD`` partition dirs whose coverage end
-        (day end + slack) is at or before the cutoff."""
-        from datetime import datetime, timezone
-
-        if not os.path.exists(path):
-            return []
-        out = []
-        for entry in sorted(os.listdir(path)):
-            if not entry.startswith(f"{key}="):
-                continue
-            day = entry.split("=", 1)[1]
-            try:
-                start = datetime.strptime(day, "%Y-%m-%d").replace(tzinfo=timezone.utc)
-            except ValueError:
-                continue
-            end_ms = int(start.timestamp() * 1000) + DAY_MS + slack_ms
-            if end_ms <= cutoff_ms:
-                shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-                out.append(entry)
-        return out
+        self.log.refresh()
+        files = {t: dict(self.log.files[t]) for t in ("samples", "rollup")}
+        # a day ends at the next midnight in the session time zone
+        days = ", ".join({f"({lit(p.get('dt') or p['rdt'])})" for fs in files.values() for p in fs.values()})
+        ends = dict(self.spark.sql(
+            "SELECT d, unix_millis(CAST(date_add(CAST(d AS DATE), 1) AS TIMESTAMP)) "
+            f"FROM VALUES {days} AS t(d)").collect()) if days else {}
+        slack = {"samples": 0, "rollup": self.config.granularity_ms}
+        remove = {
+            t: {f: p for f, p in fs.items() if ends[p.get("dt") or p["rdt"]] + slack[t] <= cutoff_ms}
+            for t, fs in files.items()
+        }
+        if remove["samples"]:
+            kept = {f: p for f, p in files["samples"].items() if f not in remove["samples"]}
+            self._commit_rewrite({}, remove, self._samples(kept))
+        elif remove["rollup"]:
+            self.log.commit(remove=remove)
+        # keyed "rollup", or "rollup_by_<labels>" for a pre-aggregate
+        out = {"samples": {f"dt={p['dt']}" for p in remove["samples"].values()}}
+        for s in [None, *self.config.pre_aggregates]:
+            out["_".join(["rollup", *(() if s is None else ("by", *s))])] = {
+                f"rdt={p['rdt']}" for p in remove["rollup"].values() if p["set"] == ru.set_name(s)
+            }
+        return {t: sorted(d) for t, d in out.items()}

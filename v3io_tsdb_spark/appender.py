@@ -200,6 +200,21 @@ def observe_batch(df: DataFrame) -> tuple[DataFrame, Observation]:
     return observed, obs
 
 
+def observe_key(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach the batch's content key (:func:`content_key`) to ``df``
+    as an observation: ``bit_xor`` of a per-row ``xxhash64`` and the row
+    count — independent of row order, and no overflow under ANSI mode.
+    Observe the deduplicated batch: xor cancels equal rows."""
+    cols = ", ".join(["ts", "series_id", "name", "value", *(c for c, _ in VARIANT_COLS)])
+    obs = Observation()
+    return df.observe(obs, F.expr(f"bit_xor(xxhash64({cols})) AS x"), F.expr("count(1) AS n")), obs
+
+
+def content_key(facts: dict) -> str:
+    """The content key of a batch's observed :func:`observe_key` facts."""
+    return f"{(facts['x'] or 0) & (2**64 - 1):016x}-{facts['n']}"
+
+
 def validate_samples(facts: dict) -> None:
     """Engine-level ingest validation over a batch's observed facts
     (:func:`observe_batch`); runs no Spark job.

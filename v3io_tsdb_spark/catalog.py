@@ -4,58 +4,43 @@ The reference maintains a names directory at append time (one item per
 metric name, ref: pkg/appender/store.go:190-203) and serves
 metric-name listings from it rather than scanning data
 (ref: pkg/pquerier/querier.go:231-255 getMetricNames). The Spark
-analog is a tiny JSON sidecar in the TSDB root mapping each metric
-name to the union of its label keys:
-
-    {"names": {"cpu": ["host", "os"], "mem": ["host"]}}
+analog is part of the table log's state (``tablelog.py``): each name
+with the union of its label keys, ``{"cpu": {"host", "os"}}``.
 
 Lookups that are metadata in the reference — "what metrics exist",
 "does label X exist" (group-by validation) — stay metadata here: no
-Spark job at query time, at any corpus size. The catalog is updated
-from each appended batch's observed ``(name, label keys)`` (filled by
-the append's checkpoint job, so no job of its own) and rebuilt from the
-surviving samples after deletes/sweeps.
+Spark job at query time, at any corpus size. Each append's commit
+carries its batch's observed ``(name, label keys)`` (filled by the
+append's checkpoint job, so no job of its own); a delete or sweep
+commits the catalog rebuilt from the surviving samples.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CATALOG_FILE = "_names_catalog.json"
+from v3io_tsdb_spark.tablelog import TableLog
 
 
 class NamesCatalog:
     def __init__(self, base_path: str, names: dict | None = None):
         self.base_path = base_path
+        self._exists = names is not None
         # {name: set(label_keys)}
         self.names = {k: set(v) for k, v in (names or {}).items()}
 
-    @property
-    def file(self) -> str:
-        return os.path.join(self.base_path, CATALOG_FILE)
-
     @classmethod
-    def load(cls, base_path: str) -> "NamesCatalog":
-        f = os.path.join(base_path, CATALOG_FILE)
-        if not os.path.exists(f):
-            return cls(base_path)
-        with open(f) as fh:
-            return cls(base_path, json.load(fh).get("names", {}))
+    def load(cls, base_path: str, log: TableLog | None = None) -> "NamesCatalog":
+        """The catalog at the current version of the table's log (an
+        open ``log``, else the log at ``base_path``)."""
+        log = log or TableLog(base_path)
+        log.refresh()
+        return cls(base_path, log.names)
 
     def exists(self) -> bool:
-        return os.path.exists(self.file)
-
-    def save(self) -> None:
-        tmp = self.file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"names": {k: sorted(v) for k, v in sorted(self.names.items())}}, fh
-            )
-        os.replace(tmp, self.file)  # atomic on POSIX
+        """False for a table whose samples predate the catalog."""
+        return self._exists
 
     # -- maintenance -------------------------------------------------------
 
@@ -82,7 +67,7 @@ class NamesCatalog:
     @classmethod
     def rebuild(cls, base_path: str, samples: DataFrame) -> "NamesCatalog":
         """Recompute from surviving samples (after delete / retention)."""
-        return cls(base_path).merge_batch(samples)
+        return cls(base_path, {}).merge_batch(samples)
 
     # -- metadata lookups (no Spark jobs) ----------------------------------
 

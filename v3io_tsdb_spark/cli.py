@@ -102,16 +102,12 @@ def cmd_sweep(args):
 def cmd_compact(args):
     """Compaction maintenance (extension: the reference consolidates
     chunks inline on UpdateItem, pkg/appender/store.go:374-397; here
-    it is an explicit command). ``--online`` publishes through the
-    generation pointer so concurrent readers keep working; default
-    assumes a maintenance window."""
+    it is an explicit command). Safe under concurrent readers: each
+    compaction is one table-log commit."""
     ad = _adapter(args)
-    ad.compact_samples(
-        target_file_mb=args.target_file_mb or None, online=args.online
-    )
-    ad.compact_rollup(online=args.online)
-    mode = "online (generation pointer)" if args.online else "offline (swap)"
-    print(f"compacted samples + rollup [{mode}]")
+    ad.compact_samples(target_file_mb=args.target_file_mb or None)
+    ad.compact_rollup()
+    print("compacted samples + rollup")
 
 
 def cmd_add(args):
@@ -264,10 +260,10 @@ def cmd_check(args):
             f" ts=[{r['min_ts']}..{r['max_ts']}] labels={{{lbl}}}"
         )
     if args.files:
-        import glob
         import os
 
-        for f in sorted(glob.glob(os.path.join(a.samples_path, "dt=*", "*.parquet"))):
+        a.log.refresh()
+        for f in sorted(os.path.join(a.path, f) for f in a.log.files["samples"]):
             meta = pq.ParquetFile(f)
             print(
                 f"  file {os.path.relpath(f, a.samples_path)}:"
@@ -334,8 +330,6 @@ def build_parser() -> argparse.ArgumentParser:
 
     cp = sub.add_parser("compact", help="compact samples + rollup files")
     common(cp)
-    cp.add_argument("--online", action="store_true",
-                    help="concurrent-reader-safe generation-pointer publish")
     cp.add_argument("--target-file-mb", type=int, default=0,
                     help="approximate output file size per partition")
     cp.set_defaults(fn=cmd_compact)

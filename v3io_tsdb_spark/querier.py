@@ -104,7 +104,9 @@ class SelectParams:
 
 
 class Querier:
-    """Query facade over a samples DataFrame/path and optional rollup.
+    """Query facade over a samples table and optional rollup sets, each a
+    DataFrame or the ``(base directory, files)`` of a table version
+    (``schema.read_table``).
 
     ref: pkg/pquerier/querier.go:40-58 (NewV3ioQuerier).
     """
@@ -122,7 +124,7 @@ class Querier:
         self.config = config or TSDBConfig()
         self._samples = samples
         self._rollup = rollup
-        # cross-label pre-aggregate sets: {(label, ...): DataFrame|path}
+        # cross-label pre-aggregate sets: {(label, ...): table}
         # (ref: pkg/appender/appender.go:220-231, select.go:261-283)
         self._label_rollups = {
             tuple(sorted(k)): v for k, v in (label_rollups or {}).items()
@@ -136,7 +138,7 @@ class Querier:
 
     def samples_df(self) -> DataFrame:
         df = self._samples
-        if isinstance(df, str):
+        if not isinstance(df, DataFrame):
             return schema.read_table(self.spark, df, schema.SAMPLES_READ_SCHEMA)
         if "series_id" not in df.columns:
             df = df.withColumn("series_id", series_id_col())
@@ -148,10 +150,10 @@ class Querier:
 
     def rollup_df(self, subset=None) -> DataFrame | None:
         """The per-series rollup set, or the pre-aggregate set of the
-        labels ``subset``: a DataFrame, or the path of the set's subtree
-        of the rollup table (one ``ROLLUP_SCHEMA`` for every set)."""
+        labels ``subset``, opened with the one ``ROLLUP_SCHEMA`` of
+        every set."""
         v = self._rollup if subset is None else self._label_rollups.get(tuple(sorted(subset)))
-        if isinstance(v, str):
+        if v is not None and not isinstance(v, DataFrame):
             return schema.read_table(self.spark, v, schema.ROLLUP_READ_SCHEMA)
         return v
 

@@ -56,7 +56,8 @@ def combine_sql(cols=ROLLUP_AGG_COLS) -> list[str]:
 
 
 def with_rdt(partial: DataFrame) -> DataFrame:
-    """Add the ``rdt`` partition column: the UTC date of the bucket start."""
+    """Add the ``rdt`` partition column: the date of the bucket start in
+    the session time zone (like ``dt``, see ``appender.prepare_for_write``)."""
     return partial.withColumn(
         "rdt", F.date_format(F.timestamp_millis(F.col("bucket")), "yyyy-MM-dd")
     )

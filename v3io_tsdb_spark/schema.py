@@ -16,8 +16,6 @@ pkg/partmgr/partmgr.go:228-264), so opening a table runs no Spark job.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -80,11 +78,14 @@ ROLLUP_TABLE_READ_SCHEMA = T.StructType(
 )
 
 
-def read_table(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Open an engine table with its declared schema — no footer read,
-    so no Spark job. A missing directory reads as an empty frame of the
-    same schema (an empty TSDB answers queries with empty results,
+def read_table(spark: SparkSession, table: tuple, schema) -> DataFrame:
+    """Open the ``(base directory, files)`` of one engine table version
+    with its declared schema — no footer read, so no Spark job. The
+    files are read with ``basePath``, so their directories still give
+    the partition columns; no files read as an empty frame of the same
+    schema (an empty TSDB answers queries with empty results,
     ref: pkg/pquerier/querier.go Select over empty partitions)."""
-    if not os.path.exists(path):
+    base, files = table
+    if not files:
         return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(schema).option("basePath", base).parquet(*files)

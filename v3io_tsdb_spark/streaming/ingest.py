@@ -12,7 +12,8 @@ the Structured Streaming shape from SURVEY §2.8:
   monotonicity drop / OverrideOld
   (ref: pkg/appender/store.go:336-352, pkg/config/config.go:146-147);
 - each micro-batch runs the same batch append (samples + rollup
-  partials), so batch and streaming ingest share one code path;
+  partials, one table-log commit), so batch and streaming ingest share
+  one code path;
 - recovery: Spark checkpointing replaces the ``_maxtime`` re-read
   state machine (ref: pkg/appender/store.go:137-230);
 - ``WaitForCompletion`` (ref: pkg/appender/appender.go:302-334) maps
@@ -111,8 +112,16 @@ def start_stream_ingest(
 
     ``enforce_monotonic`` (default: ``not config.override_old``)
     inserts the stateful per-series monotonicity filter — the
-    reference's OverrideOld=false behavior; the default (idempotent
-    last-write-wins dedup) matches OverrideOld=true.
+    reference's OverrideOld=false behavior; without it, duplicates are
+    dropped within the watermark and, within one micro-batch, on
+    (series, ts) — last-write-wins, like OverrideOld=true.
+
+    Exactly-once output: ``foreachBatch`` is at-least-once, so a stream
+    restarted after a sink's append but before its offset commit replays
+    that micro-batch. The replay has the same content, hence the same
+    content key, and the table log commits an append whose key is
+    already committed as a no-op: each sample lands once on every
+    route. A micro-batch that failed before its commit left nothing.
     """
     wm = watermark or f"{adapter.config.late_arrival_ms // 1000} seconds"
     prepared = prepare_stream(stream_df, wm)
