@@ -181,6 +181,56 @@ def test_two_adapters_appending_from_two_threads_lose_no_batch(spark, tmp_path):
     assert ad.log.version == 6
 
 
+@pytest.mark.parametrize("sweep", [False, True], ids=["delete", "sweep"])
+def test_batch_deleted_then_appended_again_lands(spark, tmp_path, sweep):
+    """A delete or retention sweep forgets the content keys: a batch
+    appended, deleted and appended again counts once on every route,
+    and a further retry of it is still a no-op."""
+    ad = _mk(spark, tmp_path, retention_hours=24 if sweep else 0)
+    late = [dict(r, ts=r["ts"] + DAY) for r in _batch(0)]  # 2024-01-02
+    ad.append(_batch(0))
+    ad.append(late)
+    if sweep:
+        # past the end of dt and rdt 2024-01-01 (rdt's ends a granularity later)
+        ad.retention_sweep(now_ms=T0 + 2 * DAY + HOUR)
+        assert {p["dt"] for p in ad.log.files["samples"].values()} == {"2024-01-02"}
+        assert {p["rdt"] for p in ad.log.files["rollup"].values()} == {"2024-01-02"}
+    else:
+        ad.delete(from_time=T0, to_time=T0 + DAY - 1)
+    assert _routes(ad)[0] == (0, 0)
+    ad.append(_batch(0))
+    version = ad.log.version
+    ad.append(_batch(0))
+    assert ad.log.version == version
+    (raw, _), (rolled, _), by_dc = _routes(ad)
+    assert raw == rolled == sum(n for n, _ in by_dc.values()) == 120
+    assert _routes(ad) == _numpy(_batch(0))
+    assert _routes(TSDBAdapter(spark, ad.path)) == _numpy(_batch(0))
+
+
+def test_compaction_folds_the_marks(spark, tmp_path):
+    """With ``override_old=False`` every append adds one high-water-mark
+    file; a samples compaction folds them into one, and the monotonic
+    filter still drops samples at or before each series' mark."""
+    ad = _mk(spark, tmp_path, override_old=False)
+    for k in range(4):
+        ad.append(_batch(k))
+    assert len(ad.log.files["maxts"]) == 4
+    ad.compact_samples()
+    assert len(ad.log.files["maxts"]) == 1
+    rows = [r for k in range(4) for r in _batch(k)]
+    older = [dict(r, value=r["value"] + 1) for r in _batch(3)]  # at the marks
+    ad.append(older)
+    assert _routes(ad) == _numpy(rows)
+    ad.append(_batch(5))
+    assert len(ad.log.files["maxts"]) == 3  # one more per append
+    reopened = TSDBAdapter(spark, ad.path)
+    reopened.compact_samples()
+    assert len(reopened.log.files["maxts"]) == 1
+    reopened.append(older + [dict(r, value=0.0) for r in _batch(4)])
+    assert _routes(reopened) == _numpy(rows + _batch(5))
+
+
 def test_racing_commits_lose_no_entry(tmp_path):
     """More committing threads than cores, each with its own log on one
     path: every commit lands at its own version, none is lost."""
@@ -262,21 +312,23 @@ def test_opening_reads_a_bounded_number_of_entries(tmp_path, monkeypatch):
 
 def test_generation_layout_bootstrapped_once(spark, tmp_path):
     """A table compacted into ``gen-N`` generations by an older layout
-    (flat leftovers, a retained source generation, the newest complete
-    generation current) opens at its newest generation, once."""
+    (flat leftovers, a retained source generation, a newer complete one
+    its ``_CURRENT`` pointer never named) opens at the generation the
+    pointer names, once."""
     ad = _mk(spark, tmp_path)
     ad.append(_batch(0))
     root = ad.samples_path
     shutil.rmtree(os.path.join(ad.path, "_log"))
-    for gen in ("gen-000001", "gen-000002"):
+    for gen in ("gen-000001", "gen-000002", "gen-000003"):
         shutil.copytree(os.path.join(root, "dt=2024-01-01"),
                         os.path.join(root, gen, "dt=2024-01-01"))
         open(os.path.join(root, gen, "_SUCCESS"), "w").close()
     with open(os.path.join(root, "_CURRENT"), "w") as f:
         f.write("gen-000002")
-    # the retained source generation holds one more file
-    shutil.copytree(os.path.join(root, "dt=2024-01-01"),
-                    os.path.join(root, "gen-000001", "dt=2024-01-02"))
+    # the retained source generation and the unnamed one hold one more file
+    for gen in ("gen-000001", "gen-000003"):
+        shutil.copytree(os.path.join(root, "dt=2024-01-01"),
+                        os.path.join(root, gen, "dt=2024-01-02"))
 
     reopened = TSDBAdapter(spark, ad.path)
     assert reopened.samples_path == os.path.join(root, "gen-000002")

@@ -294,7 +294,8 @@ class TSDBAdapter:
 
         Safe under concurrent readers and writers: one log commit swaps
         the compacted files for the ones read, which stay on disk until
-        the next removing commit; files appended meanwhile are kept."""
+        the next removing commit; files appended meanwhile are kept. It
+        folds the high-water marks into one file."""
         self.log.refresh()
         live = dict(self.log.files["samples"])
         if not live:
@@ -309,7 +310,12 @@ class TSDBAdapter:
         else:
             part = df.repartition(F.col("dt"))
         part = part.sortWithinPartitions("dt", "name", "ts")
-        self.log.commit(add={"samples": self._stage(part, "samples", ["dt"])}, remove={"samples": live})
+        add, remove = {}, {"samples": live}
+        if len(self.log.files["maxts"]) > 1:  # fold the marks each append adds
+            add["maxts"] = self._stage(self._watermarks().coalesce(1), "maxts")
+            remove["maxts"] = dict(self.log.files["maxts"])
+        add["samples"] = self._stage(part, "samples", ["dt"])
+        self.log.commit(add=add, remove=remove)
 
     def compact_rollup(self) -> None:
         """Merge partial rollup rows of every rollup set (optional
@@ -526,7 +532,8 @@ class TSDBAdapter:
     def _commit_rewrite(self, add: dict, remove: dict, samples: DataFrame) -> None:
         """Commit a delete or sweep, with the names catalog, series kinds
         and (when kept) high-water marks recomputed from the ``samples``
-        it leaves: names vanish with their last samples, marks drop."""
+        it leaves: names vanish with their last samples, marks drop, and
+        content keys are forgotten, so a deleted batch can land again."""
         derived = {"kinds": app.series_kinds(samples)}
         if self.log.files["maxts"]:
             derived["maxts"] = _marks(samples)
@@ -534,7 +541,7 @@ class TSDBAdapter:
             add[table] = self._stage(df.coalesce(1), table)
             remove[table] = list(self.log.files[table])
         names = NamesCatalog.rebuild(self.path, samples).names
-        self.log.commit(add=add, remove=remove, names=names)
+        self.log.commit(add=add, remove=remove, names=names, forget=True)
 
     def _rollup_rebuild_scope(self, affected_dts: list, doomed_rdts: list) -> tuple:
         """(rdt partitions to rewrite, dt dates whose samples feed them).

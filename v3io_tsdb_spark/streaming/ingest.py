@@ -121,7 +121,9 @@ def start_stream_ingest(
     that micro-batch. The replay has the same content, hence the same
     content key, and the table log commits an append whose key is
     already committed as a no-op: each sample lands once on every
-    route. A micro-batch that failed before its commit left nothing.
+    route (unless a delete or retention sweep lands in between: it
+    forgets the keys). A micro-batch that failed before its commit left
+    nothing.
     """
     wm = watermark or f"{adapter.config.late_arrival_ms // 1000} seconds"
     prepared = prepare_stream(stream_df, wm)

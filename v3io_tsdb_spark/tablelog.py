@@ -14,7 +14,8 @@ and aggregates in one conditional ``UpdateItem``
   its version's name, which fails if that exists; the loser re-reads
   and retries. An append only adds files, so it never conflicts; a
   rewrite whose inputs another commit removed raises.
-- An append whose content key is committed is a no-op.
+- An append whose content key is committed is a no-op; a delete or
+  sweep, which removes samples, forgets the keys.
 - Every :data:`SNAPSHOT_EVERY` versions an entry carries the full state,
   so opening a table reads a bounded number of entries.
 - Files a commit removes are deleted from disk when the next removing
@@ -50,18 +51,13 @@ def partition_values(rel: str) -> dict:
 
 
 def _generation(root: str) -> str | None:
-    """The current ``gen-N`` directory of a table an older layout
-    compacted: the one its pointer file (a line of text in ``root``)
-    names, else the newest complete one; None for a flat table."""
-    listing = os.listdir(root) if os.path.isdir(root) else []
-    gens = sorted(g for g in listing if g.startswith("gen-") and os.path.exists(
-        os.path.join(root, g, "_SUCCESS")))
-    for f in listing:
-        if not f.endswith(".tmp") and os.path.isfile(os.path.join(root, f)):
-            with open(os.path.join(root, f), "rb") as fh:
-                if (named := fh.read(64).decode(errors="ignore").strip()) in gens:
-                    return named
-    return gens[-1] if gens else None
+    """The ``gen-N`` directory an older layout's ``_CURRENT`` pointer
+    names in a table it compacted; None for a flat table."""
+    try:
+        with open(os.path.join(root, "_CURRENT")) as fh:
+            return fh.read().strip()
+    except OSError:
+        return None
 
 
 def _bootstrap(path: str) -> dict:
@@ -149,15 +145,18 @@ class TableLog:
         for k, v in e.get("merge", {}).items():
             self.names = self.names or {}
             self.names.setdefault(k, set()).update(v)
+        if e.get("forget"):
+            self.keys = set()
         if e.get("key"):
             self.keys.add(e["key"])
         self.version = e["version"]
 
-    def commit(self, add=None, remove=None, names=None, merge=None, key=None) -> bool:
+    def commit(self, add=None, remove=None, names=None, merge=None, key=None, forget=False) -> bool:
         """Publish one change as the next version: ``add`` and ``remove``
         are ``{table: files}``; ``names`` replaces the catalog (names
         that commits landing first add are kept), ``merge`` adds to it.
-        False, and nothing published, when ``key`` is committed."""
+        False, and nothing published, when ``key`` is committed;
+        ``forget`` drops the committed keys (a rewrite deleting samples)."""
         add = {t: fs for t, fs in (add or {}).items() if fs}
         remove = {t: sorted(fs) for t, fs in (remove or {}).items() if fs}
         while True:
@@ -169,7 +168,7 @@ class TableLog:
                 return False
             if any(f not in self.files[t] for t, fs in remove.items() for f in fs):
                 raise CommitConflict(f"{self.path}: files this rewrite read were removed")
-            e = {"version": self.version + 1, "add": add, "remove": remove, "key": key}
+            e = {"version": self.version + 1, "add": add, "remove": remove, "key": key, "forget": forget}
             if names is not None:
                 e["names"] = {k: sorted(v) for k, v in names.items()}
             if merge:
